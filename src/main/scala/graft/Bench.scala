@@ -688,7 +688,7 @@ object Bench {
           // formula and AQE's parallelismFirst coalescing scale task counts
           // with the level's cores (as a real N vs 4N cluster does).
           // Per-task fixed cost was probed and RULED OUT as the carrier
-          // (1-6 ms/task, TaskCostProbe); the inflation lives in the
+          // (1-6 ms/task); the inflation lives in the
           // hash-agg/shuffle minority of the CPU and tracks the host
           // window — see BENCH/BASELINE.md
           s""""n_tasks_local1":${r1.nTasks},"n_tasks_local4":${r4.nTasks},""" +
@@ -776,8 +776,8 @@ object Bench {
       // task-seconds at 4 threads vs 1 for identical work) is reported but
       // deliberately NOT a retry trigger: it concentrates in the hash-agg/
       // shuffle minority of the CPU (the compute-dense stages inflate 1.0x),
-      // per-task fixed cost is ruled out as its carrier (TaskCostProbe,
-      // 1-6 ms/task), and its magnitude tracks the host window — re-rolling
+      // per-task fixed cost is ruled out as its carrier (1-6 ms/task, see
+      // BENCH/BASELINE.md), and its magnitude tracks the host window — re-rolling
       // a zero-steal red burned 6 retries at floor 1.46 in one measured
       // window without moving it, while the bigger-corpus upgrade both
       // amortizes the flat per-stage share and samples a later window.

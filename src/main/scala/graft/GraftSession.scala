@@ -31,17 +31,9 @@ object GraftSession {
       // and ~half the local[32] wall). At cluster scale the floor is inert
       // (bytes/128 MB ≫ 4×cores) and `openCostInBytes` (4 MB) still keeps
       // small stage tables from over-splitting.
-      .config("spark.sql.files.minPartitionNum",
-        (sys.env.getOrElse("SPARK_GRAFT_LEAF_MULT", "4").toInt * cpus).toString)
+      .config("spark.sql.files.minPartitionNum", (4 * cpus).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // experiment passthrough: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match { // tolerate empty/blank entries ("", "k=v;")
-        case Array(k, v) if k.trim.nonEmpty => b.config(k.trim, v)
-        case _ => ()
-      }
-    })
     // tmpfs shuffle dir: opt-out via SPARK_GRAFT_TMPFS=0; only when /dev/shm
     // has real headroom (shuffle spill on RAM-backed tmpfs can starve a
     // general host); per-process suffix avoids cross-session collisions

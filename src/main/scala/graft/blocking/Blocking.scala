@@ -234,15 +234,21 @@ object Blocking {
    * OLD records whose key set differs from the prior run — the exact seed
    * set the incremental pipeline must re-score.
    *
-   * `stage(name, df)` must write `df` durably and return the read-back
-   * frame — it is applied to the tables the NEXT fold reads as prior state
-   * (raw_counts, sizes2, and the keys chain's keys_delta/keys_tombstones
-   * — see the chain note below). Per-fold scratch that feeds several actions
-   * but no future fold (crossed blocks, changed ids) is materialized with an
-   * eager localCheckpoint instead: a lazy plan would re-run the whole merge
-   * per consuming action (measured 2.3x the legacy recompute), while a
-   * durable write would pay a driver write+read barrier pair per table —
-   * at batch-fold scale those barriers, not work, dominate the wall.
+   * `stage(name, df)` is applied to the tables the NEXT fold reads as prior
+   * state (raw_counts, sizes2, and the keys chain's keys_delta/
+   * keys_tombstones — see the chain note below). It must return a
+   * materialized frame equal to `df`, which this merge reads on at once;
+   * the durable write of `name` may be deferred. The pipeline's stager
+   * returns an eager localCheckpoint and submits the parquet write to a
+   * writer thread, so a staged file is durable only once the caller has
+   * joined its pending writes — which it must do before any manifest names
+   * the file and before the fold returns. Per-fold scratch that feeds
+   * several actions but no future fold (crossed blocks, changed ids) is
+   * materialized with an eager localCheckpoint only: a lazy plan would
+   * re-run the whole merge per consuming action (measured 2.3x a full key
+   * recompute), while a durable write would pay a driver write+read
+   * barrier pair per table — at batch-fold scale those barriers, not work,
+   * dominate the wall.
    */
   def mergeBlockKeys(priorKeys: DataFrame, priorRawCounts: DataFrame,
                      priorSizes2: DataFrame, newRecords: DataFrame,

@@ -19,6 +19,25 @@ import graft.functions.GraftFunctions._
  */
 object Dedup {
 
+  /** The hot-key cap every fuzzy family applies before its self-join:
+    * rows of `keyed` whose `key` holds more than `cap` rows are dropped.
+    * Returns the cool rows and a one-row stats frame (n_buckets /
+    * n_bucket_rows / max_bucket / hot_buckets / dropped_rows), so a drop
+    * is metered, never silent — the same discipline as `Blocking.blockKeys`. */
+  private def dropHot(keyed: DataFrame, key: String, cap: Int): (DataFrame, DataFrame) = {
+    val sizes = keyed.groupBy(key).agg(count(lit(1)).as("n"))
+    val hot = sizes.filter(col("n") > cap)
+    val stats = sizes.agg(
+      count(lit(1)).as("n_buckets"),
+      coalesce(sum("n"), lit(0L)).as("n_bucket_rows"),
+      coalesce(max("n"), lit(0L)).as("max_bucket"),
+      coalesce(sum(when(col("n") > cap, lit(1L)).otherwise(lit(0L))), lit(0L))
+        .as("hot_buckets"),
+      coalesce(sum(when(col("n") > cap, col("n")).otherwise(lit(0L))), lit(0L))
+        .as("dropped_rows"))
+    (keyed.join(broadcast(hot), Seq(key), "left_anti"), stats)
+  }
+
   /**
    * Exact dedup by content hash: one surviving row per md5(text), the
    * survivor being the smallest id (deterministic). Single hash-shuffle,
@@ -72,18 +91,8 @@ object Dedup {
     val bandKeys = (0 until bands).map { b =>
       xxhash64(lit(b + 1), xxhash64(slice(col("sig"), b * bandSize + 1, bandSize)))
     }
-    val keyed = feats.select(col("id"), explode(array(bandKeys: _*)).as("bucket"))
-    val sizes = keyed.groupBy("bucket").agg(count(lit(1)).as("n"))
-    val hot = sizes.filter(col("n") > maxBucket)
-    val stats = sizes.agg(
-      count(lit(1)).as("n_buckets"),
-      coalesce(sum("n"), lit(0L)).as("n_bucket_rows"),
-      coalesce(max("n"), lit(0L)).as("max_bucket"),
-      coalesce(sum(when(col("n") > maxBucket, lit(1L)).otherwise(lit(0L))), lit(0L))
-        .as("hot_buckets"),
-      coalesce(sum(when(col("n") > maxBucket, col("n")).otherwise(lit(0L))), lit(0L))
-        .as("dropped_rows"))
-    val cool = keyed.join(broadcast(hot), Seq("bucket"), "left_anti")
+    val (cool, stats) = dropHot(
+      feats.select(col("id"), explode(array(bandKeys: _*)).as("bucket")), "bucket", maxBucket)
     val a = cool.select(col("bucket"), col("id").as("id_a"))
     val b = cool.select(col("bucket"), col("id").as("id_b"))
     val cand = a.join(b, "bucket")
@@ -135,17 +144,7 @@ object Dedup {
         xxhash64(lit(b + 1),
           shiftright(col("fp"), b * 8).bitwiseAND(lit(0xffL)))): _*))
         .as("bucket"))
-    val sizes = banded.groupBy("bucket").agg(count(lit(1)).as("n"))
-    val hot = sizes.filter(col("n") > maxBucket)
-    val stats = sizes.agg(
-      count(lit(1)).as("n_buckets"),
-      coalesce(sum("n"), lit(0L)).as("n_bucket_rows"),
-      coalesce(max("n"), lit(0L)).as("max_bucket"),
-      coalesce(sum(when(col("n") > maxBucket, lit(1L)).otherwise(lit(0L))), lit(0L))
-        .as("hot_buckets"),
-      coalesce(sum(when(col("n") > maxBucket, col("n")).otherwise(lit(0L))), lit(0L))
-        .as("dropped_rows"))
-    val cool = banded.join(broadcast(hot), Seq("bucket"), "left_anti")
+    val (cool, stats) = dropHot(banded, "bucket", maxBucket)
     val a = cool.select(col("bucket"), col("id").as("id_a"), col("fp").as("fp_a"))
     val b = cool.select(col("bucket"), col("id").as("id_b"), col("fp").as("fp_b"))
     val pairs = a.join(b, "bucket")
@@ -198,17 +197,7 @@ object Dedup {
       .localCheckpoint()
     val buckets = prep.select(col("id"), col("grams"),
       explode(array(col("lenb"), col("lenb") + 1)).as("bucket"))
-    val sizes = buckets.groupBy("bucket").agg(count(lit(1)).as("n"))
-    val hot = sizes.filter(col("n") > maxBucket)
-    val stats = sizes.agg(
-      count(lit(1)).as("n_buckets"),
-      coalesce(sum("n"), lit(0L)).as("n_bucket_rows"),
-      coalesce(max("n"), lit(0L)).as("max_bucket"),
-      coalesce(sum(when(col("n") > maxBucket, lit(1L)).otherwise(lit(0L))), lit(0L))
-        .as("hot_buckets"),
-      coalesce(sum(when(col("n") > maxBucket, col("n")).otherwise(lit(0L))), lit(0L))
-        .as("dropped_rows"))
-    val cool = buckets.join(broadcast(hot), Seq("bucket"), "left_anti")
+    val (cool, stats) = dropHot(buckets, "bucket", maxBucket)
     val a = cool.select(col("bucket"), col("id").as("id_a"), col("grams").as("g_a"))
     val b = cool.select(col("bucket"), col("id").as("id_b"), col("grams").as("g_b"))
     val pairs = a.join(b, "bucket")
@@ -246,7 +235,8 @@ object Dedup {
       maxDocsPerWindow)._1
 
   /** [[windowFingerprint]] plus a one-row stats frame — boilerplate-window
-    * drops (site chrome shared by >cap docs) are metered, never silent. */
+    * drops (site chrome shared by >cap docs) are metered, never silent; a
+    * window fingerprint is a bucket in the shared stats columns. */
   def windowFingerprintWithStats(df: DataFrame, textCol: String, idCol: String,
                         windowTokens: Int = 15,
                         maxDocsPerWindow: Int = 100000): (DataFrame, DataFrame) = {
@@ -263,17 +253,7 @@ object Dedup {
     // the md5-per-window scan per plan branch (spills via MEMORY_AND_DISK)
     val fps = df.select(col(idCol).as("id"), explode(fpsArr).as("fp"))
       .localCheckpoint()
-    val sizes = fps.groupBy("fp").agg(count(lit(1)).as("n"))
-    val hot = sizes.filter(col("n") > maxDocsPerWindow)
-    val stats = sizes.agg(
-      count(lit(1)).as("n_windows"),
-      coalesce(sum("n"), lit(0L)).as("n_window_rows"),
-      coalesce(max("n"), lit(0L)).as("max_window_docs"),
-      coalesce(sum(when(col("n") > maxDocsPerWindow, lit(1L)).otherwise(lit(0L))), lit(0L))
-        .as("hot_windows"),
-      coalesce(sum(when(col("n") > maxDocsPerWindow, col("n")).otherwise(lit(0L))), lit(0L))
-        .as("dropped_rows"))
-    val cool = fps.join(broadcast(hot), Seq("fp"), "left_anti")
+    val (cool, stats) = dropHot(fps, "fp", maxDocsPerWindow)
     val a = cool.select(col("fp"), col("id").as("id_a"))
     val b = cool.select(col("fp"), col("id").as("id_b"))
     val pairs = a.join(b, "fp")

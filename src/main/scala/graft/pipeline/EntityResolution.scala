@@ -69,7 +69,15 @@ object EntityResolution {
       // per-task CPU inflates with task concurrency, while parquet scan/write
       // scales ~1.0 — and a durable columnar checkpoint is the design that
       // survives at 100 TB anyway (maps to an Iceberg table per stage).
-      workDir: Option[String] = None)
+      workDir: Option[String] = None) {
+    // the funnel's prefilters replace jw and lev by their upper bound 1 and
+    // token-jaccard by the size-ratio bound; with a negative weight a larger
+    // term LOWERS the score, so the bound no longer bounds and the
+    // prefilter would drop true matches
+    require(wJaroWinkler >= 0 && wLevenshtein >= 0 && wTokenJaccard >= 0,
+      s"scoring weights must be >= 0, got wJaroWinkler=$wJaroWinkler " +
+        s"wLevenshtein=$wLevenshtein wTokenJaccard=$wTokenJaccard")
+  }
 
   /** The semantic parameters whose equality the incremental exactness proof
     * depends on (blocking keys, SN windows, funnel weights/threshold, token
@@ -335,15 +343,17 @@ object EntityResolution {
    *
    * `priorWorkDir` is the `workDir` of the previous resolve /
    * resolveIncremental run, holding its three stage tables
-   * (records/edges/components — Iceberg tables on a real deployment).
+   * (records/edges/components — Iceberg tables on a real deployment), its
+   * block count tables (raw_counts, sizes2) and its manifests (records.list,
+   * keys.list + tombstones.list, config.sig). A dir missing any of them is
+   * refused: run a full re-resolve.
    *
    * What is recomputed vs reused, and why the result is EXACTLY equal to a
    * full re-resolve of old ∪ new (spec-gated, IncrementalSpec):
-   *   - block KEYS are recomputed over all records — a column-pruned scan of
-   *     the compact persisted features plus one aggregate; required for
-   *     exactness because hot-block re-keying depends on global block sizes.
-   *     (At 10¹² the (key, count) aggregate is itself a durable table
-   *     maintained additively per batch; the scan disappears.)
+   *   - block KEYS are folded from the prior keys chain and block count
+   *     tables ([[Blocking.mergeBlockKeys]]): hot-block re-keying depends on
+   *     global block sizes, and the count tables carry them, so only the
+   *     batch and the blocks it pushes across a size class are touched.
    *   - candidate PAIRS are generated only where ≥1 side is new
    *     ([[Blocking.candidatePairsInvolving]]); the sorted-neighborhood pass
    *     runs only over buckets containing a new record. Old×old candidates
@@ -361,27 +371,26 @@ object EntityResolution {
     val spark = newPages.sparkSession
     val work = cfg.workDir.getOrElse(freshWorkDir())
     require(work != priorWorkDir, "incremental output workDir must differ from prior state dir")
-    val tInc0 = System.nanoTime()
-    def ph(m: String): Unit =
-      if (sys.env.get("SPARK_GRAFT_PHASES").contains("1"))
-        System.err.println(f"[inc-phase] +${(System.nanoTime() - tInc0) / 1e9}%.1fs $m")
-    // determinism bisection: count every intermediate frame (extra actions —
-    // diagnosis only, off by default)
-    val foldCounts = sys.env.get("SPARK_GRAFT_FOLD_COUNTS").contains("1")
-    def fc(name: String, df: => DataFrame): Unit =
-      if (foldCounts) System.err.println(s"[fold-count] $name=${df.count()}")
+    // every resolve and fold writes these; a dir lacking one was written by
+    // an older build or by a fold that failed before its manifests landed
+    val priorMissing = Seq("config.sig", "records.list", "keys.list",
+      "raw_counts.parquet/_SUCCESS", "sizes2.parquet/_SUCCESS")
+      .filterNot(f => new java.io.File(priorWorkDir, f).exists())
+    require(priorMissing.isEmpty,
+      s"prior state dir $priorWorkDir lacks ${priorMissing.mkString(", ")} " +
+        "(not written by a current resolve or fold); run a full re-resolve instead")
 
     // the incremental ≡ full-re-resolve proof assumes the prior run's
     // semantic config equals this one's (SN drift / key-diff arguments are
     // config-relative) — refuse a mismatched fold instead of silently
     // diverging from a full re-resolve
     val priorSig = readConfigSig(priorWorkDir)
-    require(priorSig.forall(_ == configSig(cfg)),
-      s"config changed since prior state was written:\n  prior: ${priorSig.get}" +
+    require(priorSig == configSig(cfg),
+      s"config changed since prior state was written:\n  prior: $priorSig" +
         s"\n  now:   ${configSig(cfg)}\nincremental ≡ full only holds under an " +
         "identical config; run a full re-resolve instead")
 
-    val oldPaths = readRecordsList(priorWorkDir)
+    val oldPaths = readManifest(priorWorkDir, "records.list")
     // the manifest chains across all prior state dirs (immutable files are
     // never copied forward) — fail with a clear chain-broken error instead
     // of a deep parquet path-not-found if an earlier dir was deleted or
@@ -404,7 +413,6 @@ object EntityResolution {
       .select(oldRecords.columns.map(col): _*)
       .write.mode("overwrite").parquet(newRecPath)
     val newRecords = spark.read.parquet(newRecPath)
-    ph("batch normalized")
     // Batch-vs-corpus asymmetry is the fold's whole point: every frame
     // derived from the batch (new ids, seed ids, touched buckets, batch
     // keys, batch-involving pairs) is orders of magnitude smaller than the
@@ -433,8 +441,6 @@ object EntityResolution {
       s"$reCrawled record(s) in the batch already exist in prior state " +
         "(re-crawl/update); dedupe the batch or run a compacting re-resolve " +
         "— blind append would duplicate RecordId rows")
-    writeRecordsList(work, oldPaths :+ newRecPath)
-    writeConfigSig(work, cfg)
     val records = spark.read.parquet((oldPaths :+ newRecPath): _*)
     val newIds = newRecords.select(col("id"))
     if (auditIds) {
@@ -461,9 +467,7 @@ object EntityResolution {
     //      dropped and all their candidates re-derived + re-scored (scoring
     //      is a pure content function, so surviving edges come back
     //      identical). In the common case no block crosses a class and the
-    //      set is empty. A prior state dir from a pre-counts build falls
-    //      back to the legacy recompute-and-diff path (one fold later the
-    //      chain is upgraded, since this run persists its count tables).
+    //      set is empty.
     //
     //  (b) sorted-neighborhood drift: new records inserted into a bucket
     //      push old neighbors apart. Insertions can only GROW old×old
@@ -473,35 +477,28 @@ object EntityResolution {
     //      edges dropped. Recompute SN over the touched buckets with and
     //      without the batch: the difference (minus pairs still generated
     //      by shared block keys) is the exact stale set.
-    val priorHasCounts =
-      new java.io.File(s"$priorWorkDir/raw_counts.parquet/_SUCCESS").exists() &&
-        new java.io.File(s"$priorWorkDir/sizes2.parquet/_SUCCESS").exists()
+    //
     // Durable keys-fold stage writes OVERLAP downstream compute (guide
     // §2.6 — independent jobs back-fill idle cores): each stage is
     // materialized once with an eager localCheckpoint (the same single
     // computation + lineage cut the old write-then-read-back barrier
     // bought), downstream consumers proceed immediately from the checkpoint
     // blocks, and the parquet encode+commit runs on a driver side thread.
-    // All pending writes are JOINED before the chain manifests are written,
-    // so the crash contract is unchanged: manifests-last means a failed or
-    // interrupted fold leaves prior state intact and the next fold fails
-    // loudly on the broken chain, never reads a torn table.
+    // All pending writes are JOINED before the fold goes on, and the chain
+    // manifests are written last of all, so the crash contract holds:
+    // a failed or interrupted fold leaves prior state intact, writes no
+    // manifest, and leaves no writer thread behind.
     val pendingWrites = scala.collection.mutable.ListBuffer.empty[java.util.concurrent.Future[_]]
     val writePool = java.util.concurrent.Executors.newFixedThreadPool(2, r => {
       val t = new Thread(r, "graft-stage-write"); t.setDaemon(true); t
     })
-    def awaitStageWrites(): Unit = {
-      pendingWrites.foreach(_.get()) // propagates any write failure
-      pendingWrites.clear()
-    }
-    val (keys, blockStats, keyChangedIds) = if (priorHasCounts) {
+    val (keys, blockStats, keyChangedIds, keyPaths, tombPaths) = try {
       val stager = (name: String, df: DataFrame) => {
         val ckpt = df.localCheckpoint(true)
         pendingWrites += writePool.submit(new java.util.concurrent.Callable[Unit] {
           override def call(): Unit =
             ckpt.write.mode("overwrite").parquet(s"$work/$name.parquet")
         })
-        ph(s"  keys-fold stage: $name (write overlapped)")
         ckpt
       }
       // prior keys = the manifest chain's assembly (a base resolve dir is a
@@ -519,23 +516,20 @@ object EntityResolution {
         spark.read.parquet(s"$priorWorkDir/raw_counts.parquet"),
         spark.read.parquet(s"$priorWorkDir/sizes2.parquet"),
         newRecords, records, cfg.blocking, stager)
-      ph("keys folded additively")
       // chain manifests: this fold appended keys_delta + keys_tombstones;
       // compact back to one file once the chain is long (amortized
       // O(batch) — the rewrite runs once per compactLen folds)
       val keyPaths = priorKeyPaths :+ s"$work/keys_delta.parquet"
       val tombPaths = priorTombPaths :+ s"$work/keys_tombstones.parquet"
-      // join the overlapped stage writes BEFORE any chain manifest lands:
-      // a manifest must never reference a file still being written
-      awaitStageWrites()
-      ph("stage writes joined")
-      val keysOut = if (keyPaths.length >= keysChainCompactLen) {
+      // join the overlapped stage writes before the fold goes on: a write
+      // failure must fail the fold, and a manifest must never reference a
+      // file still being written
+      pendingWrites.foreach(_.get()) // propagates any write failure
+      if (keyPaths.length >= keysChainCompactLen) {
         keysAll.write.mode("overwrite").parquet(s"$work/keys.parquet")
-        writeKeysChain(work, Seq(s"$work/keys.parquet"), Seq.empty)
-        ph("keys chain compacted")
-        spark.read.parquet(s"$work/keys.parquet")
+        (spark.read.parquet(s"$work/keys.parquet"), stats, changedOldIds,
+          Seq(s"$work/keys.parquet"), Seq.empty[String])
       } else {
-        writeKeysChain(work, keyPaths, tombPaths)
         // The assembled chain view feeds ~5 consumers (keysEff, both
         // candidate-join sides, both sharedKey sides). Through round 5 it
         // was eagerly checkpointed because those consumers SHUFFLED it —
@@ -546,29 +540,15 @@ object EntityResolution {
         // anti-join — cheaper distributed inside the consumers' own jobs
         // than the serial 90 MB materialization barrier the checkpoint
         // cost on the fold's critical path.
-        keysAll
+        (keysAll, stats, changedOldIds, keyPaths, tombPaths)
       }
-      (keysOut, stats, changedOldIds)
-    } else {
-      // legacy prior state: recompute keys over all records, then diff
-      // against the prior keys table per id (sorted key-set compare — one
-      // partial-aggregable shuffle per side + one join on 8-byte ids)
-      val (keysFull, stats) = materializeKeys(spark, records, work, cfg)
-      ph("keys materialized (legacy full recompute)")
-      val oldKeysPrior = spark.read.parquet(s"$priorWorkDir/keys.parquet")
-        .select("id", "block_key")
-      def keySets(df: DataFrame) = df.groupBy("id")
-        .agg(sort_array(collect_list(col("block_key"))).as("ks"))
-      val changed = keySets(oldKeysPrior).withColumnRenamed("ks", "ks_prior")
-        .join(keySets(keysFull.select("id", "block_key")), Seq("id"), "full_outer")
-        .filter(not(col("ks_prior") <=> col("ks")))
-        .select("id")
-        .join(newIds, Seq("id"), "left_anti") // new ids trivially "gained" keys
-        .localCheckpoint(true) // scratch: feeds 3 actions this fold only
-      ph("key-change diff materialized")
-      (keysFull, stats, changed)
+    } finally {
+      // no-ops after a clean join; after a throw they stop the writes
+      // still in flight, so no writer outlives the failed fold
+      pendingWrites.foreach(_.cancel(true))
+      writePool.shutdownNow()
+      writePool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
     }
-    writePool.shutdown()
     // seed ids feed 5+ consumers (keysEff, touched buckets, both SN-seed
     // sides) — one materialization instead of a union+distinct shuffle per
     // consumer; every semi-join against a corpus-wide table hints it
@@ -581,9 +561,6 @@ object EntityResolution {
     // keys table instead of shuffling it per branch
     val keysEff = keys.join(bcB(seedIds), Seq("id"), "left_semi")
       .localCheckpoint(true)
-    fc("keyChangedIds", keyChangedIds)
-    fc("keys", keys)
-    fc("keysEff", keysEff)
 
     val bucketOf = substring(col("sort_key"), 1, cfg.blocking.snBucketLen)
     val touchedBuckets = records.join(bcB(seedIds), Seq("id"), "left_semi")
@@ -595,7 +572,6 @@ object EntityResolution {
     // durable write+read barrier pair
     val sn = Blocking.sortedNeighborhoodPairs(snRecords, cfg.blocking)
       .localCheckpoint(true)
-    ph("sn pairs of touched buckets materialized")
     val snSeed = sn.join(bcB(seedIds.withColumnRenamed("id", "main_id")), Seq("main_id"), "left_semi")
       .union(sn.join(bcB(seedIds.withColumnRenamed("id", "sub_id")), Seq("sub_id"), "left_semi"))
     // prior-run SN pairs of the same buckets (old records only, bucket
@@ -631,13 +607,7 @@ object EntityResolution {
     // eager: feeds both edge filtering (semi + anti) below; tiny
     val staleSnPairs = snDropped.join(sharedKey, Seq("main_id", "sub_id"), "left_anti")
       .localCheckpoint(true)
-    ph("sn-drift stale set materialized")
 
-    fc("touchedBuckets", touchedBuckets)
-    fc("snRecords", snRecords)
-    fc("sn", sn)
-    fc("snSeed", snSeed)
-    fc("candInvolvingRaw", Blocking.candidatePairsInvolvingRaw(keysEff, keys))
     // checkpointed: feeds the scoring funnel, the pair-id pruning frame
     // below, AND Result.candidatePairs (probed/evaluated after the fold) —
     // batch-bounded rows, one materialization
@@ -645,7 +615,6 @@ object EntityResolution {
       Blocking.candidatePairsInvolvingRaw(keysEff, keys, broadcastNew = smallBatch)
         .union(snSeed))
       .localCheckpoint(true)
-    fc("pairs", pairs)
 
     // score only pairs involving a new or key-changed record; all other old
     // edges are reused verbatim except the stale SN set computed above.
@@ -668,7 +637,6 @@ object EntityResolution {
     val newEdges = scored.filter(col("score") >= cfg.tau)
       .select("main_id", "sub_id", "score")
       .localCheckpoint(true)
-    ph("new-involving pairs scored")
     val droppedStaleEdges = oldEdges.select("main_id", "sub_id", "score")
       .join(bcB(staleSnPairs), Seq("main_id", "sub_id"), "left_semi")
     val keptEdges = oldEdges.select("main_id", "sub_id", "score")
@@ -679,7 +647,6 @@ object EntityResolution {
     newEdges.unionByName(keptEdges)
       .write.mode("overwrite").parquet(edgePath)
     val edges = spark.read.parquet(edgePath)
-    ph("edges folded")
 
     // Clustering runs ONLY on the subgraph touched by a new/dropped edge;
     // untouched prior components pass through label-unchanged. Touched
@@ -727,7 +694,13 @@ object EntityResolution {
       .unionByName(untouched.select("node", "component"))
       .write.mode("overwrite").parquet(compPath)
     val components = spark.read.parquet(compPath)
-    ph("clustering folded")
+
+    // manifests last (keys.list last of all): a fold that throws anywhere
+    // above leaves none in `work`, so that dir is refused as prior state
+    // instead of misread
+    writeRecordsList(work, oldPaths :+ newRecPath)
+    writeConfigSig(work, cfg)
+    writeKeysChain(work, keyPaths, tombPaths)
 
     val integrated = buildIntegrated(records, edges, components)
     val urlDim = records.select(col("id"), col("url"))
@@ -754,27 +727,21 @@ object EntityResolution {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(work, "config.sig"), configSig(cfg))
 
-  /** None only for pre-signature state dirs (written by older builds). */
-  private def readConfigSig(work: String): Option[String] = {
-    val p = java.nio.file.Paths.get(work, "config.sig")
-    if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p))
-    else None
-  }
+  private def readConfigSig(work: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(work, "config.sig"))
 
-  private def readRecordsList(work: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(work, "records.list")
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.readString(p).split("\n").toSeq.filter(_.nonEmpty)
-    else Seq(s"$work/records.parquet")
-  }
+  /** A path manifest (`records.list`, `keys.list`, `tombstones.list`). */
+  private def readManifest(work: String, name: String): Seq[String] =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(work, name))
+      .split("\n").toSeq.filter(_.nonEmpty)
 
   /** Keys-table manifest chain: `keys.list` holds the delta file paths
     * whose union, minus the block keys in the `tombstones.list` files,
     * equals the current keys table ([[Blocking.mergeBlockKeys]] chain
-    * note). A base resolve dir (no `keys.list`) is a one-file chain with
-    * no tombstones. Chains are compacted back to a single file once they
-    * grow past [[keysChainCompactLen]] files — amortized O(batch), and the
-    * read-side broadcast anti-join stays bounded. */
+    * note). A base resolve dir holds a one-file chain with no tombstones.
+    * Chains are compacted back to a single file once they grow past
+    * [[keysChainCompactLen]] files — amortized O(batch), and the read-side
+    * broadcast anti-join stays bounded. */
   private def writeKeysChain(work: String, keyPaths: Seq[String],
                              tombPaths: Seq[String]): Unit = {
     // tombstones FIRST: keys.list is the manifest's existence marker on the
@@ -792,20 +759,14 @@ object EntityResolution {
   }
 
   private def readKeysChain(work: String): (Seq[String], Seq[String]) = {
-    val kp = java.nio.file.Paths.get(work, "keys.list")
-    if (java.nio.file.Files.exists(kp)) {
-      val tp = java.nio.file.Paths.get(work, "tombstones.list")
-      // see writeKeysChain: a keys.list without its tombstones.list is a
-      // torn manifest, not an empty tombstone set
-      if (!java.nio.file.Files.exists(tp))
-        throw new IllegalStateException(
-          s"keys manifest torn in $work: keys.list exists without " +
-            "tombstones.list (interrupted write?) — restore the state dir " +
-            "or run a full re-resolve")
-      val tombs =
-        java.nio.file.Files.readString(tp).split("\n").toSeq.filter(_.nonEmpty)
-      (java.nio.file.Files.readString(kp).split("\n").toSeq.filter(_.nonEmpty), tombs)
-    } else (Seq(s"$work/keys.parquet"), Seq.empty)
+    // see writeKeysChain: a keys.list without its tombstones.list is a
+    // torn manifest, not an empty tombstone set
+    if (!new java.io.File(work, "tombstones.list").exists())
+      throw new IllegalStateException(
+        s"keys manifest torn in $work: keys.list exists without " +
+          "tombstones.list (interrupted write?) — restore the state dir " +
+          "or run a full re-resolve")
+    (readManifest(work, "keys.list"), readManifest(work, "tombstones.list"))
   }
 
   /** Chain files before a compacting rewrite (test override via the

@@ -30,7 +30,6 @@ import graft.pipeline.EntityResolution
  * graft.Bench parses every such line, so a wall-capped child still delivers
  * the levels it finished. An optional wall budget (4th arg, seconds) makes
  * the child skip remaining levels rather than blow the parent's cap.
- * Optional per-stage diagnostics with SPARK_GRAFT_STAGES=1.
  */
 object ScaleRunner {
   def main(args: Array[String]): Unit = {
@@ -53,39 +52,17 @@ object ScaleRunner {
     val corpus = args(1)
     val warmupCorpus = args(2)
     val wallBudget = if (args.length > 3) args(3).toDouble else Double.MaxValue
-    val stageDiag = sys.env.get("SPARK_GRAFT_STAGES").contains("1")
 
     val taskTime = new java.util.concurrent.atomic.AtomicLong()
     val cpuTime = new java.util.concurrent.atomic.AtomicLong()
     val gcTime = new java.util.concurrent.atomic.AtomicLong()
     val taskCount = new java.util.concurrent.atomic.AtomicLong()
-    val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         taskTime.addAndGet(e.taskMetrics.executorRunTime)
         cpuTime.addAndGet(e.taskMetrics.executorCpuTime / 1000000L)
         gcTime.addAndGet(e.taskMetrics.jvmGCTime)
         taskCount.incrementAndGet()
-      }
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = if (stageDiag) {
-        val si = e.stageInfo
-        val run = si.taskMetrics.executorRunTime / 1000.0
-        val cpu = si.taskMetrics.executorCpuTime / 1e9
-        val wall = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-        val shr = si.taskMetrics.shuffleReadMetrics.totalBytesRead / 1048576.0
-        val shw = si.taskMetrics.shuffleWriteMetrics.bytesWritten / 1048576.0
-        // SQL stages all report an opaque CompletableFuture callsite in
-        // si.name; the first graft frame in si.details names the pipeline
-        // step that planned the stage — the label that makes per-stage
-        // inflation attributable
-        val graftFrame = si.details.linesIterator
-          .find(l => l.contains("graft.") && !l.contains("ScaleRunner"))
-          .map(_.trim.stripPrefix("at ").take(60))
-          .getOrElse(si.name.takeWhile(_ != '\n').take(60))
-        stageRows.add(f"[stage] id=${si.stageId}%3d tasks=${si.numTasks}%3d " +
-          f"wall=$wall%6.2f run=$run%7.2f cpu=$cpu%7.2f shR=$shr%7.1fMB shW=$shw%7.1fMB " +
-          graftFrame)
       }
     }
 
@@ -124,7 +101,6 @@ object ScaleRunner {
           okSteal = 0.15, canWait = () => elapsed + 60 < wallBudget,
           log = m => System.err.println(s"[scale-gate] $m"))
         taskTime.set(0); cpuTime.set(0); gcTime.set(0); taskCount.set(0)
-        stageRows.clear()
         val (busy0, steal0) = HostStat.procStat()
         val (sec, docs) = run(spark, corpus) // measured, steady-state
         val (busy1, steal1) = HostStat.procStat()
@@ -132,7 +108,6 @@ object ScaleRunner {
         val measuredTask = taskTime.get()
         val measuredTaskCount = taskCount.get()
         val util = measuredTask / 1000.0 / (sec * cpus)
-        if (stageDiag) stageRows.forEach(r => System.out.println(r))
         // Frequency calibration: a fixed pure-CPU probe (no shuffle, no
         // alloc) at this level's concurrency. On this host the per-core
         // clock drops as more cores go active (turbo); separate N and 4N
@@ -154,11 +129,11 @@ object ScaleRunner {
         // parallelismFirst coalescing both scale task counts with the
         // level's core count — exactly as they do on a real N vs 4N
         // executor cluster. Per-task FIXED cost was probed and ruled out as
-        // the inflation carrier (1-6 ms/task even for fresh plans,
-        // TaskCostProbe); the inflation concentrates in the hash-agg /
-        // shuffle minority of the CPU (the compute-dense stages inflate
-        // 1.0x) and its magnitude tracks the host window — see
-        // BENCH/BASELINE.md "Work inflation: stage-level attribution".
+        // the inflation carrier (1-6 ms/task even for fresh plans); the
+        // inflation concentrates in the hash-agg / shuffle minority of the
+        // CPU (the compute-dense stages inflate 1.0x) and its magnitude
+        // tracks the host window — see BENCH/BASELINE.md "Work inflation:
+        // stage-level attribution".
         println(f"[scale] cpus=$cpus sec=$sec%.3f docs=$docs " +
           f"taskSec=${measuredTask / 1000.0}%.1f cpuSec=${cpuTime.get() / 1000.0}%.1f " +
           f"gcSec=${gcTime.get() / 1000.0}%.1f util=$util%.2f calCoreSec=$calCoreSec%.2f " +

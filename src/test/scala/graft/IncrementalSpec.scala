@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -186,31 +188,62 @@ class IncrementalSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("torn"))
   }
 
-  test("legacy prior state (no persisted count tables): fallback diff path == full") {
-    // a state dir written by a pre-counts build lacks raw_counts/sizes2 —
-    // the fold must take the recompute-and-diff path and still be exact
-    val all = graft.testgen.WebCorpus.pages(spark, 300).toDF()
+  test("prior state missing a file every current resolve writes is refused") {
+    // raw_counts, config.sig, records.list and keys.list are written by
+    // every resolve and fold; a dir without one is refused up front, naming
+    // the file, instead of being read under some older layout
+    val all = graft.testgen.WebCorpus.pages(spark, 200).toDF()
     val isNew = pmod(xxhash64(col("url")), lit(5)) === 4
-    val Seq(d1, d2, d3) = (1 to 3).map(i =>
-      Files.createTempDirectory(s"graft-leg$i").toString)
+    val d1 = Files.createTempDirectory("graft-req").toString
     EntityResolution.resolve(all.filter(!isNew),
       EntityResolution.Config(workDir = Some(d1))).integrated.count()
-    for (t <- Seq("raw_counts.parquet", "sizes2.parquet"))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$d1/$t"))
-    val inc = EntityResolution.resolveIncremental(all.filter(isNew), d1,
-      EntityResolution.Config(workDir = Some(d2)))
-    val full = EntityResolution.resolve(all,
-      EntityResolution.Config(workDir = Some(d3)))
-    val cols = Seq("RecordId", "InputSourceARN", "MatchID", "ConfidenceLevel")
-    val a = inc.integrated.select(cols.map(col): _*)
-    val b = full.integrated.select(cols.map(col): _*)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-      "legacy fallback diverged from full re-resolve")
-    // and the upgraded chain: d2 now has count tables, so a further fold
-    // over it takes the additive path (guard: the tables exist)
-    assert(new java.io.File(s"$d2/raw_counts.parquet/_SUCCESS").exists() &&
-      new java.io.File(s"$d2/sizes2.parquet/_SUCCESS").exists(),
-      "fold did not persist count tables for the next batch")
+    for (f <- Seq("raw_counts.parquet", "config.sig", "records.list", "keys.list")) {
+      val prior = Files.createTempDirectory("graft-req-prior").toFile
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(d1), prior)
+      org.apache.commons.io.FileUtils.forceDelete(new java.io.File(prior, f))
+      val ex = intercept[IllegalArgumentException] {
+        EntityResolution.resolveIncremental(all.filter(isNew), prior.toString,
+          EntityResolution.Config(workDir = Some(s"$prior-out")))
+      }
+      assert(ex.getMessage.contains(s"lacks $f") &&
+        ex.getMessage.contains("run a full re-resolve"), s"$f: ${ex.getMessage}")
+    }
+  }
+
+  test("a fold that throws leaves no writer thread, prior state as it was, no manifest") {
+    val all = graft.testgen.WebCorpus.pages(spark, 300).toDF()
+    val isNew = pmod(xxhash64(col("url")), lit(5)) === 4
+    val d1 = Files.createTempDirectory("graft-fail1").toString
+    val d2 = Files.createTempDirectory("graft-fail2").toString
+    EntityResolution.resolve(all.filter(!isNew),
+      EntityResolution.Config(workDir = Some(d1))).integrated.count()
+    // break the first page header of the largest prior sizes2 part: its
+    // footer stays intact, so schema inference and the raw_counts stage
+    // pass and the fold fails in the sizes2 stage, after the raw_counts
+    // write was submitted to the writer pool
+    val part = new java.io.File(d1, "sizes2.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).maxBy(_.length)
+    val raf = new java.io.RandomAccessFile(part, "rw")
+    try { raf.seek(4); raf.write(Array.fill[Byte](16)(-1)) } finally raf.close()
+    def snapshot(dir: String) = org.apache.commons.io.FileUtils
+      .listFiles(new java.io.File(dir), null, true).asScala
+      .map(f => (f.getPath, f.length, f.lastModified)).toSet
+    val before = snapshot(d1)
+
+    val ex = intercept[Exception] {
+      EntityResolution.resolveIncremental(all.filter(isNew), d1,
+        EntityResolution.Config(workDir = Some(d2))).integrated.count()
+    }
+    val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("sizes2")),
+      s"fold failed somewhere other than the sizes2 stage: $ex")
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == "graft-stage-write" && t.isAlive),
+      "a stage writer outlived the failed fold")
+    assert(snapshot(d1) == before, "the failed fold changed prior state")
+    val manifests = Seq("records.list", "config.sig", "keys.list", "tombstones.list")
+      .filter(f => new java.io.File(d2, f).exists())
+    assert(manifests.isEmpty, s"the failed fold wrote manifests: $manifests")
   }
 
   test("re-crawl guard: a batch url already in prior state fails fast") {
@@ -241,5 +274,15 @@ class IncrementalSpec extends AnyFunSuite {
         .integrated.count()
     }
     assert(ex.getMessage.contains("config changed"))
+  }
+
+  test("config guard: negative scoring weights are rejected") {
+    // the funnel's prefilter bounds assume every weight is >= 0
+    val negative = Seq[() => EntityResolution.Config](
+      () => EntityResolution.Config(wJaroWinkler = -0.1),
+      () => EntityResolution.Config(wLevenshtein = -0.1),
+      () => EntityResolution.Config(wTokenJaccard = -0.1))
+    assert(negative.forall(c =>
+      scala.util.Try(c()).failed.toOption.exists(_.isInstanceOf[IllegalArgumentException])))
   }
 }

@@ -168,7 +168,7 @@ class OpsSpec extends AnyFunSuite {
       boiler, "text", "doc", windowTokens = 15, maxDocsPerWindow = 3)
     assert(wPairs.count() == 0) // every shared window is over the cap
     val ws = wStats.head()
-    assert(ws.getAs[Long]("hot_windows") == 6L) // 6 windows in the 20-token run
+    assert(ws.getAs[Long]("hot_buckets") == 6L) // 6 windows in the 20-token run
     assert(ws.getAs[Long]("dropped_rows") == 36L) // 6 windows × 6 docs
     // minhash: 6 identical docs → every band bucket holds all 6 → capped at 5
     val same = (1L to 6L).map(i => (i, run)).toDF("doc", "text")
