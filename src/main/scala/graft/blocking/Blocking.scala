@@ -102,6 +102,15 @@ object Blocking {
     xxhash64(col("block_key"), substring(col("title_norm"), 1, cfg.titlePrefixLen))
       .bitwiseOR(lit(Long.MinValue)) // bit 63 set: re-keyed keyspace (< 0)
 
+  /** (id, source, block_key) of `raw`, re-keyed where the block is in
+    * `oversized` (block_key, n). That list is tiny (Zipf head), so it
+    * broadcasts — no extra shuffle of the key stream. */
+  private def reKeyOversized(raw: DataFrame, oversized: DataFrame, cfg: Config): DataFrame =
+    raw.join(broadcast(oversized), Seq("block_key"), "left")
+      .withColumn("block_key",
+        when(col("n").isNull, col("block_key")).otherwise(reKey(cfg)))
+      .select("id", "source", "block_key")
+
   /** [[blockKeys]] plus the two count tables the incremental path maintains
     * additively: `rawCounts` (raw block_key → n, BEFORE re-keying) and
     * `sizes2` (final block_key → n, BEFORE the still-hot drop). Persisting
@@ -111,14 +120,9 @@ object Blocking {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val raw = rawKeys(records, cfg)
     // Block sizes: cheap partial-aggregated count vs the quadratic cost a
-    // hot block would cause downstream. The oversized-key list is tiny
-    // (Zipf head), so it broadcasts — no extra shuffle of the key stream.
+    // hot block would cause downstream.
     val rawCounts = raw.groupBy("block_key").agg(count(lit(1)).as("n"))
-    val oversized = rawCounts.filter(col("n") > cfg.maxBlock)
-    val keyed = raw.join(broadcast(oversized), Seq("block_key"), "left")
-      .withColumn("block_key",
-        when(col("n").isNull, col("block_key")).otherwise(reKey(cfg)))
-      .select("id", "source", "block_key")
+    val keyed = reKeyOversized(raw, rawCounts.filter(col("n") > cfg.maxBlock), cfg)
     val sizes2 = keyed.groupBy("block_key").agg(count(lit(1)).as("n"))
     val stillHot = sizes2.filter(col("n") > cfg.maxBlock * 4L)
     val kept = keyed.join(broadcast(stillHot), Seq("block_key"), "left_anti")
@@ -146,11 +150,7 @@ object Blocking {
     val oversized = spark.read.parquet(s"$dir/raw_counts.parquet")
       .filter(col("n") > cfg.maxBlock)
     val keyedPath = s"$dir/keyed_all.parquet"
-    raw.join(broadcast(oversized), Seq("block_key"), "left")
-      .withColumn("block_key",
-        when(col("n").isNull, col("block_key")).otherwise(reKey(cfg)))
-      .select("id", "source", "block_key")
-      .write.mode("overwrite").parquet(keyedPath)
+    reKeyOversized(raw, oversized, cfg).write.mode("overwrite").parquet(keyedPath)
     val keyed = spark.read.parquet(keyedPath)
     // sizes2 DERIVED, not re-aggregated: a keyed row kept its natural key
     // (≥ 0) iff its raw block was small, so those counts are raw_counts
@@ -283,13 +283,7 @@ object Blocking {
       .withColumn("block_key", reKey(cfg))
       .select("id", "source", "block_key")
       .localCheckpoint(true)
-    val batchKeyed = rawBatch
-      .join(broadcast(oversizedAll.select(col("block_key"),
-        lit(true).as("over"))), Seq("block_key"), "left")
-      .withColumn("block_key",
-        when(col("over").isNull, col("block_key")).otherwise(reKey(cfg)))
-      .select("id", "source", "block_key")
-      .localCheckpoint(true)
+    val batchKeyed = reKeyOversized(rawBatch, oversizedAll, cfg).localCheckpoint(true)
     def counted(df: DataFrame) = df.groupBy("block_key").agg(count(lit(1)).as("n"))
     val sizes2All = stage("sizes2", priorSizes2
       .join(broadcast(crossed), Seq("block_key"), "left_anti") // key vanished: all rows re-keyed
@@ -350,19 +344,13 @@ object Blocking {
     a.join(b, "block_key").select("main_id", "sub_id")
   }
 
-  /**
-   * Cross-source candidate pairs where AT LEAST ONE side is a new record —
-   * the incremental-batch variant of [[candidatePairs]]. `keysNew` must be
-   * the subset of `keysAll` belonging to the new batch; old×old pairs are
-   * never generated, so pair-scoring work per batch is proportional to the
-   * batch's block overlap, not the corpus.
-   */
-  def candidatePairsInvolving(keysNew: DataFrame, keysAll: DataFrame): DataFrame =
-    candidatePairsInvolvingRaw(keysNew, keysAll).distinct()
-
-  /** [[candidatePairsInvolving]] without the dedup shuffle — same rationale
-    * as [[candidatePairsRaw]] (the incremental pipeline distincts once after
-    * unioning with its sorted-neighborhood seed pairs).
+  /** Cross-source candidate pairs where AT LEAST ONE side is a new record —
+    * the incremental-batch variant of [[candidatePairsRaw]], likewise
+    * without a dedup shuffle (the incremental pipeline distincts once after
+    * unioning with its sorted-neighborhood seed pairs). `keysNew` must be
+    * the subset of `keysAll` belonging to the new batch; old×old pairs are
+    * never generated, so pair-scoring work per batch is proportional to the
+    * batch's block overlap, not the corpus.
     *
     * `broadcastNew = true` hints the (batch-bounded) keysNew side broadcast
     * in both branches, so the corpus-wide keysAll side STREAMS instead of

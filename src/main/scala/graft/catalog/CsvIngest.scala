@@ -13,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * re-creation of the reference's csvtool flow: drop a directory of
  * arbitrary CSVs, group the files by the MD5 of their header line
  * (reference: csvtool/csv_to_glue_catalog.py:272-276 hash, :369-377
- * grouping), infer one schema per group, and register each group as one
- * table (reference infers types with an LLM; here Spark's schema inference
+ * grouping), infer one schema per group, and load each group as one
+ * DataFrame (reference infers types with an LLM; here Spark's schema inference
  * plays that role — csv_to_glue_catalog.py:147-237).
  *
  * Only header LINES are read on the driver (one small read per file —
@@ -49,13 +49,5 @@ object CsvIngest {
       h -> spark.read
         .option("header", "true").option("inferSchema", "true")
         .csv(files: _*)
-    }
-
-  /** Register each group as a temp view `prefix_<first8 of header hash>`. */
-  def registerGroups(spark: SparkSession, dir: String, prefix: String = "csv"): Seq[String] =
-    loadGroups(spark, dir).toSeq.sortBy(_._1).map { case (h, df) =>
-      val name = s"${prefix}_${h.take(8)}"
-      df.createOrReplaceTempView(name)
-      name
     }
 }

@@ -57,22 +57,6 @@ case class TokenHashesExpr(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class TokenJaccardSortedExpr(left: Expression, right: Expression)
-    extends BinaryExpression with org.apache.spark.sql.graft.GraftInputTypes {
-  override def graftInputTypes: Seq[DataType] = Seq(ArrayType(LongType, containsNull = false), ArrayType(LongType, containsNull = false))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "token_jaccard_sorted"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Sim.tokenJaccardSorted(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Sim.tokenJaccardSorted($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 /** Delta+varint-packed token-hash set (see [[Sim.packTokenHashes]]) — the
   * compact stage-table / shuffle form of `token_hashes`: ~2x fewer bytes at
   * bits=32 than the raw long array through every records scan and
@@ -342,11 +326,9 @@ case class CosineSimExpr(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** All `tables` sign-LSH bucket codes of a vector in one compiled pass —
-  * replaces `array(signBucket(v, bits, t) …)`, whose higher-order-function
-  * expansion interpreted tables·bits array walks per row, with a single
-  * [[Sim.signCodes]] call (cached ±1 hyperplane weights, identical
-  * xxhash64-parity weights and plane-sum order — codes are bit-identical). */
+/** All `tables` sign-LSH bucket codes of a vector in one compiled pass: a
+  * single [[Sim.signCodes]] call per row over cached ±1 hyperplane weights
+  * (code semantics documented there). */
 case class SignCodesExpr(child: Expression, bits: Int, tables: Int)
     extends UnaryExpression {
   private def elemDouble: Boolean = child.dataType match {
@@ -376,8 +358,6 @@ object GraftFunctions {
   def jaro_winkler(a: Column, b: Column): Column = col(JaroWinklerExpr(expr(a), expr(b)))
   def token_jaccard(a: Column, b: Column): Column = col(TokenJaccardExpr(expr(a), expr(b)))
   def token_hashes(c: Column): Column = col(TokenHashesExpr(expr(c)))
-  def token_jaccard_sorted(a: Column, b: Column): Column =
-    col(TokenJaccardSortedExpr(expr(a), expr(b)))
   def pack_tokens(c: Column, bits: Int): Column = col(PackTokensExpr(expr(c), bits))
   def packed_count(c: Column): Column = col(PackedCountExpr(expr(c)))
   def packed_jaccard(a: Column, b: Column): Column =

@@ -32,19 +32,6 @@ object Sim {
     z ^ (z >>> 31)
   }
 
-  /** Deterministic 64-bit hash of a char range (polynomial + splitmix mix). */
-  def hashChars(s: CharSequence, from: Int, until: Int, seed: Long): Long = {
-    var h = seed ^ 0xcbf29ce484222325L
-    var i = from
-    while (i < until) {
-      h = (h ^ s.charAt(i).toLong) * 0x100000001b3L
-      i += 1
-    }
-    mix64(h)
-  }
-
-  def hashString(s: String, seed: Long): Long = hashChars(s, 0, s.length, seed)
-
   // ------------------------------------------------------------ Jaro-Winkler
 
   /** Jaro-Winkler over UTF8String. ASCII inputs ≤64 bytes take a zero-
@@ -209,18 +196,8 @@ object Sim {
   @inline private def isWsByte(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
 
-  /** Deterministic 64-bit hash of a byte range (FNV-ish + splitmix mix). */
-  def hashBytes(bytes: Array[Byte], from: Int, until: Int, seed: Long): Long = {
-    var h = seed ^ 0xcbf29ce484222325L
-    var i = from
-    while (i < until) {
-      h = (h ^ (bytes(i) & 0xffL)) * 0x100000001b3L
-      i += 1
-    }
-    mix64(h)
-  }
-
-  /** Same hash, reading UTF8String storage in place (no byte[] copy). */
+  /** Deterministic 64-bit hash of a UTF8String byte range (FNV-ish +
+    * splitmix mix), read in place (no byte[] copy). */
   def hashUtf8Range(s: UTF8String, from: Int, until: Int, seed: Long): Long = {
     var h = seed ^ 0xcbf29ce484222325L
     var i = from
@@ -237,23 +214,6 @@ object Sim {
     * (GenericArrayData would box every element). */
   def tokenHashArray(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData =
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(tokenHashes(s))
-
-  /** Exact token-set Jaccard from two SORTED hash arrays (merge-count). */
-  def tokenJaccardSorted(a: org.apache.spark.sql.catalyst.util.ArrayData,
-                         b: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    if (na == 0 && nb == 0) return 1.0
-    if (na == 0 || nb == 0) return 0.0
-    var i = 0; var j = 0; var inter = 0
-    while (i < na && j < nb) {
-      val x = a.getLong(i); val y = b.getLong(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    inter.toDouble / (na + nb - inter)
-  }
 
   // ------------------------------------------------------ packed token sets
 
@@ -386,8 +346,8 @@ object Sim {
   /**
    * Exact jaccard of two packed token sets — streaming merge over the two
    * varint streams, zero decode allocation (the cursors are tiny non-escaping
-   * objects, scalar-replaced by the JIT). Equals [[tokenJaccardSorted]] on
-   * the same sets (SimSpec property-gates this at bits=64).
+   * objects, scalar-replaced by the JIT). At bits=64 it equals
+   * [[tokenJaccard]] of the two texts (SimSpec property-gates this).
    */
   def packedJaccard(a: Array[Byte], b: Array[Byte]): Double = {
     val ca = new VarintCursor(a)
@@ -580,11 +540,9 @@ object Sim {
   }
 
   /** ±1 hyperplane weights for planes 0..nPlanes-1 over dims 0..n-1, cached
-    * per (nPlanes, n): the weight is a pure function of (plane, dim) —
-    * `xxhash64(plane, dim)` parity with Spark's seed-42 XXH64 over two int
-    * inputs, exactly what the former per-element Catalyst
-    * `pmod(xxhash64(lit(plane), dim), 2)` computed — so hashing once per
-    * (plane, dim) instead of once per (row, plane, dim) changes nothing. */
+    * per (nPlanes, n): +1 when Spark's seed-42 `xxhash64(plane, dim)` over
+    * two int inputs is even, else -1 — a pure function of (plane, dim), so
+    * it is hashed once per (plane, dim), never per row. */
   private val planeWeightCache =
     new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Array[Array[Double]]]()
   private def planeWeights(nPlanes: Int, n: Int): Array[Array[Double]] = {
@@ -603,17 +561,12 @@ object Sim {
   }
 
   /**
-   * All `tables` sign-LSH bucket codes of a vector in one compiled pass —
-   * the fused form of `array(signBucket(v, bits, 0) … signBucket(v, bits,
-   * tables-1))`, whose HOF expansion interpreted tables·bits zip_with+
-   * aggregate walks per row. Per plane p of table t the signed projection is
-   * the same index-ascending sequential sum Σ v[i]·w(t·bits+p, i) (weights
-   * per [[planeWeights]] — identical hash parity), and the bit is set under
-   * the same `signed >= 0` Catalyst comparison semantics (NaN and -0.0
-   * compare GE 0 under nanSafeCompareDoubles; Java `>=` alone would drop the
-   * NaN case). A null element made every plane's sum NULL, whose
-   * `when(null).otherwise(0)` left all bits clear — mirrored by the zeroed
-   * codes array.
+   * All `tables` sign-LSH bucket codes of a vector in one compiled pass.
+   * Bit p of table t's code is set when the index-ascending sequential sum
+   * Σ v[i]·w(t·bits+p, i) is `>= 0` (weights per [[planeWeights]]) under
+   * Catalyst comparison semantics: NaN and -0.0 count as `>= 0`, as under
+   * nanSafeCompareDoubles (Java `>=` alone would drop the NaN case). A
+   * vector with a null element, or an empty one, gets all-zero codes.
    */
   def signCodes(v: org.apache.spark.sql.catalyst.util.ArrayData, isDouble: Boolean,
                 bits: Int, tables: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
@@ -622,8 +575,7 @@ object Sim {
     var anyNull = false
     var i = 0
     while (i < n && !anyNull) { anyNull = v.isNullAt(i); i += 1 }
-    // n == 0 ALSO left all bits clear in the HOF form (its index sequence
-    // degenerates and null-propagates through every plane sum)
+    // empty or null-holding vector: every code stays 0
     if (n > 0 && !anyNull) {
       val w = planeWeights(bits * tables, n)
       var tb = 0

@@ -31,28 +31,34 @@ object Ann {
     * every score (and oracle-checked ranking) is bit-unchanged. */
   def cosine(a: Column, b: Column): Column = cosine_sim(a, b)
 
-  /**
-   * Deterministic sign-LSH bucket id: `bits` pseudo-random ±1 hyperplanes
-   * derived from (plane index, dimension index) hashes — no stored model,
-   * the same vector always lands in the same bucket on any cluster. `table`
-   * selects an independent hyperplane family (plane indices are offset), so
-   * multi-table LSH needs no extra machinery.
-   */
-  def signBucket(v: Column, bits: Int, table: Int = 0): Column = {
-    val planes = (0 until bits).map { p =>
-      val signed = aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1),
-          (x, i) => x.cast("double") * planeWeight(table * bits + p, i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(signed >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    planes.reduce((a: Column, b: Column) => a.bitwiseOR(b))
+  /** The first `k` items per query of (query_id, item_id, cosine) rows,
+    * ranked by cosine desc, then item_id asc — ties are deterministic. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("item_id").asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** ±1 weight for (plane, dim) — mirrors Sim.mix64 determinism. */
-  private def planeWeight(plane: Int, dim: Column): Column = {
-    // xxhash64 of (plane, dim) → sign; pure content hash, no RNG state
-    when(pmod(xxhash64(lit(plane), dim), lit(2L)) === 0, lit(1.0)).otherwise(lit(-1.0))
+  /** Multi-probe masks: every `bits`-bit mask with at most `maxFlip` bits
+    * set, 0 (the exact code) first. */
+  private[ops] def flipMasks(bits: Int, maxFlip: Int): Seq[Long] =
+    (0L until (1L << bits)).filter(m => java.lang.Long.bitCount(m) <= maxFlip)
+
+  /** Sign-LSH buckets of `coded`, whose `codes` column holds one code per
+    * hyperplane table (`sign_codes`): one row per (row, table) carrying the
+    * `keep` columns and `bucket = xxhash64(table, code)`. */
+  private[ops] def exactBuckets(coded: DataFrame, keep: Column*): DataFrame =
+    codeBuckets(coded, keep, xxhash64(col("tb"), col("code")))
+
+  /** [[exactBuckets]] fanned out to `code ^ m` for every mask `m` — the
+    * probe side of a multi-probe bucket join. */
+  private[ops] def probeBuckets(coded: DataFrame, masks: Seq[Long], keep: Column*): DataFrame =
+    codeBuckets(coded, keep, explode(transform(array(masks.map(lit): _*),
+      m => xxhash64(col("tb"), col("code").bitwiseXOR(m)))))
+
+  private def codeBuckets(coded: DataFrame, keep: Seq[Column], bucket: Column): DataFrame = {
+    val perTable = coded.select(keep :+ posexplode(col("codes")).as(Seq("tb", "code")): _*)
+    perTable.select(perTable.columns.dropRight(2).map(col).toSeq :+ bucket.as("bucket"): _*)
   }
 
   /**
@@ -68,10 +74,7 @@ object Ann {
     val scored = items.select(col(idCol).as("item_id"), col(vecCol).as("iv"))
       .crossJoin(q)
       .select(col("query_id"), col("item_id"), cosine(col("iv"), col("qv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("item_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k)
   }
 
   /**
@@ -89,32 +92,24 @@ object Ann {
               idCol: String = "vec_id", vecCol: String = "embedding",
               queryIdCol: String = "query_id"): DataFrame = {
     // per-table codes are computed ONCE per row and in ONE compiled pass
-    // (sign_codes — the fused, bit-identical form of the per-table
-    // signBucket array, whose HOF expansion interpreted tables·bits array
-    // walks per row); bucket keys then fan out from the code array with
-    // cheap hashes — recomputing signBucket per probe mask was a measured
-    // codegen bomb (tables·C(bits,≤maxFlip) eight-plane aggregates per row)
-    val bucketedItems = items.select(col(idCol).as("item_id"), col(vecCol).as("iv"),
-        sign_codes(col("iv"), bits, tables).as("codes"))
-      .select(col("item_id"), col("iv"), posexplode(col("codes")).as(Seq("tb", "code")))
-      .select(col("item_id"), col("iv"), xxhash64(col("tb"), col("code")).as("bucket"))
+    // (sign_codes); bucket keys then fan out from the code array with
+    // cheap hashes — recomputing the hyperplane sums per probe mask was a
+    // measured codegen bomb (tables·C(bits,≤maxFlip) eight-plane
+    // aggregates per row)
+    val bucketedItems = exactBuckets(
+      items.select(col(idCol).as("item_id"), col(vecCol).as("iv"),
+        sign_codes(col("iv"), bits, tables).as("codes")),
+      col("item_id"), col("iv"))
     // multi-probe: the query's code plus every code within `maxFlip` flips,
     // per table — boundary vectors land in adjacent buckets
-    val masks = (0L until (1L << bits))
-      .filter(m => java.lang.Long.bitCount(m) <= maxFlip)
-    val maskArr = array(masks.map(lit): _*)
-    val q = broadcast(queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("qv"),
-        sign_codes(col(vecCol), bits, tables).as("codes"))
-      .select(col("query_id"), col("qv"), posexplode(col("codes")).as(Seq("tb", "code")))
-      .select(col("query_id"), col("qv"), explode(transform(maskArr,
-        m => xxhash64(col("tb"), col("code").bitwiseXOR(m)))).as("bucket")))
+    val q = broadcast(probeBuckets(
+      queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("qv"),
+        sign_codes(col(vecCol), bits, tables).as("codes")),
+      flipMasks(bits, maxFlip), col("query_id"), col("qv")))
     val scored = bucketedItems.join(q, "bucket")
       .dropDuplicates("query_id", "item_id")
       .select(col("query_id"), col("item_id"), cosine(col("iv"), col("qv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("item_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k)
   }
 
   /**
@@ -195,10 +190,7 @@ object Ann {
       .withColumn("cid", explode(probeList)))
     val scoredPairs = posted.join(q, "cid")
       .select(col("query_id"), col("item_id"), cosine(col("iv"), col("qv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("item_id").asc)
-    scoredPairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scoredPairs, k)
   }
 
   /** Driver-side exact cosine for tests. */

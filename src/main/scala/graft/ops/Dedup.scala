@@ -12,6 +12,14 @@ import graft.functions.GraftFunctions._
  * candidate-pair fan-out by blocking — the same skew discipline as the ER
  * blocking layer (graft.blocking.Blocking).
  *
+ * The four text families share one candidate chain, [[bucketPairs]]:
+ * bucket keys → drop buckets above the family's cap → self-join on the
+ * bucket with `id_a < id_b`; each keeps its own feature checkpoint, pair
+ * dedup and exact verification. A cap drop is never silent: each
+ * `*WithStats` returns the one-row stats frame (n_buckets / n_bucket_rows
+ * / max_bucket / hot_buckets / dropped_rows). [[embeddingCosine]] shares
+ * its sign-LSH bucket builders with [[Ann.lshTopK]] instead.
+ *
  * Every fuzzy operator here is verified against a brute-force oracle on the
  * deterministic test corpus (driver CORRECTNESS rows + OpsSpec recall
  * gates): the bucketed candidate generation must reproduce the exact
@@ -19,12 +27,15 @@ import graft.functions.GraftFunctions._
  */
 object Dedup {
 
-  /** The hot-key cap every fuzzy family applies before its self-join:
-    * rows of `keyed` whose `key` holds more than `cap` rows are dropped.
-    * Returns the cool rows and a one-row stats frame (n_buckets /
-    * n_bucket_rows / max_bucket / hot_buckets / dropped_rows), so a drop
-    * is metered, never silent — the same discipline as `Blocking.blockKeys`. */
-  private def dropHot(keyed: DataFrame, key: String, cap: Int): (DataFrame, DataFrame) = {
+  /** The text families' bucket-pair core. Rows of `keyed` (`id`, `key`
+    * and the `carry` columns) whose `key` holds more than `cap` rows are
+    * dropped; the rest are self-joined on `key` with `id_a < id_b`, each
+    * `carry` column `c` arriving as `c_a` / `c_b`. A pair appears once per
+    * shared bucket; the caller dedups. Returns the pairs and a one-row
+    * stats frame, so a drop is metered, never silent — the same discipline
+    * as `Blocking.blockKeys`. */
+  private[ops] def bucketPairs(keyed: DataFrame, key: String, cap: Int,
+                               carry: String*): (DataFrame, DataFrame) = {
     val sizes = keyed.groupBy(key).agg(count(lit(1)).as("n"))
     val hot = sizes.filter(col("n") > cap)
     val stats = sizes.agg(
@@ -35,7 +46,13 @@ object Dedup {
         .as("hot_buckets"),
       coalesce(sum(when(col("n") > cap, col("n")).otherwise(lit(0L))), lit(0L))
         .as("dropped_rows"))
-    (keyed.join(broadcast(hot), Seq(key), "left_anti"), stats)
+    val cool = keyed.join(broadcast(hot), Seq(key), "left_anti")
+    def side(s: String) = cool.select(
+      col(key) +: col("id").as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s")): _*)
+    val pairs = side("a").join(side("b"), key)
+      .filter(col("id_a") < col("id_b"))
+      .select(("id_a" +: "id_b" +: carry.flatMap(c => Seq(s"${c}_a", s"${c}_b"))).map(col): _*)
+    (pairs, stats)
   }
 
   /**
@@ -91,24 +108,18 @@ object Dedup {
     val bandKeys = (0 until bands).map { b =>
       xxhash64(lit(b + 1), xxhash64(slice(col("sig"), b * bandSize + 1, bandSize)))
     }
-    val (cool, stats) = dropHot(
+    val (bandPairs, stats) = bucketPairs(
       feats.select(col("id"), explode(array(bandKeys: _*)).as("bucket")), "bucket", maxBucket)
-    val a = cool.select(col("bucket"), col("id").as("id_a"))
-    val b = cool.select(col("bucket"), col("id").as("id_b"))
-    val cand = a.join(b, "bucket")
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct() // dedup band collisions BEFORE the expensive exact stage
+    val cand = bandPairs.distinct() // dedup band collisions BEFORE the expensive exact stage
     // exact stage joins PACKED token sets (delta+varint, ~2x fewer bytes
     // than raw long arrays — see Sim.packTokenHashes for the truncation
     // exactness math); jaccard values equal the 64-bit computation on any
     // corpus whose distinct-token universe is collision-free at 32 bits
     // (spec-gated for the generator vocabulary). Read from the one-pass
     // feature table — not a fresh text scan per join side.
-    val toks = feats.select(col("id"), col("tok"))
     val pairs = cand
-      .join(toks.select(col("id").as("id_a"), col("tok").as("tok_a")), "id_a")
-      .join(toks.select(col("id").as("id_b"), col("tok").as("tok_b")), "id_b")
+      .join(feats.select(col("id").as("id_a"), col("tok").as("tok_a")), "id_a")
+      .join(feats.select(col("id").as("id_b"), col("tok").as("tok_b")), "id_b")
       .select(col("id_a"), col("id_b"),
         packed_jaccard(col("tok_a"), col("tok_b")).as("jaccard"))
       .filter(col("jaccard") >= tau)
@@ -144,13 +155,8 @@ object Dedup {
         xxhash64(lit(b + 1),
           shiftright(col("fp"), b * 8).bitwiseAND(lit(0xffL)))): _*))
         .as("bucket"))
-    val (cool, stats) = dropHot(banded, "bucket", maxBucket)
-    val a = cool.select(col("bucket"), col("id").as("id_a"), col("fp").as("fp_a"))
-    val b = cool.select(col("bucket"), col("id").as("id_b"), col("fp").as("fp_b"))
-    val pairs = a.join(b, "bucket")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("fp_a"), col("fp_b"))
-      .distinct()
+    val (bandPairs, stats) = bucketPairs(banded, "bucket", maxBucket, "fp")
+    val pairs = bandPairs.distinct()
       .select(col("id_a"), col("id_b"),
         bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -197,14 +203,11 @@ object Dedup {
       .localCheckpoint()
     val buckets = prep.select(col("id"), col("grams"),
       explode(array(col("lenb"), col("lenb") + 1)).as("bucket"))
-    val (cool, stats) = dropHot(buckets, "bucket", maxBucket)
-    val a = cool.select(col("bucket"), col("id").as("id_a"), col("grams").as("g_a"))
-    val b = cool.select(col("bucket"), col("id").as("id_b"), col("grams").as("g_b"))
-    val pairs = a.join(b, "bucket")
-      .filter(col("id_a") < col("id_b"))
+    val (lenPairs, stats) = bucketPairs(buckets, "bucket", maxBucket, "grams")
+    val pairs = lenPairs
       .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("g_a"), col("g_b"))).cast("double") /
-          size(array_union(col("g_a"), col("g_b"))).cast("double")).as("jaccard"))
+        (size(array_intersect(col("grams_a"), col("grams_b"))).cast("double") /
+          size(array_union(col("grams_a"), col("grams_b"))).cast("double")).as("jaccard"))
       .distinct()
       .filter(col("jaccard") >= tau)
     (pairs, stats)
@@ -253,12 +256,8 @@ object Dedup {
     // the md5-per-window scan per plan branch (spills via MEMORY_AND_DISK)
     val fps = df.select(col(idCol).as("id"), explode(fpsArr).as("fp"))
       .localCheckpoint()
-    val (cool, stats) = dropHot(fps, "fp", maxDocsPerWindow)
-    val a = cool.select(col("fp"), col("id").as("id_a"))
-    val b = cool.select(col("fp"), col("id").as("id_b"))
-    val pairs = a.join(b, "fp")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
+    val (windowPairs, stats) = bucketPairs(fps, "fp", maxDocsPerWindow)
+    val pairs = windowPairs.groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("shared_windows"))
     (pairs, stats)
   }
@@ -298,31 +297,22 @@ object Dedup {
                       maxFlip: Int = 1, targetMiss: Double = 1e-5): DataFrame = {
     val t = if (tables > 0) tables
             else derivedTables(tau, bits, maxFlip, targetMiss)
-    val nMasks = (0L until (1L << bits)).count(m => java.lang.Long.bitCount(m) <= maxFlip)
+    val masks = Ann.flipMasks(bits, maxFlip)
     System.err.println(s"[dedup] embeddingCosine tau=$tau bits=$bits " +
-      s"maxFlip=$maxFlip tables=$t keysPerVector=${t + t * nMasks} " +
-      s"(exact=${t} + probe=${t * nMasks})")
+      s"maxFlip=$maxFlip tables=$t keysPerVector=${t + t * masks.size} " +
+      s"(exact=${t} + probe=${t * masks.size})")
     val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val masks = (0L until (1L << bits)).filter(m => java.lang.Long.bitCount(m) <= maxFlip)
     // Each table's code is computed ONCE per row and in ONE compiled pass
-    // (sign_codes — bit-identical to the per-table signBucket array, whose
-    // HOF expansion interpreted tables·bits array walks per row), then
-    // cheap hash keys fan out from the precomputed code array — never
-    // recompute the hyperplane aggregates per probe mask. The slim
+    // (sign_codes), then cheap hash keys fan out from the precomputed code
+    // array — never recompute the hyperplane sums per probe mask. The slim
     // (id, codes) table is materialized eagerly so both probe sides read it
     // instead of re-scanning the vectors per plan branch.
     val coded = base.select(col("id"), sign_codes(col("v"), bits, t).as("codes"))
       .localCheckpoint()
     // side A: exact code per table; side B: all codes within maxFlip flips.
     // Slim key stream: (id, bucket) only — vectors stay in the scan stage.
-    val a = coded
-      .select(col("id").as("id_a"), posexplode(col("codes")).as(Seq("tb", "code")))
-      .select(col("id_a"), xxhash64(col("tb"), col("code")).as("bucket"))
-    val maskArr = array(masks.map(lit): _*)
-    val b = coded
-      .select(col("id").as("id_b"), posexplode(col("codes")).as(Seq("tb", "code")))
-      .select(col("id_b"), explode(transform(maskArr,
-        m => xxhash64(col("tb"), col("code").bitwiseXOR(m)))).as("bucket"))
+    val a = Ann.exactBuckets(coded, col("id").as("id_a"))
+    val b = Ann.probeBuckets(coded, masks, col("id").as("id_b"))
     val cand = a.join(b, "bucket")
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.blocking.Blocking
@@ -48,7 +48,6 @@ object EntityResolution {
       wJaroWinkler: Double = 0.35,
       wTokenJaccard: Double = 0.50,
       wLevenshtein: Double = 0.15,
-      titleTokens: Int = 8,
       // token-hash truncation width for the packed token sets (the widest
       // per-record stage payload): 32 cuts records-table and funnel-join
       // bytes ~2x vs raw 64-bit long arrays; per-pair jaccard perturbation
@@ -87,12 +86,20 @@ object EntityResolution {
     * subset argument. Dirs are excluded (they don't affect results). */
   private def configSig(cfg: Config): String =
     s"blocking=${cfg.blocking};tau=${cfg.tau};wJW=${cfg.wJaroWinkler};" +
-      s"wTJ=${cfg.wTokenJaccard};wLev=${cfg.wLevenshtein};" +
-      s"titleTokens=${cfg.titleTokens};tokenBits=${cfg.tokenBits}" +
+      s"wTJ=${cfg.wTokenJaccard};wLev=${cfg.wLevenshtein};tokenBits=${cfg.tokenBits}" +
       // idBits entered the signature with its 64 default; older state dirs
       // (no suffix) therefore mean 64 — only a non-default width is stamped,
       // so existing incremental chains keep folding without a re-resolve
       (if (cfg.idBits != 64) s";idBits=${cfg.idBits}" else "")
+
+  /** The `auditIds` check: one distinct-count pass that aborts on an id
+    * collision rather than silently merging two records. */
+  private def requireIdsUnique(records: DataFrame): Unit = {
+    val r = records.agg(countDistinct(col("id")).as("ids"),
+      countDistinct(col("url")).as("urls")).head()
+    require(r.getLong(0) == r.getLong(1),
+      s"record-id hash collision: ${r.getLong(1)} urls → ${r.getLong(0)} ids")
+  }
 
   private val workCounter = new java.util.concurrent.atomic.AtomicInteger()
   private def freshWorkDir(): String = {
@@ -107,17 +114,17 @@ object EntityResolution {
    * semantic normalization (EMAIL_ADDRESS / NAME / DATE types,
    * lib/entity-resolution-service.ts:54-138). Text is re-extracted from the
    * raw html bytes (deterministic, byte-identical per url); all derived
-   * fields are pure functions of row content. `id` is the 64-bit dictionary
-   * encoding of the record key used by every downstream shuffle.
+   * fields are pure functions of row content; the title is the first 8
+   * tokens of the normalized text.
+   *
+   * `id` is the dictionary encoding of the record key used by every
+   * downstream shuffle, `idBits` wide: 64 → xxhash64(url) long (the
+   * default), 128 → two independent xxhash64 halves packed big-endian into
+   * a 16-byte binary (collision-safe at 10¹² records). Everything
+   * downstream — blocking, funnel joins, clustering min/least, the url
+   * re-attach — is id-type-agnostic, so the only difference is the bytes
+   * each shuffle key carries.
    */
-  def normalize(pages: DataFrame): DataFrame = normalize(pages, idBits = 64)
-
-  /** [[normalize]] with a chosen record-id width: 64 → xxhash64(url) long
-    * (default), 128 → two independent xxhash64 halves packed big-endian into
-    * a 16-byte binary (collision-safe at 10¹² records). Everything
-    * downstream — blocking, funnel joins, clustering min/least, the url
-    * re-attach — is id-type-agnostic, so the only difference is the bytes
-    * each shuffle key carries. */
   def normalize(pages: DataFrame, idBits: Int): DataFrame = {
     require(idBits == 64 || idBits == 128, s"idBits must be 64 or 128, got $idBits")
     val id =
@@ -177,19 +184,10 @@ object EntityResolution {
   private[graft] def dedupPairs(raw: DataFrame): DataFrame =
     raw.repartition(col("main_id")).dropDuplicates("main_id", "sub_id")
 
-  /** Ensemble score ∈ [0,1] for a pair of normalized records. */
-  def scoreExpr(cfg: Config,
-                titleA: Column, textA: Column,
-                titleB: Column, textB: Column): Column = {
-    val jw = jaro_winkler(titleA, titleB)
-    val tj = token_jaccard(textA, textB)
-    val lev = lit(1.0) - levenshtein(titleA, titleB).cast("double") /
-      greatest(length(titleA), length(titleB), lit(1)).cast("double")
-    lit(cfg.wJaroWinkler) * jw + lit(cfg.wTokenJaccard) * tj + lit(cfg.wLevenshtein) * lev
-  }
-
   /**
-   * Score candidate pairs; returns (main_id, sub_id, score).
+   * Score candidate pairs; returns (main_id, sub_id, score). `records` are
+   * normalized records carrying the packed token set `tok` and its size
+   * `n_tok` ([[normalizeWithSig]]).
    *
    * Two-stage funnel (the scale-critical design point): candidate pairs
    * first join only LIGHT per-record features (short normalized title +
@@ -204,13 +202,9 @@ object EntityResolution {
    * instead of ~2.5 KB raw text) for the exact jaccard term.
    */
   def scorePairs(pairs: DataFrame, records: DataFrame, cfg: Config): DataFrame = {
-    val withTok = if (records.columns.contains("tok")) records
-      else records
-        .withColumn("tok", pack_tokens(col("text_norm"), cfg.tokenBits))
-        .withColumn("n_tok", packed_count(col("tok")))
-    val lightA = withTok.select(col("id").as("main_id"),
+    val lightA = records.select(col("id").as("main_id"),
       col("title_norm").as("title_a"), col("n_tok").as("n_a"))
-    val lightB = withTok.select(col("id").as("sub_id"),
+    val lightB = records.select(col("id").as("sub_id"),
       col("title_norm").as("title_b"), col("n_tok").as("n_b"))
     val tjBound = when(col("n_a") === 0 && col("n_b") === 0, lit(1.0)) // tj(∅,∅)=1
       .otherwise(least(col("n_a"), col("n_b")).cast("double") /
@@ -241,8 +235,8 @@ object EntityResolution {
     // distribution, preserved through filter/project — so joining tok_b
     // FIRST reuses it exchange-free and only the tok_a join re-shuffles the
     // (small, post-filter) survivor stream.
-    val tokA = withTok.select(col("id").as("main_id"), col("tok").as("tok_a"))
-    val tokB = withTok.select(col("id").as("sub_id"), col("tok").as("tok_b"))
+    val tokA = records.select(col("id").as("main_id"), col("tok").as("tok_a"))
+    val tokB = records.select(col("id").as("sub_id"), col("tok").as("tok_b"))
     pre.join(tokB, "sub_id").join(tokA, "main_id")
       .select(col("main_id"), col("sub_id"),
         (lit(cfg.wJaroWinkler) * col("jw") +
@@ -278,16 +272,11 @@ object EntityResolution {
       .select("id", "url", "source", "warc_ts", "lang", "title_norm",
         "domain_key", "sort_key", "sig", "tok", "n_tok")
       .write.mode("overwrite").parquet(recPath)
-    writeRecordsList(work, Seq(recPath))
+    writeManifest(work, "records.list", Seq(recPath))
     writeConfigSig(work, cfg)
     val records = spark.read.parquet(recPath)
 
-    if (auditIds) {
-      val r = records.agg(countDistinct(col("id")).as("ids"),
-        countDistinct(col("url")).as("urls")).head()
-      require(r.getLong(0) == r.getLong(1),
-        s"record-id hash collision: ${r.getLong(1)} urls → ${r.getLong(0)} ids")
-    }
+    if (auditIds) requireIdsUnique(records)
 
     // keys are consumed by BOTH sides of the pair self-join (and by the
     // stats/metrics surface); materializing them turns the deep
@@ -355,10 +344,10 @@ object EntityResolution {
    *     global block sizes, and the count tables carry them, so only the
    *     batch and the blocks it pushes across a size class are touched.
    *   - candidate PAIRS are generated only where ≥1 side is new
-   *     ([[Blocking.candidatePairsInvolving]]); the sorted-neighborhood pass
-   *     runs only over buckets containing a new record. Old×old candidates
-   *     were scored by the prior run; scoring is a pure function of row
-   *     content, so their edges are reused verbatim.
+   *     ([[Blocking.candidatePairsInvolvingRaw]]); the sorted-neighborhood
+   *     pass runs only over buckets containing a new record. Old×old
+   *     candidates were scored by the prior run; scoring is a pure function
+   *     of row content, so their edges are reused verbatim.
    *   - SCORING — the dominant cost — runs only on the new-involving pairs.
    *   - CLUSTERING runs on new edges ∪ the prior component forest's star
    *     edges (node→component): the stars are exactly the transitive closure
@@ -391,16 +380,7 @@ object EntityResolution {
         "identical config; run a full re-resolve instead")
 
     val oldPaths = readManifest(priorWorkDir, "records.list")
-    // the manifest chains across all prior state dirs (immutable files are
-    // never copied forward) — fail with a clear chain-broken error instead
-    // of a deep parquet path-not-found if an earlier dir was deleted or
-    // partially vacuumed (dir kept, part files gone — hence BOTH checks)
-    val missing = oldPaths.filterNot(p =>
-      new java.io.File(p).isDirectory && new java.io.File(p, "_SUCCESS").exists())
-    require(missing.isEmpty,
-      s"records manifest chain broken — prior state files missing: " +
-        s"${missing.mkString(", ")} (earlier incremental state dirs must " +
-        "outlive the table; copy them forward before vacuuming)")
+    requireChainIntact("records", oldPaths)
     val oldRecords = spark.read.parquet(oldPaths: _*)
     val oldEdges = spark.read.parquet(s"$priorWorkDir/edges.parquet")
     val oldComponents = spark.read.parquet(s"$priorWorkDir/components.parquet")
@@ -443,12 +423,7 @@ object EntityResolution {
         "— blind append would duplicate RecordId rows")
     val records = spark.read.parquet((oldPaths :+ newRecPath): _*)
     val newIds = newRecords.select(col("id"))
-    if (auditIds) {
-      val r = records.agg(countDistinct(col("id")).as("ids"),
-        countDistinct(col("url")).as("urls")).head()
-      require(r.getLong(0) == r.getLong(1),
-        s"record-id hash collision: ${r.getLong(1)} urls → ${r.getLong(0)} ids")
-    }
+    if (auditIds) requireIdsUnique(records)
 
     // ---- keys + affected-record detection: the reason `incremental ≡ full
     // re-resolve` holds UNCONDITIONALLY, not just while no block crosses a
@@ -502,15 +477,9 @@ object EntityResolution {
         ckpt
       }
       // prior keys = the manifest chain's assembly (a base resolve dir is a
-      // one-file chain); validate like the records manifest — a vanished
-      // chain file must fail loudly, not as a deep parquet error
+      // one-file chain), validated like the records manifest
       val (priorKeyPaths, priorTombPaths) = readKeysChain(priorWorkDir)
-      val chainMissing = (priorKeyPaths ++ priorTombPaths).filterNot(p =>
-        new java.io.File(p).isDirectory && new java.io.File(p, "_SUCCESS").exists())
-      require(chainMissing.isEmpty,
-        s"keys manifest chain broken — prior state files missing: " +
-          s"${chainMissing.mkString(", ")} (earlier incremental state dirs " +
-          "must outlive the table; copy them forward before vacuuming)")
+      requireChainIntact("keys", priorKeyPaths ++ priorTombPaths)
       val (keysAll, stats, changedOldIds) = Blocking.mergeBlockKeys(
         assembleKeys(spark, priorKeyPaths, priorTombPaths),
         spark.read.parquet(s"$priorWorkDir/raw_counts.parquet"),
@@ -698,7 +667,7 @@ object EntityResolution {
     // manifests last (keys.list last of all): a fold that throws anywhere
     // above leaves none in `work`, so that dir is refused as prior state
     // instead of misread
-    writeRecordsList(work, oldPaths :+ newRecPath)
+    writeManifest(work, "records.list", oldPaths :+ newRecPath)
     writeConfigSig(work, cfg)
     writeKeysChain(work, keyPaths, tombPaths)
 
@@ -707,15 +676,6 @@ object EntityResolution {
     Result(integrated, scored, attachUrls(edges, urlDim),
       attachUrls(pairs, urlDim), keys, blockStats)
   }
-
-  /** Records-table manifest: one absolute parquet path per line. resolve()
-    * writes a single entry; each incremental batch appends its new-records
-    * path, so prior record files are immutable (Iceberg append semantics —
-    * the chain of state dirs must outlive the table). */
-  private def writeRecordsList(work: String, paths: Seq[String]): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(work, "records.list"),
-      paths.map(absolutize).mkString("\n"))
 
   /** Chain manifests must survive a CWD change: a relative workDir written
     * verbatim would make every later fold CWD-dependent (the earlier dirs
@@ -730,10 +690,31 @@ object EntityResolution {
   private def readConfigSig(work: String): String =
     java.nio.file.Files.readString(java.nio.file.Paths.get(work, "config.sig"))
 
-  /** A path manifest (`records.list`, `keys.list`, `tombstones.list`). */
+  /** A path manifest: one absolute parquet path per line. `records.list`:
+    * resolve() writes a single entry; each incremental batch appends its
+    * new-records path, so prior record files are immutable (Iceberg append
+    * semantics — the chain of state dirs must outlive the table).
+    * `keys.list` / `tombstones.list`: see [[writeKeysChain]]. */
+  private def writeManifest(work: String, name: String, paths: Seq[String]): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(work, name),
+      paths.map(absolutize).mkString("\n"))
+
   private def readManifest(work: String, name: String): Seq[String] =
     java.nio.file.Files.readString(java.nio.file.Paths.get(work, name))
       .split("\n").toSeq.filter(_.nonEmpty)
+
+  /** A manifest chains across all prior state dirs (immutable files are
+    * never copied forward): fail with a clear chain-broken error instead of
+    * a deep parquet path-not-found if an earlier dir was deleted or
+    * partially vacuumed (dir kept, part files gone — hence BOTH checks). */
+  private def requireChainIntact(manifest: String, paths: Seq[String]): Unit = {
+    val missing = paths.filterNot(p =>
+      new java.io.File(p).isDirectory && new java.io.File(p, "_SUCCESS").exists())
+    require(missing.isEmpty,
+      s"$manifest manifest chain broken — prior state files missing: " +
+        s"${missing.mkString(", ")} (earlier incremental state dirs must " +
+        "outlive the table; copy them forward before vacuuming)")
+  }
 
   /** Keys-table manifest chain: `keys.list` holds the delta file paths
     * whose union, minus the block keys in the `tombstones.list` files,
@@ -750,12 +731,8 @@ object EntityResolution {
     // the tombstones silently missing — that would resurrect every
     // tombstoned (crossed/newly-hot) key row and diverge from a full
     // re-resolve without any error.
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(work, "tombstones.list"),
-      tombPaths.map(absolutize).mkString("\n"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(work, "keys.list"),
-      keyPaths.map(absolutize).mkString("\n"))
+    writeManifest(work, "tombstones.list", tombPaths)
+    writeManifest(work, "keys.list", keyPaths)
   }
 
   private def readKeysChain(work: String): (Seq[String], Seq[String]) = {

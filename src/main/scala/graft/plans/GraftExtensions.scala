@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.{JaroWinklerExpr, TokenJaccardExpr, TokenJaccardSortedExpr}
+import graft.functions.{JaroWinklerExpr, TokenJaccardExpr}
 
 /**
  * Optimizer rule: similarity of an expression with itself is 1.0 — fold it
@@ -26,7 +26,6 @@ object SimilaritySelfCompareFold extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
     case JaroWinklerExpr(a, b) if a.deterministic && a.semanticEquals(b) => fold(a)
     case TokenJaccardExpr(a, b) if a.deterministic && a.semanticEquals(b) => fold(a)
-    case TokenJaccardSortedExpr(a, b) if a.deterministic && a.semanticEquals(b) => fold(a)
   }
 }
 

@@ -1,14 +1,15 @@
 package graft.tools
 
 /** Dev tool: dump formatted physical plans for plan-quality review
-  * (pushdown, broadcast choice, codegen spans). */
+  * (pushdown, broadcast choice, codegen spans).
+  * Usage: `ExplainProbe <sf-dir> <query-name>...` */
 object ExplainProbe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.create(8, "graft-explain")
-    val sf = "/root/testdata/sf0.001"
-    for (name <- args) {
+    require(args.length >= 2, "usage: ExplainProbe <sf-dir> <query-name>...")
+    val spark = graft.GraftSession.create(Runtime.getRuntime.availableProcessors, "graft-explain")
+    for (name <- args.tail) {
       println(s"========== $name ==========")
-      graft.SparkEntry.queries(name)(spark, sf).explain("formatted")
+      graft.SparkEntry.queries(name)(spark, args.head).explain("formatted")
     }
     spark.stop()
   }

@@ -102,6 +102,42 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("near-duplicate candidate operators: exchange count per family, AQE off") {
+    // Baseline pins for the candidate chains (Dedup.bucketPairs for the
+    // text families, the shared sign-LSH bucket builders for the vector
+    // ones): a rewrite of either chain must move its rows down, never up.
+    // Counts are exchange nodes in the plan tree; reused exchanges and the
+    // eager feature checkpoints' own jobs are not in it.
+    import graft.ops.{Ann, Dedup}
+    noBroadcast {
+      val prev = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val docs = testgen.WebCorpus.pages(spark, 30).toDF()
+          .select(col("url").as("doc"), col("text"))
+        val vecs = (0 until 40).map(i => (i.toLong,
+          Array.tabulate(8)(j => ((i * 7 + j * 3) % 11 - 5).toFloat)))
+          .toDF("vec_id", "embedding")
+        val queries = vecs.filter(col("vec_id") < 3)
+          .select(col("vec_id").as("query_id"), col("embedding"))
+        val pinned = Seq[(String, Int, () => DataFrame)](
+          ("minhashLsh", 6, () => Dedup.minhashLsh(docs, "text", "doc")),
+          ("simhash", 3, () => Dedup.simhash(docs, "text", "doc")),
+          ("ngramJaccard", 3, () => Dedup.ngramJaccard(docs, "text", "doc")),
+          ("windowFingerprint", 3, () => Dedup.windowFingerprint(docs, "text", "doc")),
+          ("embeddingCosine", 6, () => Dedup.embeddingCosine(vecs, "embedding", "vec_id")),
+          ("lshTopK", 2, () => Ann.lshTopK(vecs, queries, k = 5)))
+        val wrong = pinned.flatMap { case (name, want, build) =>
+          val df = build()
+          val got = shuffles(df)
+          if (got == want) None
+          else Some(s"$name: $got exchanges, pinned $want\n${df.queryExecution.executedPlan}")
+        }
+        assert(wrong.isEmpty, wrong.mkString("\n"))
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
+  }
+
   test("integrated shape: window over cid adds exactly one stream exchange after the id joins") {
     noBroadcast {
       val recs = Seq((1L, "u1"), (2L, "u2")).toDF("id", "url")
