@@ -11,8 +11,23 @@ import org.apache.spark.sql.SparkSession
   * N-vs-4N scaling comparison and — on a real cluster — causing spills. A
   * floor of 64 keeps per-task working sets small and lets AQE coalesce
   * upward from abundance (`parallelismFirst` keeps at least one partition
-  * per core). */
+  * per core).
+  *
+  * Spark's generated-code cache is sized to hold the engine's working set
+  * ([[CodegenCacheEntries]]). The entry is a static conf that `CodeGenerator`
+  * reads once per JVM, when it first compiles: only the session that compiles
+  * first sizes it, so every session that runs engine code (this factory,
+  * `graft.Verify`, the test session) sets the same constant. */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries`. Spark's default, 100, is smaller
+    * than the distinct generated classes one op cycles through, so an LRU
+    * cache never hit and every repeated op recompiled (and HotSpot re-JITted)
+    * nearly all of them. Measured working sets (`perfbench`, 4 cores): a
+    * resolve op 142 classes, a `dedup_sql` pass 213–215, an incremental fold
+    * 346; 1000 holds their sum (703) with headroom. Cached classes live in
+    * metaspace. */
+  val CodegenCacheEntries = 1000
+
   def create(cpus: Int, appName: String = "graft"): SparkSession = {
     // honor an externally-provided master (spark-submit to a real cluster);
     // `cpus` then only sizes shuffle partitions
@@ -34,6 +49,7 @@ object GraftSession {
       .config("spark.sql.files.minPartitionNum", (4 * cpus).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
     // tmpfs shuffle dir: opt-out via SPARK_GRAFT_TMPFS=0; only when /dev/shm
     // has real headroom (shuffle spill on RAM-backed tmpfs can starve a
     // general host); per-process suffix avoids cross-session collisions

@@ -141,7 +141,10 @@ object Blocking {
     * writes (spec-asserted): keys/raw_counts are the same operator trees cut
     * at durable boundaries; sizes2 is derived from raw_counts plus the
     * re-keyed minority via the disjoint-keyspace invariant ([[rawKeys]]) —
-    * measured 2.74 → 1.8 task-s and 22.7 → 2.9 MB shuffle at 450 k pages. */
+    * measured 2.74 → 1.8 task-s and 22.7 → 2.9 MB shuffle at 450 k pages.
+    * The still-hot gate (rename keyed_all, or anti-join the still-hot keys)
+    * reads an observed count on the sizes2 write itself: one job, on the
+    * calling thread, with no separate gate job or writer thread. */
   def writeBlockTables(records: DataFrame, dir: String, cfg: Config): Unit = {
     val spark = records.sparkSession
     val raw = rawKeys(records, cfg)
@@ -163,37 +166,22 @@ object Blocking {
       .filter(col("n") <= cfg.maxBlock)
       .unionByName(keyed.filter(col("block_key") < 0)
         .groupBy("block_key").agg(count(lit(1)).as("n")))
-    // The still-hot gate only needs the sizes2 CONTENT, not the file: when
-    // idle cores exist (any real cluster; not local[1], where two
-    // concurrent jobs would share one core and the lineage recompute is
-    // pure extra work), the cheap gate job runs WHILE the durable sizes2
-    // write encodes+commits (guide §2.6 — overlap independent jobs); the
-    // write is joined before anything reads the file.
-    val overlap = spark.sparkContext.defaultParallelism >= 4
-    val sizes2Write: Option[java.util.concurrent.Future[_]] = if (overlap) {
-      val pool = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-        val t = new Thread(r, "graft-sizes2-write"); t.setDaemon(true); t
-      })
-      val f = pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit =
-          sizes2df.write.mode("overwrite").parquet(s"$dir/sizes2.parquet")
-      })
-      pool.shutdown()
-      Some(f)
-    } else {
-      sizes2df.write.mode("overwrite").parquet(s"$dir/sizes2.parquet")
-      None
-    }
-    // overlapped: gate from the (cheap columnar) lineage while the write
-    // runs; serial: the file already exists and reading it is cheaper than
-    // recomputing the union+agg
-    val stillHotIsEmpty =
-      if (overlap) sizes2df.filter(col("n") > cfg.maxBlock * 4L).isEmpty
-      else spark.read.parquet(s"$dir/sizes2.parquet")
-        .filter(col("n") > cfg.maxBlock * 4L).isEmpty
-    sizes2Write.foreach(_.get()) // propagate any write failure
+    // The still-hot gate rides the sizes2 write as an observed count: no
+    // second job re-derives sizes2 for it, and no `isEmpty` plan, whose
+    // LocalLimit is named from a JVM-wide counter and so is new generated
+    // code on every call, misses the codegen cache.
+    val gate = new org.apache.spark.sql.Observation()
+    sizes2df.observe(gate, count(when(col("n") > cfg.maxBlock * 4L, 1)).as("still_hot"))
+      .write.mode("overwrite").parquet(s"$dir/sizes2.parquet")
     val stillHot = spark.read.parquet(s"$dir/sizes2.parquet")
       .filter(col("n") > cfg.maxBlock * 4L)
+    // the observation arrives via the (async) execution-listener bus;
+    // bounded wait, with a read of the written file as a never-wrong fallback
+    val stillHotIsEmpty = try {
+      val row = scala.concurrent.Await.result(gate.future,
+        scala.concurrent.duration.Duration(10, "s"))
+      row.getLong(row.fieldIndex("still_hot")) == 0L
+    } catch { case _: java.util.concurrent.TimeoutException => stillHot.isEmpty }
     val keysFile = new java.io.File(s"$dir/keys.parquet")
     if (stillHotIsEmpty) {
       // nothing to drop: keys == keyed_all row-for-row — promote the scratch

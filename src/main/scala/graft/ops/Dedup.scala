@@ -285,7 +285,8 @@ object Dedup {
    * Scale shape: ONLY (id, 8-byte bucket) rows flow through the bucket
    * join — vectors are joined back AFTER the candidate pairs are
    * `distinct`ed, so each surviving pair moves each vector once (the same
-   * de-fat discipline as [[minhashLsh]]). The derived budget is logged.
+   * de-fat discipline as [[minhashLsh]]). The derived table budget is
+   * [[derivedTables]]; each vector emits `tables × (1 + probe masks)` keys.
    *
    * NOTE a low τ (≲ 0.6) is intrinsically hostile to sign-LSH: p(τ) is
    * close to the random-pair p = 0.5, so ANY family needs near-all-pairs
@@ -298,9 +299,6 @@ object Dedup {
     val t = if (tables > 0) tables
             else derivedTables(tau, bits, maxFlip, targetMiss)
     val masks = Ann.flipMasks(bits, maxFlip)
-    System.err.println(s"[dedup] embeddingCosine tau=$tau bits=$bits " +
-      s"maxFlip=$maxFlip tables=$t keysPerVector=${t + t * masks.size} " +
-      s"(exact=${t} + probe=${t * masks.size})")
     val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     // Each table's code is computed ONCE per row and in ONE compiled pass
     // (sign_codes), then cheap hash keys fan out from the precomputed code

@@ -13,6 +13,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.memory", "6g")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toLong)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
