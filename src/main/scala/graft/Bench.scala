@@ -1,221 +1,60 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.Locale
+import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+
+import graft.pipeline.EntityResolution
 import graft.testgen.WebCorpus
 
 /**
- * Benchmark harness. Two measurements:
+ * Benchmark driver (`runMain graft.Bench`). Three stages; after each one a
+ * complete strict-JSON line is printed and flushed on stdout, so a run cut
+ * short still delivers what it measured. The last line carries all three.
  *
- *  1. Headline query timings on SPARK_GRAFT_SF_DIR at SPARK_GRAFT_CPUS.
- *     A complete JSON line is printed (and flushed) IMMEDIATELY after the
- *     headline loop — a timeout later in the scale protocol still delivers
- *     the per-query numbers. The final (last) line repeats the headline
- *     numbers plus the scaling + incremental sections.
+ *  1. `headline`: the 7 headline queries on SPARK_GRAFT_SF_DIR at
+ *     SPARK_GRAFT_CPUS cores (default: every core of the host), best of 2
+ *     passes after a warm-up.
+ *  2. `scalingPair`: the full ER pipeline over one materialized corpus at
+ *     local[4N], then local[N], N = nproc / 4, in this JVM. Each level gets a
+ *     fresh session that is fully stopped afterwards, so executor pools,
+ *     shuffle state and session caches are per level. One warm-up resolve
+ *     runs before the first level; JIT and codegen warmth are shared, which
+ *     can only speed up the N side, so the reported efficiency is
+ *     conservative. Bracketing /proc/stat reads give each level's steal.
+ *  3. `incremental`: a full re-resolve against `resolveIncremental` of a 4%
+ *     batch folded into the other 96%, on the pair's corpus, after an
+ *     untimed resolve and fold of the warm-up corpus.
  *
- *  2. The north-rule scaling experiment: the full ER pipeline over the SAME
- *     materialized corpus at local[1] vs local[4] (primary N vs 4N pair —
- *     the driver's instruction allows "N and 4N cores"; this pair sits in
- *     the host's measured linear region, see BENCH/BASELINE.md) plus
- *     local[32] as the throughput point. A pair runs as ONE child JVM
- *     with a fresh fully-stopped local[N] session per level (fixed JVM
- *     cost — pre-touch, JIT, probes — paid once per pair; see
- *     ScaleRunner's fidelity notes: the sharing direction makes the
- *     reported efficiency conservative) — the stand-in for
- *     separately-provisioned clusters of N and 4N executors.
- *
- * Budget ladder (SPARK_GRAFT_BENCH_BUDGET_SEC, default 1000 s), ordered
- * most-informative-first per unit cost: first (32, 4N, N) suite — the
- * north-rule pair plus the local[32] throughput point in one child JVM —
- * → incremental-fold probe → (quiet-red pair: bigger-corpus 1v4 upgrade —
- * the gate artifact — before anything else) → local[32] fallback (only if
- * the suite lost its 32 level) → steal-poisoned pair retries →
- * poisoned-path 1v4 upgrade → 2→8 secondary pair (before the re-roll —
- * the one rung r4 never delivered) → gated headline re-roll (repairs a
- * noisy-start window's per-query numbers, min-folded).
- * Retries spend only LEFTOVER budget (round 3
- * spent its whole budget re-rolling a bad window and delivered neither the
- * throughput point nor the incremental probe) and fire ONLY when the
- * measured steal says interference, not amortization, explains a red pair —
- * re-rolling a quiet-window measurement cannot change it, while the 5x
- * corpus can. A complete JSON line is emitted and flushed after every
- * ladder stage, so a timeout anywhere loses nothing already measured.
+ * Host sizing ([[HostPlan.of]]): the pair needs 4N ≤ nproc, so a host with
+ * fewer than 4 cores reports `er_scaling` as null with `er_scaling_absent`
+ * saying why. The corpus is min(25 000 · nproc, 16 000 · heap GiB) entities
+ * (about 1.5 pages each), rounded down to a thousand, at least 2 000: per
+ * core enough work that a level's fixed cost (job scheduling, CC barriers)
+ * is a minor share of its wall, per GiB of `Runtime.maxMemory` little
+ * enough that the incremental stage's resolves fit the heap. On 4 cores
+ * with `-Xmx7g`: 100 000 entities, about 150 000 pages. The per-GiB bound
+ * is conservative: on 4 cores the peak heap after a collection (G1 log,
+ * no full GC) read 0.85 GiB at `-Xmx2g` (32 000 entities), 1.0 GiB at
+ * `-Xmx3g` (48 000) and 1.4 GiB at `-Xmx7g` (100 000), in the incremental
+ * stage each time.
  */
 object Bench {
 
   private val t0Wall = System.nanoTime()
   private def elapsed: Double = (System.nanoTime() - t0Wall) / 1e9
-  private val budgetSec =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1000").toDouble
-  // hard wall cap per scale child: a child that entered a quiet-gated window
-  // can still balloon 5-6x if the window turns mid-run (measured: a 140 s
-  // child taking 747 s) — better to lose that attempt than the whole ladder
-  private val childCapSec =
-    sys.env.getOrElse("SPARK_GRAFT_CHILD_TIMEOUT_SEC", "700").toLong
 
   private def session(cpus: Int): SparkSession =
     GraftSession.create(cpus, s"graft-bench-$cpus")
 
-  /** Materialize the seeded corpus once (page-cache-resident input parquet),
-    * so measured runs time the PIPELINE, not the generator. Records the
-    * measured entities/sec generation pace (when a write actually ran) so
-    * later lazy tiers (XL) can be budgeted from DATA, not a constant. */
-  private def materializeCorpus(spark: SparkSession, nEntities: Long): String = {
-    val path = s"/tmp/graft-bench-corpus-$nEntities"
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      val t0 = System.nanoTime()
-      WebCorpus.pages(spark, nEntities).toDF()
-        .write.mode("overwrite").parquet(path)
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (sec > 5) matPaceEntsPerSec = Some(nEntities / sec)
-    }
-    path
-  }
-
-  /** Measured corpus-generation pace (entities/sec) from the most recent
-    * non-trivial materialization this run; None when every tier was cached. */
-  private var matPaceEntsPerSec: Option[Double] = None
-
-  /** Run ScaleRunner in a child JVM with one or more core-count levels
-    * (one JVM per SUITE, not per level: the child's fixed cost — JVM init,
-    * pre-touch, JIT/codegen warmup, probes — measured 100 s quiet and up to
-    * 550 s contended, so paying it once per pair instead of once per level
-    * is the difference between the ladder fitting the budget and not).
-    * Parses one `[scale]` line per completed level — a wall-capped child
-    * still delivers the levels it finished. The JVM is sized (heap, GC
-    * threads) for the LARGEST level. `smallHeap` halves the pre-touched
-    * heap for the ladder's reduced corpora; `wallBudget` is passed to the
-    * child, which skips remaining levels rather than blow the parent cap. */
-  private def spawnScaleSuite(levels: Seq[Int], corpus: String,
-                              warmCorpus: String, smallHeap: Boolean,
-                              wallBudget: Double): Map[Int, ScaleResult] = {
-    val cpus = levels.max
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    // Children DO pre-touch (measured: without it, lazy heap faulting lands
-    // inside ParallelGC pauses — 132 s of 15 s young collections at 4 GC
-    // threads vs 3–4 s pre-touched). At child heap sizes (16–24 g) the
-    // pre-touch is tens of seconds of startup, paid once per level OUTSIDE
-    // the measured section — unlike the round-2 failure mode, which was the
-    // 24 g pre-touch on the sbt-forked Verify/Bench JVMs themselves.
-    val mem = sys.env.getOrElse("SPARK_GRAFT_SCALE_MEM",
-      if (cpus >= 32) { if (smallHeap) "16g" else "24g" }
-      else if (smallHeap) "8g" else "16g")
-    // Stage-table writes (records/edges/components parquet) go to tmpfs when
-    // available: the measured levels share ONE ~150 MB/s host disk, while N
-    // and 4N executor clusters each bring their own disks — shared-disk IO
-    // in the measured section would be a single-machine artifact in the
-    // ratio. ScaleRunner deletes the dir at exit.
-    val shm = new java.io.File("/dev/shm")
-    val shmDir = s"/dev/shm/graft-scale-${levels.mkString("-")}"
-    val tmpdir =
-      if (shm.isDirectory && shm.canWrite && shm.getUsableSpace > (24L << 30)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(shmDir))
-        Seq(s"-Djava.io.tmpdir=$shmDir")
-      } else Seq.empty
-    // G1, not ParallelGC: measured on this host/kernel, ParallelGC worker
-    // threads spin ~100% CPU outside collections (443 s of thread CPU vs
-    // 4 s of actual collection work in one child), polluting every core and
-    // even the pure-CPU calibration probe (2x slower). G1 shows gcSec ~3 s
-    // on the same run with no spin. GC threads stay ∝ cores — the
-    // per-executor GC resource a real N vs 4N cluster would have.
-    val cmd = Seq(javaBin) ++ addOpens ++ tmpdir ++ Seq(
-      s"-Xmx$mem", s"-Xms$mem", "-XX:+UseG1GC",
-      "-XX:+AlwaysPreTouch",
-      s"-XX:ParallelGCThreads=${math.max(2, cpus)}",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.tools.ScaleRunner", levels.mkString(","), corpus, warmCorpus,
-      f"$wallBudget%.0f")
-    // the child self-limits against wallBudget (skipping unstarted levels);
-    // the hard parent cap only catches a level that balloons MID-measurement
-    // the third bound is a GLOBAL deadline: a late secondary stage whose
-    // window turns mid-measurement must never push the whole Bench past
-    // budget+~90 s — an external (driver-side) kill loses every staged JSON
-    // line, while killing the child here loses only the unfinished level
-    // (completed [scale] lines are kept, stage() isolates the fallout)
-    val capSec = math.min(math.min(childCapSec.toDouble * levels.size, wallBudget + 120),
-      math.max(60.0, budgetSec - elapsed + 60)).toLong
-    try {
-      val t0 = System.nanoTime()
-      val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-      // drain stdout on a reader thread so waitFor can enforce the wall cap
-      // without the pipe buffer deadlocking the child
-      val outBuf = new java.io.ByteArrayOutputStream()
-      val reader = new Thread(() =>
-        try proc.getInputStream.transferTo(outBuf) catch { case _: Exception => })
-      reader.setDaemon(true); reader.start()
-      val capped = !proc.waitFor(capSec, java.util.concurrent.TimeUnit.SECONDS)
-      if (capped) { proc.destroyForcibly(); proc.waitFor() }
-      reader.join(5000)
-      val out = outBuf.toString(java.nio.charset.StandardCharsets.UTF_8)
-      val wall = (System.nanoTime() - t0) / 1e9
-      // forward the child's phase/gate marks — they are the only record of
-      // where a slow child's overhead went
-      out.linesIterator.filter(l =>
-        l.startsWith("[scale-phase]") || l.startsWith("[scale-gate]"))
-        .foreach(l => System.err.println(s"[child ${levels.mkString(",")}] $l"))
-      // a capped child may have finished MEASURING one or more levels —
-      // every [scale] line already on the pipe is kept
-      val re = (raw"\[scale\] cpus=(\d+) sec=([0-9.]+) docs=(\d+) taskSec=([0-9.]+) " +
-        raw"cpuSec=([0-9.]+) gcSec=([0-9.]+) util=[0-9.]+ calCoreSec=([0-9.]+) " +
-        raw"stealSec=(-?[0-9.NaN]+) busySec=(-?[0-9.NaN]+)(?: nTasks=(\d+))?").r
-      val results = re.findAllMatchIn(out).map { m =>
-        m.group(1).toInt -> ScaleResult(m.group(2).toDouble, m.group(3).toLong,
-          m.group(7).toDouble, wall, m.group(4).toDouble, m.group(5).toDouble,
-          m.group(6).toDouble, m.group(8).toDouble, m.group(9).toDouble,
-          Option(m.group(10)).map(_.toLong).getOrElse(-1L))
-      }.toMap
-      if (results.isEmpty) throw new IllegalStateException(
-        if (capped) s"scale child (${levels.mkString(",")}) exceeded ${capSec}s wall cap — killed"
-        else s"scale run failed:\n$out")
-      results
-    } finally {
-      // a crashed/OOM'd child would leak RAM-backed stage parquet across
-      // rounds on this shared host — ScaleRunner's own exit-time cleanup is
-      // the fast path, this is the backstop
-      if (tmpdir.nonEmpty)
-        try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(shmDir))
-        catch { case _: Exception => }
-    }
-  }
-
-  private case class ScaleResult(sec: Double, docs: Long, cal: Double,
-                                 wall: Double, taskSec: Double, cpuSec: Double,
-                                 gcSec: Double, stealSec: Double, busySec: Double,
-                                 nTasks: Long = -1L) {
-    /** Fraction of wanted CPU the hypervisor gave to another tenant during
-      * the measured section (host interference, not pipeline behavior). */
-    def stealPct: Double =
-      if (stealSec.isNaN || busySec.isNaN || stealSec + busySec <= 0) Double.NaN
-      else stealSec / (stealSec + busySec)
-  }
-
   private def mark(m: String): Unit =
     System.err.println(f"[bench-phase] +$elapsed%.0fs $m")
-
-  // ---- Window gate. Hypervisor steal on this host is CONCURRENCY-
-  // DEPENDENT (measured: 2% stolen at one busy thread, 82% at four, 55% at
-  // thirty-two in the same window — an effective vCPU quota that binds only
-  // under parallelism), so the gate probes AT the parallelism of the child
-  // it is about to spawn and waits out a window that would shred it. This
-  // biases child LAUNCHES toward quiet windows; the measured sections
-  // separately report the steal they actually experienced (steal_pct_*), so
-  // the JSON shows both the policy and the outcome. See tools.HostStat.
-  private def windowGate(childCpus: Int, budgetSec: Double): Unit = {
-    val s = graft.tools.HostStat.awaitQuiet(
-      threads = math.min(childCpus, 8), maxTries = 8, okSteal = 0.15,
-      canWait = () => elapsed + 150 < budgetSec, log = mark)
-    if (s > 0.15) mark(f"steal gate gave up at ${s * 100}%.0f%% — proceeding")
-  }
 
   /** Print a bench JSON line and flush — the driver parses stdout lines. */
   private def emit(line: String): Unit = { println(line); System.out.flush() }
@@ -223,7 +62,43 @@ object Bench {
   def main(args: Array[String]): Unit = {
     mark("start")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val nproc = Runtime.getRuntime.availableProcessors
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", nproc.toString).toInt
+    val plan = HostPlan.of(nproc, Runtime.getRuntime.maxMemory)
+
+    val head = headFields(headline(sfDir, cpus), sfDir)
+    emit(line(head, Seq("er_scaling" -> "null"), "null"))
+
+    val root = java.nio.file.Files.createTempDirectory("graft-bench").toString
+    try {
+      val corpus = s"$root/corpus"
+      val warmCorpus = s"$root/corpus-warmup"
+      mark(s"corpus: ${plan.entities} entities")
+      val spark = session(cpus)
+      try {
+        WebCorpus.pages(spark, plan.entities).write.parquet(corpus)
+        WebCorpus.pages(spark, plan.warmupEntities).write.parquet(warmCorpus)
+      } finally spark.stop()
+      val er = erFields(plan.pair.map(n => stageOrNull("scaling pair") {
+        scalingPair(plan.entities, n, corpus, warmCorpus, s"$root/pair")
+      }))
+      emit(line(head, er, "null"))
+      emit(line(head, er, stageOrNull("incremental") {
+        incremental(cpus, corpus, warmCorpus, s"$root/incremental")
+      }))
+    } finally FileUtils.deleteQuietly(new java.io.File(root))
+    mark("done")
+  }
+
+  /** A stage that fails leaves its section null (the cause goes to stderr)
+    * and the next stage still runs. */
+  private def stageOrNull(name: String)(body: => String): String = {
+    mark(name)
+    try body catch { case NonFatal(e) => mark(s"$name failed: $e"); "null" }
+  }
+
+  /** Stage 1: each headline query's best-of-2 seconds. */
+  private def headline(sfDir: String, cpus: Int): Seq[(String, Double)] = {
     val headline = Seq("q1_agg", "q2_join_agg", "q7_window_topn", "q14_dedup_exact",
       "q19_minhash_dups", "q23_ann_brute", "q26_interactions")
 
@@ -249,729 +124,248 @@ object Bench {
     val pass2 = headlinePass(spark)
     var results = pass1.zip(pass2).map { case ((n, a), (_, b)) => n -> math.min(a, b) }
     mark("headline done")
-    def buildHead(): String = {
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      val t = results.map(_._2).sum
-      f"""{"metric":"total","value":$t%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir""""
-    }
-    val total = results.map(_._2).sum
-    var head = buildHead()
-    // Partial line NOW — a timeout in the scale protocol must not lose the
-    // headline numbers (round-2 lesson).
-    emit(head + "}")
     spark.stop()
-
-    // Scaling experiment — the north-rule evidence. Primary pair: N=1 vs
-    // 4N=4 cores — inside this box's measured linear region (pure-CPU and
-    // memory micro-probes scale ~1.0 to 4 threads; at 8+ concurrent threads
-    // the shared-tenant memory system inflates per-core CPU ~1.25x for ANY
-    // memory-touching workload — see BENCH/BASELINE.md — which separate
-    // N/4N executor MACHINES would not see). local[32] is the throughput
-    // point with a secondary 4->32 (8x) efficiency.
-    // Corpus: full size is 25x verify scale (≈750k pages at sf0.1) so the
-    // run is work-dominated (per-level flat cost — driver scheduling,
-    // clustering iteration barriers — is amortized, exactly as the
-    // corpus/driver ratio amortizes it on a real cluster); the pair starts
-    // on a 1/5 corpus and upgrades when the measured pace fits the budget
-    // (see below).
-    var erJson = "null"
-    var incJson = "null"
-    // lazily-materialized XL corpus dir (2x full): deleted after the ladder
-    // so a 2x-full parquet tree never outlives the round on the shared host
-    var xlCleanup: Option[String] = None
-    try {
-      val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "25").toInt
-      val scaleEntities = WebCorpus.entitiesForSf(sfDir) * mult
-      // Window-adaptive initial sizing: this shared-tenant host's speed
-      // varies ~4x between windows (measured: the same corpus+code ran
-      // local[4] in 52 s in one window and 207-300 s in another), AND the
-      // per-level flat cost (driver scheduling, ~60 small stage barriers
-      // from the CC loop and bookkeeping, parquet commits) caps the raw
-      // 1->4 ratio at ~0.55 on the 1/5 corpus even on a QUIET host — an
-      // amortization artifact the north rule's separate-cluster reading
-      // would not have (measured: 150 k docs → ~15-20 s flat vs a ~30 s
-      // 4-core wall; at 3x the corpus the same flat cost is <20% of the
-      // wall and the modeled ratio clears 0.8). So: when the headline pace
-      // and a steal probe say the window is quiet, START the pair at the
-      // 3/5 corpus — the size whose ratio the flat cost no longer caps —
-      // and fall back to the 1/5 corpus otherwise; later ladder stages
-      // upgrade further (5x) when budget allows. A fast window therefore
-      // delivers the amortized, gate-relevant measurement first try; a
-      // slow window still delivers a valid pair instead of a timeout.
-      val entitiesSmall = scaleEntities / 5
-      val entitiesMid = scaleEntities * 3 / 5
-      // XL tier (2x full): the round-4 structural cuts halved the
-      // pipeline's total work, which LOWERS the single-box ratio ceiling at
-      // a fixed corpus size (per-level flat cost — driver scheduling, CC
-      // stage barriers, parquet commits — is now a larger share of the
-      // shorter 4-core wall). The honest counter-move is more data: at 2x
-      // the full corpus the flat share halves again and the quiet-window
-      // ceiling moves back toward the pipeline's true scaling. Only the
-      // upgrade ladder reaches for it, only when the measured pace says it
-      // fits the remaining budget.
-      val entitiesXl = scaleEntities * 2
-      // headline pace vs the recorded quiet-host reference: the cheapest
-      // window-speed estimate available before any child is spawned
-      val headlineRef =
-        sys.env.getOrElse("SPARK_GRAFT_HEADLINE_REF_SEC", "6.0").toDouble
-      val pace = total / headlineRef
-      val (corpus, corpusSmall, corpusMid, warmCorpus) = {
-        val s = session(32)
-        val p = materializeCorpus(s, scaleEntities)
-        val ps = materializeCorpus(s, entitiesSmall)
-        val pm = materializeCorpus(s, entitiesMid)
-        // JIT/codegen warmup corpus: just big enough to exercise every code
-        // path — at 32 threads under the host quota, each extra warmup
-        // second is paid per child OUTSIDE the measured section but INSIDE
-        // the budget (a 32-core child measured 206-240 s of overhead)
-        val w = materializeCorpus(s, scaleEntities / 150)
-        s.stop(); (p, ps, pm, w)
-      }
-      // Page-cache warm the corpora before any measured level: a corpus
-      // left on disk by an earlier round reads cold at this host's ~150 MB/s
-      // shared disk — a single-machine artifact (N and 4N executor clusters
-      // each bring their own disks), so it must not leak into the ratio.
-      def warmDir(dir: String): Unit =
-        new java.io.File(dir).listFiles().foreach { f =>
-          if (f.getName.endsWith(".parquet")) {
-            val in = new java.io.FileInputStream(f)
-            try { val buf = new Array[Byte](1 << 20)
-                  while (in.read(buf) >= 0) {} } finally in.close()
-          }
-        }
-      Seq(corpus, corpusSmall, corpusMid, warmCorpus).foreach(warmDir)
-      mark("corpus materialized+warmed")
-      // A pair's levels run in ONE child JVM as fresh, fully-stopped
-      // local[N] sessions (see ScaleRunner's fidelity notes — sharing the
-      // JVM's fixed cost makes the reported ratio conservative, and paying
-      // it once per pair instead of once per level is the difference
-      // between the ladder fitting the budget and not: measured 100 s quiet
-      // / up to 550 s contended PER CHILD).
-      // live estimate of per-suite overhead (JVM init + pre-touch + warmup
-      // + probes), tracked PER LARGEST-LEVEL CORE COUNT: a 32-core child's
-      // overhead (bigger pre-touched heap, 32-thread warmup under the host
-      // quota) is 4-6x a 1-4 core child's and must not poison the cheaper
-      // stages' budget estimates
-      val overheads = scala.collection.mutable.Map.empty[Int, Double]
-      // overheads of SMALL-HEAP children (1/5-corpus suites run with the
-      // halved pre-touched heap): measured ~64 s vs ~119-220 s for a
-      // full-heap child — the pre-touch and warm scale with the heap, so a
-      // small-tier stage priced with a big child's overhead gets skipped on
-      // a ~50 s phantom (measured: r5c had 97 s of budget left and skipped
-      // a small 2→8 child estimated at 146 s whose true cost was ~90 s)
-      val overheadsSmall = scala.collection.mutable.ListBuffer.empty[Double]
-      // the first suite is 32-class now (it carries the local[32] level), so
-      // a cheap-suite estimate must not inherit its 2.5x-bigger fixed cost
-      def childOverhead: Double = {
-        val non32 = overheads.filter(_._1 < 32).values
-        if (non32.nonEmpty) non32.min
-        else if (overheads.nonEmpty) overheads.values.min / 2.5
-        else 60.0
-      }
-      def overheadFor(cpus: Int): Double =
-        overheads.getOrElse(cpus,
-          if (cpus >= 32) 2.5 * childOverhead else childOverhead)
-      def overheadSmallChild: Double =
-        if (overheadsSmall.nonEmpty) overheadsSmall.min
-        else math.min(childOverhead, 70.0)
-      // XL materializes lazily — only if the upgrade ladder actually
-      // reaches for it (one 32-thread generation pass, then page-cache warm
-      // like the upfront corpora)
-      var corpusXlMat: Option[String] = None
-      // EVERY completed level measurement of the round, with its core count
-      // — the per-doc task-cost parity evidence scans this (quietest run per
-      // level across ALL pair sizes, since per-doc cost is size-invariant)
-      var allRuns: List[(Int, ScaleResult)] = Nil
-      def corpusFor(ents: Long): String =
-        if (ents == entitiesSmall) corpusSmall
-        else if (ents == entitiesMid) corpusMid
-        else if (ents == entitiesXl) corpusXlMat.getOrElse {
-          val s = session(32)
-          val p = try materializeCorpus(s, entitiesXl) finally s.stop()
-          warmDir(p)
-          mark(s"xl corpus materialized+warmed ($entitiesXl entities)")
-          corpusXlMat = Some(p); xlCleanup = Some(p); p
-        }
-        else corpus
-      def runSuite(levels: Seq[Int], ents: Long,
-                   reserve: Double = 0.0): Map[Int, ScaleResult] = {
-        windowGate(levels.max, budgetSec) // don't burn a child in a bad window
-        // the child self-limits: it skips levels it cannot START within the
-        // remaining round budget (finished levels are already on the pipe).
-        // `reserve` holds back budget for a fallback stage the caller wants
-        // to guarantee (e.g. a small clean pair behind a pace-gated big one)
-        val wallBudget = math.max(150.0, budgetSec - elapsed - 20 - reserve)
-        // pre-touched heap sized to the corpus: only the 1/5 corpus fits the
-        // halved heap comfortably
-        val rs = spawnScaleSuite(levels, corpusFor(ents), warmCorpus,
-          ents <= entitiesSmall, wallBudget)
-        val wall = rs.values.head.wall
-        val overhead = math.max(20.0, wall - rs.values.map(_.sec).sum)
-        overheads(levels.max) = overhead // fixed cost ~ the largest level's class
-        if (ents <= entitiesSmall && levels.max < 32) overheadsSmall += overhead
-        allRuns = rs.toList ::: allRuns
-        rs.toSeq.sortBy(-_._1).foreach { case (c, r) =>
-          mark(f"scale run cpus=$c corpus=$ents done sec=${r.sec}%.1f " +
-            f"taskSec=${r.taskSec}%.0f steal=${r.stealPct * 100}%.0f%%")
-        }
-        mark(f"suite ${levels.mkString(",")} wall=$wall%.0f overhead=$overhead%.0f")
-        rs
-      }
-      def run(cpus: Int, ents: Long): ScaleResult = runSuite(Seq(cpus), ents)(cpus)
-      def effOf(s1: Double, s4: Double) = (s1 / s4) / 4.0
-      def better(a: ScaleResult, b: ScaleResult) = if (b.sec < a.sec) b else a
-      case class Pair(ents: Long, r1: ScaleResult, r4: ScaleResult, reps: Int) {
-        def eff: Double = effOf(r1.sec, r4.sec)
-      }
-      var runs32 = Map.empty[Long, ScaleResult]
-      var pair28: Option[(Long, ScaleResult, ScaleResult)] = None // (entities, r2, r8)
-      // measure one (4N, N) pair at `ents`, folding into `prev` via
-      // per-level minimum when re-measuring the same size (each retry
-      // re-rolls the host's contention window; min wall is the
-      // least-interference estimate); `reps` counts the folded passes so the
-      // JSON shows how many windows were rolled. `with32` folds the
-      // local[32] throughput point into the SAME child JVM: a standalone
-      // 32-thread child pays 160-210 s of overhead (pre-touch, 32-thread
-      // warmup under the host vCPU quota) — measured to price the point
-      // out of the budget whenever a quiet-red window routes budget to the
-      // bigger-corpus pair — while in-suite it costs its measured seconds
-      // plus one shared overhead. `with28` likewise rides the secondary
-      // 2→8 rung in the SAME child (levels 8 and 2 LAST, droppable): at the
-      // 1/5 corpus the marginal cost is ~35 measured seconds, which is what
-      // finally makes the rung budget-proof — r4 and the r5a rehearsal both
-      // starved a standalone 2→8 suite out of the JSON.
-      def measurePair(ents: Long, prev: Option[Pair],
-                      reserve: Double = 0.0, with32: Boolean = false,
-                      with28: Boolean = false): Pair = {
-        // ONE child JVM for all levels (fixed cost paid once), gate-critical
-        // order: the window-exposed 32 level first, then the north-rule
-        // (4, 1) pair, then the droppable secondary rung — the child skips
-        // tail levels when the wall budget runs short, so this order spends
-        // risk on the least informative levels
-        val levels = (if (with32) Seq(32, 4, 1) else Seq(4, 1)) ++
-          (if (with28) Seq(8, 2) else Nil)
-        val rs = runSuite(levels, ents, reserve)
-        // harvest the 32-level and the 2→8 rung BEFORE the pair-completeness
-        // checks: a wall-capped suite that lost other levels still delivered
-        // them
-        rs.get(32).foreach(r => runs32 += ents -> r)
-        for (r2 <- rs.get(2); r8 <- rs.get(8)) pair28 = Some((ents, r2, r8))
-        val r4 = rs.getOrElse(4,
-          throw new IllegalStateException("pair suite lost the 4-core level"))
-        val r1 = rs.getOrElse(1,
-          throw new IllegalStateException("pair suite lost the 1-core level"))
-        prev match {
-          case Some(p) if p.ents == ents =>
-            Pair(ents, better(p.r1, r1), better(p.r4, r4), p.reps + 1)
-          case _ => Pair(ents, r1, r4, 1)
-        }
-      }
-
-      // ---- Budget ladder, most-informative-first (round-3 lesson: the
-      // throughput point and the incremental probe had NEVER appeared in a
-      // driver-parsed JSON because window retries were allowed to spend the
-      // budget first — retries are the LEAST informative item):
-      //   1. first (32, 4N, N) suite   — the north-rule raw pair PLUS the
-      //      local[32] throughput point in one child JVM (a standalone
-      //      32-thread child pays 160-392 s of overhead; in-suite it costs
-      //      its measured seconds once); starts at the 3/5 corpus when the
-      //      headline pace says the window is quiet (the size whose ratio
-      //      flat cost no longer caps), at the 1/5 corpus otherwise
-      //   2. incremental-fold probe    — the batch-lifecycle evidence (cheap)
-      //   3. QUIET-RED ONLY: bigger-corpus 1v4 upgrade — a quiet red is an
-      //      amortization shortfall and the 1v4 raw ratio is the gate
-      //      artifact, so the bigger pair outranks every secondary number
-      //   4. local[32] fallback        — only if the suite's 32 level was
-      //      lost to a wall cap
-      //   5. poisoned-window retries   — only when steal explains the red
-      //   6. bigger-corpus 1v4 upgrade — poisoned path (no-op if done above)
-      //   7. 2→8 secondary pair        — UPGRADE only: at a small-tier
-      //      start the rung already rode the first suite (with28, ~35 s
-      //      marginal); this stage only buys a bigger warm tier (runs
-      //      BEFORE the re-roll: r4's re-roll starved it out of the JSON)
-      //   8. gated headline re-roll    — repairs a noisy-start window
-      // A complete JSON line is emitted after EVERY stage, so a budget kill
-      // anywhere loses nothing already measured.
-      val entsStart = if (pace < 1.6) entitiesMid else entitiesSmall
-      mark(f"headline pace $pace%.2fx quiet ref → first pair at $entsStart entities")
-      // a pace-gated big first pair reserves budget for the small-pair
-      // fallback below — a window that turns mid-suite (capping the child
-      // before its 1-core level) must not leave the round with no usable
-      // pair at all
-      // the 2→8 rung rides the first suite only at the 1/5 corpus, where its
-      // marginal cost (~35 s measured) cannot starve anything; a mid-tier
-      // first pair leaves the rung to its standalone stage below (quiet
-      // windows historically fit it) — at mid size the extra ~130 s could
-      // price the full-corpus gate upgrade out of the budget
-      var pairSmall =
-        try measurePair(entsStart, None,
-          reserve = if (entsStart > entitiesSmall) 250.0 else 0.0, with32 = true,
-          with28 = entsStart == entitiesSmall)
-        catch { case e: Throwable if entsStart > entitiesSmall =>
-          mark(s"big first pair failed (${e.getMessage}) — falling back to 1/5")
-          measurePair(entitiesSmall, None, with32 = runs32.isEmpty,
-            with28 = pair28.isEmpty)
-        }
-      var pairFull: Option[Pair] = None
-      // every completed bigger-corpus pair, kept for primary-pair selection
-      // even after a further upgrade replaces pairFull (the JSON field
-      // carries the latest; earlier pairs are already on the wire from
-      // their own emitStage lines)
-      var pairsBig: List[Pair] = Nil
-      val shufflePartitions =
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64").toInt
-
-      // primary = the pair the top-level gate fields report. Quiet pairs
-      // (≤10% steal on BOTH sides) outrank any steal-touched pair even at
-      // lower efficiency: steal on the 1-core side INFLATES the ratio
-      // (slower denominator), so picking "highest eff" across pairs would
-      // systematically select interference-flattered measurements — the
-      // opposite failure mode of the one retries guard against. Within the
-      // quiet pool: highest eff, corpus size as tie-break (better
-      // amortized). Steal-touched pairs remain fully disclosed in
-      // pair_small/pair_full with their steal_pct fields.
-      def quietSides(p: Pair): Boolean =
-        !(p.r4.stealPct > 0.10) && !(p.r1.stealPct > 0.10)
-      // Bandwidth analog of the 1-side-steal guard: identical logical work
-      // cannot genuinely cost MORE summed task-seconds at 1 thread than at
-      // 4 (the quiet self-inflation measures 1.2-1.4 on this host), so
-      // work_inflation < 1 means the 1-core stretch was slowed by external
-      // memory pressure the steal counter cannot see — a ratio-FLATTERING
-      // window (measured: a 0.91-inflation pair read 0.875 while a
-      // back-to-back genuinely quiet pair with the fastest 1-core pass on
-      // record read 0.637). Such pairs must not headline over a sane one.
-      def inflationSane(p: Pair): Boolean = p.r4.taskSec / p.r1.taskSec >= 0.95
-      def primary: Pair = {
-        val cands = pairsBig :+ pairSmall
-        val sane = cands.filter(p => quietSides(p) && inflationSane(p))
-        val quiet = cands.filter(quietSides)
-        val pool = if (sane.nonEmpty) sane else if (quiet.nonEmpty) quiet else cands
-        pool.maxBy(p => (p.eff, p.ents))
-      }
-      def j(x: Double, fmt: String) = if (x.isNaN) "null" else fmt.format(x)
-      // ---- Per-doc task-cost parity: the machine-checkable form of the
-      // scaling evidence. taskSec·1000/docs is the summed core-milliseconds
-      // the pipeline spends per document at a level — size-invariant and
-      // wall-independent, so the quietest run per level ACROSS pair sizes is
-      // comparable. per_doc_ratio ≈ 1 says the pipeline's parallel work
-      // equals its serial work (the property separate N and 4N executor
-      // machines would measure directly); the raw wall ratio then differs
-      // from cores only by this shared box's memory-bandwidth weather, which
-      // the window-quality fields beside these quantify per run.
-      def msPerDoc(r: ScaleResult): Double =
-        if (r.docs <= 0 || r.taskSec.isNaN) Double.NaN
-        else r.taskSec * 1000.0 / r.docs
-      def bestQuietRun(level: Int): Option[ScaleResult] = {
-        val q = allRuns.filter { case (c, r) =>
-          c == level && !(r.stealPct > 0.10) && r.docs > 0 }
-        if (q.isEmpty) None else Some(q.map(_._2).minBy(msPerDoc))
-      }
-      def tierName(ents: Long): String =
-        if (ents <= entitiesSmall) "small"
-        else if (ents <= entitiesMid) "mid"
-        else if (ents <= scaleEntities) "full" else "xl"
-      // why a candidate pair was kept OFF the headline despite a better raw
-      // ratio — the provenance the JSON previously made the reader infer
-      def demotionReason(p: Pair): String =
-        if (!inflationSane(p))
-          f"work_inflation_1_to_4=${p.r4.taskSec / p.r1.taskSec}%.3f<0.95: " +
-            "identical work cannot cost fewer task-seconds at 4 threads, so " +
-            "the 1-core side was externally slowed (ratio-flattering window)"
-        else if (!quietSides(p))
-          f"steal>10%% on a measured side (local1=${p.r1.stealPct * 100}%.1f%%, " +
-            f"local4=${p.r4.stealPct * 100}%.1f%%)"
-        else "" // quiet + sane: eligible, lost only on raw efficiency
-      def buildErJson(): String = {
-        // primary: quiet-sides pairs first, then highest raw efficiency
-        // (see `primary` above); every completed pair is reported in
-        // pair_small / pair_full regardless
-        val p = primary
-        val (r1, r4) = (p.r1, p.r4)
-        val docs = r4.docs
-        val (sec1, cal1) = (r1.sec, r1.cal)
-        val (sec4, cal4) = (r4.sec, r4.cal)
-        // the local[32] point is reported against the (4-core, same-corpus)
-        // pair it actually shares an input with
-        val ents32 = if (runs32.contains(p.ents)) p.ents else pairSmall.ents
-        val r32 = runs32.get(ents32)
-        val pair32 = if (ents32 == p.ents) p else pairSmall
-        val sec32 = r32.map(_.sec).getOrElse(Double.NaN)
-        val cal32 = r32.map(_.cal).getOrElse(Double.NaN)
-        val docs32 = r32.map(_.docs.toDouble).getOrElse(Double.NaN)
-        val tput1 = docs / sec1
-        val tput4 = docs / sec4
-        val effRaw = effOf(sec1, sec4)
-        val tput32 = docs32 / sec32
-        val eff32Raw = tput32 / (8.0 * (pair32.r4.docs / pair32.r4.sec))
-        val p28 = pair28.map { case (e28, s2, s8) =>
-          f""","pair28_entities":$e28,"sec_local2":${s2.sec}%.2f,""" +
-            f""""sec_local8":${s8.sec}%.2f,""" +
-            f""""scaling_efficiency_2_to_8":${effOf(s2.sec, s8.sec)}%.3f,""" +
-            s""""steal_pct_local2":${j(s2.stealPct * 100, "%.1f")},""" +
-            s""""steal_pct_local8":${j(s8.stealPct * 100, "%.1f")}"""
-        }.getOrElse("")
-        // Per-core frequency calibration: calCoreSec is the summed task time
-        // of a FIXED pure-CPU probe at each level's concurrency. freqRatio >
-        // 1 means a core is intrinsically slower with more active cores on
-        // this host (turbo) — a property of the thread-count stand-in, not
-        // of the pipeline; separate N and 4N executor machines run at equal
-        // clocks. The raw number is primary; normalized is context.
-        val freq14 = cal4 / cal1
-        val freq432 = cal32 / cal4
-        val pFullJson = pairFull.map { pf =>
-          val dem = if (pf != p && demotionReason(pf).nonEmpty)
-            s""""demotion_reason":"${demotionReason(pf)}",""" else ""
-          f""""pair_full":{"entities":${pf.ents},"docs":${pf.r4.docs},""" +
-            f""""sec_local1":${pf.r1.sec}%.2f,"sec_local4":${pf.r4.sec}%.2f,""" +
-            s""""n_tasks_local1":${pf.r1.nTasks},"n_tasks_local4":${pf.r4.nTasks},""" +
-            f""""work_inflation_1_to_4":${pf.r4.taskSec / pf.r1.taskSec}%.3f,""" +
-            s""""ms_per_doc_local1":${j(msPerDoc(pf.r1), "%.4f")},""" +
-            s""""ms_per_doc_local4":${j(msPerDoc(pf.r4), "%.4f")},""" +
-            dem +
-            f""""scaling_efficiency_n_to_4n":${pf.eff}%.3f},"""
-        }.getOrElse("")
-        val demSmall = if (pairSmall != p && demotionReason(pairSmall).nonEmpty)
-          s""""demotion_reason":"${demotionReason(pairSmall)}",""" else ""
-        // quietest per-doc task cost per level across every completed run of
-        // the round (see msPerDoc note above) + the window-quality of the
-        // runs that produced them
-        val bq1 = bestQuietRun(1)
-        val bq4 = bestQuietRun(4)
-        val pd1 = bq1.map(msPerDoc).getOrElse(Double.NaN)
-        val pd4 = bq4.map(msPerDoc).getOrElse(Double.NaN)
-        // when NO pair was quiet + inflation-sane the fallback still has to
-        // headline something — carry its own disqualifier on its face so the
-        // reader needn't cross-check the steal/inflation fields to see it
-        val gateCaveat = if (demotionReason(p).nonEmpty)
-          s""""gate_caveat":"${demotionReason(p)}",""" else ""
-        f"""{"docs":$docs,"entities":${p.ents},""" +
-          s""""gate_pair":"${tierName(p.ents)}","gate_pair_entities":${p.ents},""" +
-          gateCaveat +
-          f""""pair_small":{"entities":${pairSmall.ents},"docs":${pairSmall.r4.docs},""" +
-          f""""sec_local1":${pairSmall.r1.sec}%.2f,"sec_local4":${pairSmall.r4.sec}%.2f,""" +
-          s""""ms_per_doc_local1":${j(msPerDoc(pairSmall.r1), "%.4f")},""" +
-          s""""ms_per_doc_local4":${j(msPerDoc(pairSmall.r4), "%.4f")},""" +
-          demSmall +
-          f""""scaling_efficiency_n_to_4n":${pairSmall.eff}%.3f},""" +
-          pFullJson +
-          s""""ms_per_doc_local1":${j(pd1, "%.4f")},""" +
-          s""""ms_per_doc_local4":${j(pd4, "%.4f")},""" +
-          s""""per_doc_ratio":${j(pd4 / pd1, "%.3f")},""" +
-          s""""ms_per_doc_steal_pct_local1":${j(bq1.map(_.stealPct * 100).getOrElse(Double.NaN), "%.1f")},""" +
-          s""""ms_per_doc_steal_pct_local4":${j(bq4.map(_.stealPct * 100).getOrElse(Double.NaN), "%.1f")},""" +
-          s""""ms_per_doc_docs_local1":${bq1.map(_.docs).getOrElse(-1L)},""" +
-          s""""ms_per_doc_docs_local4":${bq4.map(_.docs).getOrElse(-1L)},""" +
-          f""""n_cores":1,"four_n_cores":4,"reps":${p.reps},""" +
-          f""""sec_local1":$sec1%.2f,"sec_local4":$sec4%.2f,""" +
-          s""""sec_local32":${j(sec32, "%.2f")},"local32_entities":$ents32,""" +
-          f""""docs_per_sec_local1":$tput1%.1f,"docs_per_sec_local4":$tput4%.1f,""" +
-          s""""docs_per_sec_local32":${j(tput32, "%.1f")},""" +
-          f""""scaling_efficiency_n_to_4n":$effRaw%.3f,""" +
-          s""""scaling_efficiency_4_to_32":${j(eff32Raw, "%.3f")}""" +
-          p28 +
-          f""","scaling_efficiency_n_to_4n_freq_normalized":${effRaw * freq14}%.3f,""" +
-          s""""scaling_efficiency_4_to_32_freq_normalized":${j(eff32Raw * freq432, "%.3f")},""" +
-          f""""freq_cal_core_sec":{"local1":$cal1%.2f,"local4":$cal4%.2f,""" +
-          s""""local32":${j(cal32, "%.2f")}},""" +
-          f""""freq_ratio_n_to_4n":$freq14%.3f,""" +
-          // work-inflation transparency: summed task-seconds and task-CPU
-          // per level for IDENTICAL logical work — task_sec_local4/
-          // task_sec_local1 > 1 quantifies this shared host's memory-system
-          // contention under concurrency (equal freq_cal rules out clock
-          // differences), the single-machine artifact the thread-count
-          // stand-in adds on top of what separate executors would measure
-          f""""task_sec_local1":${r1.taskSec}%.1f,"task_sec_local4":${r4.taskSec}%.1f,""" +
-          f""""cpu_sec_local1":${r1.cpuSec}%.1f,"cpu_sec_local4":${r4.cpuSec}%.1f,""" +
-          f""""work_inflation_1_to_4":${r4.taskSec / r1.taskSec}%.3f,""" +
-          // task counts contextualize the inflation: Spark's input-split
-          // formula and AQE's parallelismFirst coalescing scale task counts
-          // with the level's cores (as a real N vs 4N cluster does).
-          // Per-task fixed cost was probed and RULED OUT as the carrier
-          // (1-6 ms/task); the inflation lives in the
-          // hash-agg/shuffle minority of the CPU and tracks the host
-          // window — see BENCH/BASELINE.md
-          s""""n_tasks_local1":${r1.nTasks},"n_tasks_local4":${r4.nTasks},""" +
-          s""""n_tasks_local32":${r32.map(_.nTasks).getOrElse(-1L)},""" +
-          // hypervisor steal observed DURING each measured section
-          // (/proc/stat): steal/(busy+steal) — the fraction of wanted CPU
-          // the shared-tenant host gave to another tenant. Nonzero steal is
-          // host interference a real N vs 4N executor fleet would not see.
-          f""""gc_sec_local1":${r1.gcSec}%.1f,"gc_sec_local4":${r4.gcSec}%.1f,""" +
-          s""""steal_pct_local1":${j(r1.stealPct * 100, "%.1f")},""" +
-          s""""steal_pct_local4":${j(r4.stealPct * 100, "%.1f")},""" +
-          s""""steal_pct_local32":${j(r32.map(_.stealPct * 100).getOrElse(Double.NaN), "%.1f")},""" +
-          f""""shuffle_partitions_per_level":$shufflePartitions,""" +
-          // one JVM per suite (fresh local[N] SESSION per level): the fixed
-          // JVM cost is paid once per pair, and sharing JIT warmth + sizing
-          // GC threads for the largest level can only FLATTER the 1-core
-          // side, making the reported N->4N efficiency conservative
-          f""""jvm_per_level":false,"warmup_per_suite":true}"""
-      }
-      def emitStage(): Unit = {
-        erJson = buildErJson()
-        emit(head + f""","er_scaling":$erJson,"er_incremental":$incJson}""")
-      }
-      emitStage() // stage 1 done: the north-rule pair is on the wire
-
-      // fault isolation: a wall-capped or crashed child loses ITS stage,
-      // never the rest of the ladder (every earlier stage is already on the
-      // wire via emitStage)
-      def stage(name: String)(body: => Unit): Unit =
-        try body catch { case e: Throwable =>
-          mark(s"stage '$name' failed - continuing ladder: ${e.getMessage}")
-        }
-
-      // stage 2: incremental-fold probe (batch lifecycle): full re-resolve
-      // vs resolveIncremental of a 4% batch — one in-process session,
-      // identical conditions for both sides. The scored-pair counts are the
-      // scale signal (pair scoring dominates at 10^12 docs). Regime matters:
-      // a 20% batch on a 38 k-doc corpus measured incremental's fixed
-      // driver-side stage count, not its work saving (speedup 0.43 — an
-      // honest number about the wrong regime); a 4% batch on a half-small
-      // corpus sits where the pair-count saving (~14x) clears the fixed
-      // cost. Corpus: 2x the pair's (300 k docs) — at 75 k docs a quiet-host
-      // full resolve is so fast (14 s) that incremental's ~12 s of extra
-      // stage waves outweighs scoring 10x fewer pairs; the probe must sit
-      // where scoring dominates stage latency, which is also the only
-      // regime that says anything about 10^12. Session capped at 16
-      // threads — the probe compares two resolves at the SAME level, and 32
-      // threads on this host sit deep inside the vCPU quota. The probe runs
-      // BEFORE the local[32] point: it is reliable and in-process, while a
-      // 32-thread child under the quota has measured 300-530 s of wall —
-      // the expensive stage must not starve the cheap one (it did in two
-      // rehearsals).
-      // probe corpus is 2x the 1/5 corpus; normalize the pace estimate to
-      // that size whatever size the first pair ran at
-      val r4At1x = pairSmall.r4.sec * entitiesSmall.toDouble / pairSmall.ents
-      // Probe corpus scales with the budget: the round-4 work halving made
-      // the full resolve so fast that at 2x the 1/5 corpus the incremental
-      // fold's fixed stage barriers (three durable keys-fold stages, CC
-      // rounds) outweigh the 12x scoring saving and the wall ratio reads
-      // < 1 — an honest number about the wrong regime (phase-profiled:
-      // keys fold 9.5 s of a 27 s fold vs 5.1 s of scoring at 300 k docs).
-      // A 4x corpus puts scoring back in charge of both walls. Cost model:
-      // timed sides scale ~linearly in corpus (2.5·k·r4At1x), prior-state
-      // resolve is cached across reps and rounds (+150 s covers a cold
-      // first build either way).
-      def probeEstAt(k: Int) = 2.5 * k * r4At1x + 150
-      val probeMult = if (elapsed + probeEstAt(4) < budgetSec) 4 else 2
-      val probeEst = probeEstAt(probeMult)
-      if (elapsed + probeEst < budgetSec) stage("incremental probe") {
-        mark(s"incremental probe (${probeMult}x corpus)")
-        incJson = {
-          val s = session(math.min(cpus, 16))
-          // a second interleaved rep (window re-roll, min-fold per side)
-          // only when the budget clearly covers it
-          val reps = if (elapsed + 1.8 * probeEst < budgetSec) 2 else 1
-          try graft.tools.IncrementalProbe.measure(
-            s, materializeCorpus(s, entitiesSmall * probeMult), mod = 25, maxReps = reps)
-          finally s.stop()
-        }
-        emitStage()
-      } else mark("incremental probe skipped (budget)")
-
-      // Was the pair measured in a QUIET window? The signal is hypervisor
-      // steal (/proc/stat) on either side. Task-time inflation (summed
-      // task-seconds at 4 threads vs 1 for identical work) is reported but
-      // deliberately NOT a retry trigger: it concentrates in the hash-agg/
-      // shuffle minority of the CPU (the compute-dense stages inflate 1.0x),
-      // per-task fixed cost is ruled out as its carrier (1-6 ms/task, see
-      // BENCH/BASELINE.md), and its magnitude tracks the host window — re-rolling
-      // a zero-steal red burned 6 retries at floor 1.46 in one measured
-      // window without moving it, while the bigger-corpus upgrade both
-      // amortizes the flat per-stage share and samples a later window.
-      def pairQuiet: Boolean = quietSides(pairSmall)
-
-      // stage 5 (as a function — see call-order note below): bigger-corpus
-      // 1-vs-4 upgrade — the best-amortized north-rule number. Prefer the
-      // full 5x corpus; settle for the 3/5 mid tier when only it fits (the
-      // flat-cost model says mid already clears the gate in a quiet window).
-      // Cost scales from the first pair's measured per-doc pace.
-      def upgradeCost(target: Long): Double =
-        (pairSmall.r1.sec + pairSmall.r4.sec) *
-          (target.toDouble / pairSmall.ents) * 1.1 + 1.2 * childOverhead
-      // one-time XL materialization+warm cost: measured generation pace when
-      // this run generated any tier; a cached-corpora run falls back to the
-      // old constant scaled by the observed window slowness
-      def xlMatCost: Double =
-        if (corpusXlMat.nonEmpty) 0.0
-        else matPaceEntsPerSec.map(p => entitiesXl / p * 1.3 + 30)
-          .getOrElse(90.0 * math.max(1.0, pace))
-      def upgradeStage(): Unit = stage("bigger-corpus pair upgrade") {
-        def pick(): Long = {
-          val cur = math.max(pairSmall.ents, pairsBig.map(_.ents).maxOption.getOrElse(0L))
-          // a green headline stops the ladder ONLY if it is also quiet and
-          // inflation-sane: a steal-flattered 1.4 must keep the upgrade
-          // spending budget toward an honest pair exactly as a red would
-          // (measured r5d: 13% steal on the 1-core side read eff 1.455)
-          if (primary.eff >= 0.8 && quietSides(primary) && inflationSane(primary)) 0L
-          else if (cur < scaleEntities &&
-                   elapsed + upgradeCost(scaleEntities) < budgetSec) scaleEntities
-          else if (cur < entitiesMid &&
-                   elapsed + upgradeCost(entitiesMid) < budgetSec) entitiesMid
-          // XL rung: only above a completed full-corpus pair (never skip the
-          // full tier) and only when the linear cost model PLUS the one-time
-          // materialization+warm fits the remaining budget. The mat estimate
-          // comes from the MEASURED generation pace of this run's upfront
-          // tiers (×1.3 margin + warm), not a constant — on a slow window a
-          // 2x-full generation pass can far exceed the old flat 90 s
-          else if (cur >= scaleEntities && cur < entitiesXl &&
-                   elapsed + upgradeCost(entitiesXl) + xlMatCost < budgetSec) entitiesXl
-          else 0L
-        }
-        var target = pick()
-        while (target != 0L) {
-          mark(s"budget allows pair upgrade to $target entities")
-          val p = measurePair(target, pairsBig.find(_.ents == target))
-          pairFull = Some(p)
-          pairsBig = p :: pairsBig.filterNot(_.ents == target)
-          emitStage()
-          target = pick()
-        }
-      }
-
-      // Call order: a QUIET red pair is an amortization shortfall — the
-      // bigger-corpus pair is the artifact the gate reads, so it spends
-      // budget FIRST, before the local[32] point (measured: a mid-corpus
-      // quiet pair reads ~0.63 where the full-corpus flat-cost math clears
-      // 0.8; local[32] and the 2→8 pair are secondary evidence). A poisoned
-      // pair re-rolls first instead (retries below), then upgrades.
-      if (pairQuiet && pairSmall.eff < 0.8) upgradeStage()
-
-      // stage 3: local[32] fallback — normally the point already rode in
-      // the first pair's child JVM (with32 above); a standalone 32-thread
-      // child (206-392 s of measured overhead under the host vCPU quota)
-      // is spawned only if the suite's 32 level was lost to a wall cap.
-      if (runs32.isEmpty) {
-        if (elapsed + primary.r4.sec + overheadFor(32) < budgetSec)
-          stage("local[32] point") {
-            runs32 += primary.ents -> run(32, primary.ents)
-            emitStage()
-          }
-        else mark("local[32] point skipped (budget)")
-      }
-
-      // stage 4: poisoned-window retries — ONLY when steal, not
-      // amortization, explains a red OR a flattered reading: re-roll the
-      // steal-exposed 4-core side (the 1-core side re-runs only if its own
-      // window was poisoned); min-per-level folding means every extra
-      // window sample can only sharpen the quiet-host estimate — including
-      // DOWN from a steal-flattered green (a stolen 1-core side inflates
-      // the denominator; a quieter re-roll is faster and lowers the ratio
-      // toward honesty). Quiet-window reds skip straight to the full-size
-      // upgrade — re-rolling a clean measurement cannot change it.
-      stage("poisoned-window retries") {
-        while (((pairSmall.eff < 0.8 && !pairQuiet) ||
-                pairSmall.r1.stealPct > 0.10) && pairSmall.reps < 6 &&
-               elapsed + pairSmall.r4.sec * 1.2 +
-                 (if (pairSmall.r1.stealPct > 0.10) pairSmall.r1.sec else 0.0) +
-                 1.2 * childOverhead < budgetSec) {
-          val redo1 = pairSmall.r1.stealPct > 0.10
-          val rs = runSuite(if (redo1) Seq(4, 1) else Seq(4), pairSmall.ents)
-          val r4 = rs.getOrElse(4, pairSmall.r4)
-          val r1 = if (redo1) rs.getOrElse(1, pairSmall.r1) else pairSmall.r1
-          pairSmall = Pair(pairSmall.ents, better(pairSmall.r1, r1),
-            better(pairSmall.r4, r4), pairSmall.reps + 1)
-          emitStage()
-        }
-      }
-
-      // A big first pair measured in a TURNED window (steal-poisoned and
-      // red) with no budget left to re-roll at its own size: a clean small
-      // pair is better evidence than a poisoned big one. This is what the
-      // big pair's `reserve` held budget for.
-      stage("small-pair fallback") {
-        val smallCost = (pairSmall.r1.sec + pairSmall.r4.sec) *
-          (entitiesSmall.toDouble / pairSmall.ents) * 1.3 + 1.2 * childOverhead
-        if (pairSmall.eff < 0.8 && !pairQuiet && pairSmall.ents > entitiesSmall &&
-            elapsed + smallCost < budgetSec) {
-          mark("poisoned big pair — measuring small fallback pair")
-          val p = measurePair(entitiesSmall, None)
-          if (p.eff > pairSmall.eff) { pairSmall = p; emitStage() }
-        }
-      }
-
-      // stage 5 (poisoned-window path — the quiet path already upgraded
-      // before the local[32] point above; pick() re-evaluates, so this is a
-      // no-op when the gate is green or nothing bigger fits the budget)
-      upgradeStage()
-
-      // stage 6: secondary 2→8 pair — BEFORE the headline re-roll (r4
-      // lesson: the re-roll spent the tail budget and the 2→8 rung never
-      // reached a driver-parsed JSON). Prefers the biggest corpus already
-      // materialized+warm (the upgrade ladder's tiers are reused, no new
-      // generation pass), stepping down full → mid → small until the cost
-      // model fits. Per-level cost model: sec(c cores, E ents) ≈
-      // r1.sec · (E/ents_first) / c, cores beyond 4 discounted for the
-      // measured quota inflation.
-      def estSec(cores: Int, target: Long): Double =
-        pairSmall.r1.sec * (target.toDouble / pairSmall.ents) / cores *
-          (if (cores >= 8) 1.5 else 1.1)
-      def cost28(target: Long): Double =
-        estSec(2, target) + estSec(8, target) +
-          (if (target <= entitiesSmall) overheadSmallChild else overheadFor(8))
-      // upgrade-only: the small-tier rung usually already rode the first
-      // suite (with28), so this stage spends budget only on a BIGGER warm
-      // tier than whatever is delivered
-      val warm28Tiers = Seq(scaleEntities, entitiesMid, entitiesSmall)
-        .filter(t => pair28.forall(_._1 < t))
-      warm28Tiers.find(t => elapsed + cost28(t) < budgetSec) match {
-        case Some(target) => stage(s"2->8 pair (${tierName(target)})") {
-          mark(s"2->8 pair at $target entities")
-          val rs = runSuite(Seq(8, 2), target)
-          // harvest only a COMPLETE rung: a wall-capped child that lost its
-          // 2-level must not clobber an earlier complete (smaller) pair
-          (rs.get(2), rs.get(8)) match {
-            case (Some(r2), Some(r8)) =>
-              pair28 = Some((target, r2, r8)); emitStage()
-            case _ => mark(s"2->8 upgrade at $target lost a level (wall cap) — keeping prior rung")
-          }
-        }
-        case None =>
-          mark(if (pair28.isDefined) "2->8 upgrade skipped (budget) — rung already delivered in-suite"
-               else "2->8 pair skipped (budget)")
-      }
-
-      // stage 7: headline re-roll — the headline queries are measured FIRST
-      // and UNGATED (they must be on the wire before anything can time out),
-      // so a noisy start window inflates the per-query numbers the round
-      // table records even when the window later clears. Cheap repair: one
-      // gated re-measured pass, min-folded per query (it can only improve),
-      // and every later emit carries the folded numbers. In-process, no
-      // child JVM: JIT and codegen caches are already warm in this JVM, so
-      // a single pass reads steady-state.
-      stage("headline re-roll") {
-        if (total > 1.4 * headlineRef && elapsed + 1.5 * total + 60 < budgetSec) {
-          mark(f"headline read $total%.1fs vs ${headlineRef}%.1fs quiet ref — gated re-roll")
-          windowGate(math.min(cpus, 8), budgetSec)
-          val s = session(cpus)
-          try {
-            graft.testgen.WebCorpus.pagesMaterialized(s, sfDir)
-            val rr = headlinePass(s)
-            results = results.zip(rr).map { case ((n, a), (_, b)) => n -> math.min(a, b) }
-            head = buildHead()
-            mark(f"headline re-roll folded total ${results.map(_._2).sum}%.1fs")
-            emitStage()
-          } finally s.stop()
-        }
-      }
-      if (pairFull.nonEmpty && !runs32.contains(pairFull.get.ents) &&
-          elapsed + pairFull.get.r4.sec + overheadFor(32) < budgetSec)
-        stage("upgraded-corpus local[32]") {
-          runs32 += pairFull.get.ents -> run(32, pairFull.get.ents)
-          emitStage()
-        }
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] scale protocol failed: ${e.getMessage}")
-    } finally xlCleanup.foreach { p =>
-      try {
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-        mark(s"xl corpus deleted ($p)")
-      } catch { case _: Exception => }
-    }
-    emit(head + f""","er_scaling":$erJson,"er_incremental":$incJson}""")
-    mark("done")
+    results
   }
+
+  /** Stage 2: the N→4N pair; returns the `er_scaling` object. */
+  private def scalingPair(entities: Long, n: Int, corpus: String, warmCorpus: String,
+                          work: String): String = {
+    val fourN = measureLevel(4 * n, corpus, Some(warmCorpus), s"$work/local${4 * n}")
+    val oneN = measureLevel(n, corpus, None, s"$work/local$n")
+    scalingJson(entities, oneN, fourN)
+  }
+
+  /** Task metrics of every task that ends while the listener is attached. */
+  private class TaskTotals extends SparkListener {
+    val runMs, cpuMs, gcMs, count = new AtomicLong()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      runMs.addAndGet(e.taskMetrics.executorRunTime)
+      cpuMs.addAndGet(e.taskMetrics.executorCpuTime / 1000000L)
+      gcMs.addAndGet(e.taskMetrics.jvmGCTime)
+      count.incrementAndGet()
+    }
+    def reset(): Unit = Seq(runMs, cpuMs, gcMs, count).foreach(_.set(0))
+  }
+
+  /** One level: a fresh local[cores] session, an optional warm-up resolve,
+    * the timed `resolve` + `integrated.count()`, then the calibration
+    * probe. */
+  private def measureLevel(cores: Int, corpus: String, warmCorpus: Option[String],
+                           work: String): Level = {
+    val spark = session(cores)
+    try {
+      val tasks = new TaskTotals
+      spark.sparkContext.addSparkListener(tasks)
+      def resolve(path: String, tag: String): (Double, Long) = {
+        val pages = spark.read.parquet(path)
+        val t = System.nanoTime()
+        val result = EntityResolution.resolve(pages,
+          EntityResolution.Config(workDir = Some(s"$work/$tag")))
+        val docs = result.integrated.count()
+        val secs = (System.nanoTime() - t) / 1e9
+        result.scoredPairs.unpersist()
+        spark.sharedState.cacheManager.clearCache()
+        (secs, docs)
+      }
+      // Frequency calibration: a fixed pure-CPU job (no shuffle, no alloc)
+      // at this level's concurrency. On a shared host the per-core clock can
+      // drop as more cores go active; separate N and 4N executor machines
+      // run at equal clocks. Raw efficiency is primary; the probe-normalized
+      // value is context.
+      def probe(): Double = {
+        val c0 = tasks.runMs.get()
+        spark.range(0, 150000000L, 1, cores * 4)
+          .select(sum(pmod(xxhash64(xxhash64(xxhash64(col("id")))), lit(1000000007L)))).head()
+        (tasks.runMs.get() - c0) / 1000.0
+      }
+      warmCorpus.foreach { w =>
+        mark(s"local[$cores] warm-up")
+        resolve(w, "warmup")
+        probe()
+      }
+      mark(s"local[$cores] measured")
+      tasks.reset()
+      val (busy0, steal0) = procStat()
+      val (sec, docs) = resolve(corpus, "measured")
+      val (busy1, steal1) = procStat()
+      val (taskSec, cpuSec, gcSec, nTasks) = (tasks.runMs.get() / 1000.0,
+        tasks.cpuMs.get() / 1000.0, tasks.gcMs.get() / 1000.0, tasks.count.get())
+      Level(cores, sec, docs, taskSec, cpuSec, gcSec, nTasks, probe(),
+        busy1 - busy0, steal1 - steal0,
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    } finally {
+      spark.stop()
+      FileUtils.deleteQuietly(new java.io.File(work))
+    }
+  }
+
+  /** (busyCoreSec, stealCoreSec) across all cpus since boot; NaN off-Linux. */
+  private def procStat(): (Double, Double) = {
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      try {
+        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toDouble)
+        val hz = 100.0 // USER_HZ
+        val busy = (f(0) + f(1) + f(2) + f(5) + f(6)) / hz
+        (busy, if (f.length > 7) f(7) / hz else 0.0)
+      } finally src.close()
+    } catch { case _: Exception => (Double.NaN, Double.NaN) }
+  }
+
+  /** Stage 3: full re-resolve vs an incremental fold of a 4% batch (rows
+    * with xxhash64(url) % 25 == 0) into the resolved other 96%. Both sides
+    * start equally warm: the same split is first resolved and folded,
+    * untimed, on the warm-up corpus, so neither side pays its first-run
+    * codegen and JIT in the timed region. Scored-pair counts are taken
+    * outside both timed sections: `candidatePairs` recomputes blocking
+    * lazily, for ~10x more pairs on the full side. */
+  private def incremental(cpus: Int, corpus: String, warmCorpus: String,
+                          work: String): String = {
+    val spark = session(cpus)
+    try {
+      val all = spark.read.parquet(corpus)
+      val isNew = pmod(xxhash64(col("url")), lit(25)) === 0
+      def cfg(tag: String) = EntityResolution.Config(workDir = Some(s"$work/$tag"))
+      def timed(f: => EntityResolution.Result): (EntityResolution.Result, Double) = {
+        val t0 = System.nanoTime()
+        val r = f
+        r.integrated.count()
+        (r, (System.nanoTime() - t0) / 1e9)
+      }
+      mark("incremental warm-up")
+      val warm = spark.read.parquet(warmCorpus)
+      EntityResolution.resolve(warm.filter(!isNew), cfg("warm-prior")).integrated.count()
+      EntityResolution.resolveIncremental(warm.filter(isNew), s"$work/warm-prior", cfg("warm-inc"))
+        .integrated.count()
+      mark("incremental measured")
+      EntityResolution.resolve(all.filter(!isNew), cfg("prior")).integrated.count()
+      val (full, fullSec) = timed(EntityResolution.resolve(all, cfg("full")))
+      val (inc, incSec) = timed(
+        EntityResolution.resolveIncremental(all.filter(isNew), s"$work/prior", cfg("inc")))
+      obj(Seq(
+        "docs" -> all.count().toString,
+        "batch_frac" -> num(1.0 / 25, 3),
+        "full_sec" -> num(fullSec, 2),
+        "incremental_sec" -> num(incSec, 2),
+        "speedup" -> num(fullSec / incSec, 2),
+        "full_scored_pairs" -> full.candidatePairs.count().toString,
+        "incremental_scored_pairs" -> inc.candidatePairs.count().toString))
+    } finally {
+      spark.stop()
+      FileUtils.deleteQuietly(new java.io.File(work))
+    }
+  }
+
+  // ---- Pure parts: host sizing and the JSON lines (BenchSpec).
+
+  /** The corpus this host measures (`entities`, plus a small warm-up
+    * corpus) and the pair's N, or why there is no pair. */
+  private[graft] case class HostPlan(entities: Long, pair: Either[String, Int]) {
+    def warmupEntities: Long = math.max(1000L, entities / 50)
+  }
+
+  private[graft] object HostPlan {
+    def of(nproc: Int, maxHeapBytes: Long): HostPlan = {
+      val heapGiB = maxHeapBytes.toDouble / (1L << 30)
+      val entities = math.min(25000L * nproc, (16000 * heapGiB).toLong) / 1000 * 1000
+      HostPlan(math.max(2000L, entities),
+        if (nproc >= 4) Right(nproc / 4)
+        else Left(s"nproc=$nproc: the N to 4N pair needs at least 4 cores"))
+    }
+  }
+
+  /** One measured level of the pair: the timed resolve's wall and output
+    * rows, the task metrics Spark reported for it, the calibration probe's
+    * task-seconds, and the host's busy and stolen core-seconds over the
+    * timed region. */
+  private[graft] case class Level(cores: Int, sec: Double, docs: Long, taskSec: Double,
+                                  cpuSec: Double, gcSec: Double, nTasks: Long,
+                                  calCoreSec: Double, busySec: Double, stealSec: Double,
+                                  shufflePartitions: Int) {
+    /** Fraction of wanted CPU the hypervisor gave to another tenant during
+      * the timed region (host interference, not pipeline behaviour). */
+    def stealPct: Double =
+      if (stealSec.isNaN || busySec.isNaN || stealSec + busySec <= 0) Double.NaN
+      else stealSec / (stealSec + busySec)
+  }
+
+  /** Keys of the old local[32] throughput point; null unless the pair itself
+    * measured a 32-core level. */
+  private val local32Keys = Seq("sec_local32", "docs_per_sec_local32", "steal_pct_local32",
+    "n_tasks_local32", "scaling_efficiency_4_to_32")
+
+  /** The `er_scaling` object for the pair (`n` at N cores, `fourN` at 4N). */
+  private[graft] def scalingJson(entities: Long, n: Level, fourN: Level): String = {
+    val eff = (n.sec / fourN.sec) / 4.0
+    val freqRatio = fourN.calCoreSec / n.calCoreSec
+    val inflation = fourN.taskSec / n.taskSec
+    // a quiet, sane pair carries no caveat; otherwise the reason it must not
+    // be read as the pipeline's scaling is on its face. Identical work cannot
+    // cost fewer task-seconds at 4N threads than at N, so inflation < 0.95
+    // says the N side was slowed from outside (a ratio-flattering window).
+    val caveats =
+      (if (n.stealPct > 0.10 || fourN.stealPct > 0.10)
+         Seq(f"steal>10%% on a measured side (local${n.cores}=${n.stealPct * 100}%.1f%%, " +
+           f"local${fourN.cores}=${fourN.stealPct * 100}%.1f%%)")
+       else Nil) ++
+      (if (inflation < 0.95)
+         Seq(f"work_inflation_1_to_4=$inflation%.3f<0.95: the N side was externally slowed")
+       else Nil)
+    def perLevel(key: String, f: Level => String): Seq[(String, String)] =
+      Seq(n, fourN).map(l => s"$key${l.cores}" -> f(l))
+    val fields =
+      Seq("entities" -> entities.toString, "docs" -> fourN.docs.toString,
+        "n_cores" -> n.cores.toString, "four_n_cores" -> fourN.cores.toString) ++
+      perLevel("sec_local", l => num(l.sec, 2)) ++
+      perLevel("docs_per_sec_local", l => num(l.docs / l.sec, 1)) ++
+      Seq("scaling_efficiency_n_to_4n" -> num(eff, 3)) ++
+      (if (caveats.isEmpty) Nil else Seq("gate_caveat" -> str(caveats.mkString("; ")))) ++
+      Seq("freq_cal_core_sec" -> obj(Seq(n, fourN).map(l => s"local${l.cores}" -> num(l.calCoreSec, 2))),
+        "freq_ratio_n_to_4n" -> num(freqRatio, 3),
+        "scaling_efficiency_n_to_4n_freq_normalized" -> num(eff * freqRatio, 3)) ++
+      perLevel("task_sec_local", l => num(l.taskSec, 1)) ++
+      perLevel("cpu_sec_local", l => num(l.cpuSec, 1)) ++
+      perLevel("gc_sec_local", l => num(l.gcSec, 1)) ++
+      Seq("work_inflation_1_to_4" -> num(inflation, 3)) ++
+      perLevel("n_tasks_local", _.nTasks.toString) ++
+      perLevel("steal_pct_local", l => num(l.stealPct * 100, 1)) ++
+      perLevel("shuffle_partitions_local", _.shufflePartitions.toString)
+    val have = fields.map(_._1).toSet
+    obj(fields ++ local32Keys.filterNot(have).map(_ -> "null") ++
+      Seq("jvm_per_level" -> "false", "warmup_per_suite" -> "true"))
+  }
+
+  private[graft] def headFields(results: Seq[(String, Double)],
+                                sfDir: String): Seq[(String, String)] =
+    Seq("metric" -> str("total"), "value" -> num(results.map(_._2).sum, 3),
+      "unit" -> str("sec"), "queries" -> obj(results.map { case (k, v) => k -> num(v, 3) }),
+      "sf" -> str(sfDir))
+
+  /** `er_scaling`: the pair's object, or null beside the reason there is
+    * no pair. */
+  private[graft] def erFields(pair: Either[String, String]): Seq[(String, String)] =
+    pair.fold(reason => Seq("er_scaling" -> "null", "er_scaling_absent" -> str(reason)),
+      json => Seq("er_scaling" -> json))
+
+  /** One output line: the headline fields, the `er_scaling` fields and
+    * `er_incremental` (each null until its stage has run). */
+  private[graft] def line(head: Seq[(String, String)], er: Seq[(String, String)],
+                          inc: String): String =
+    obj(head ++ er :+ ("er_incremental" -> inc))
+
+  /** A JSON number, or null for NaN / infinity (strict JSON has neither). */
+  private[graft] def num(x: Double, digits: Int): String =
+    if (x.isNaN || x.isInfinite) "null"
+    else String.format(Locale.ROOT, s"%.${digits}f", Double.box(x))
+
+  private[graft] def str(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
+  private[graft] def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
 }

@@ -35,9 +35,7 @@ object GraftSession {
       .withExtensions(new graft.plans.GraftExtensions)
     val b = (if (sys.props.contains("spark.master")) base
              else base.master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-          math.max(64, cpus).toString))
+      .config("spark.sql.shuffle.partitions", math.max(64, cpus).toString)
       .config("spark.sql.adaptive.enabled", "true")
       // Leaf-scan splits floor at 4 tasks/core: the default split formula
       // (totalBytes/128 MB) hands a ~600 MB table to ANY level as ~6 fat

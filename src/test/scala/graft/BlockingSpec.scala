@@ -7,7 +7,7 @@ import graft.blocking.Blocking
 import graft.pipeline.EntityResolution
 import graft.testgen.WebCorpus
 
-class BlockingSpec extends AnyFunSuite {
+class BlockingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private lazy val records = EntityResolution.normalizeWithSig(
@@ -101,42 +101,43 @@ class BlockingSpec extends AnyFunSuite {
     val batch = allRecs.filter(isBatch)
     assert(batch.count() == 10, "crafted batch wrong size")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-keyfold").toString
-    def mat(name: String, df: org.apache.spark.sql.DataFrame) = {
-      df.write.mode("overwrite").parquet(s"$dir/$name")
-      spark.read.parquet(s"$dir/$name")
+    withTempDir("graft-keyfold") { dir =>
+      def mat(name: String, df: org.apache.spark.sql.DataFrame) = {
+        df.write.mode("overwrite").parquet(s"$dir/$name")
+        spark.read.parquet(s"$dir/$name")
+      }
+      val (pk0, _, pr0, ps0) = Blocking.blockKeysWithCounts(oldRecs, cfg)
+      val pk = mat("keys_prior", pk0)
+      val pr = mat("raw_prior", pr0)
+      val ps = mat("s2_prior", ps0)
+
+      val all = oldRecs.unionByName(batch)
+      val (keysFold, statsFold, changed) =
+        Blocking.mergeBlockKeys(pk, pr, ps, batch, all, cfg, (n, df) => mat(s"st_$n", df))
+      val (keysFull, statsFull, rawFull, s2Full) = Blocking.blockKeysWithCounts(all, cfg)
+
+      def biEq(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+        a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
+      assert(biEq(keysFold, keysFull), "folded keys differ from full recompute")
+      assert(biEq(spark.read.parquet(s"$dir/st_raw_counts"), rawFull),
+        "folded raw counts differ")
+      assert(biEq(spark.read.parquet(s"$dir/st_sizes2"), s2Full),
+        "folded final block sizes differ")
+      assert(statsFold.collect().toSeq == statsFull.collect().toSeq,
+        "folded stats frame differs")
+
+      // changed-id set == the exact per-id key-set diff over OLD records
+      def keySets(df: org.apache.spark.sql.DataFrame) = df.groupBy("id")
+        .agg(sort_array(collect_list(col("block_key"))).as("ks"))
+      val fullOldKeys = keysFull.join(oldRecs.select("id"), Seq("id"), "left_semi")
+      val expectChanged = keySets(pk).withColumnRenamed("ks", "ks_prior")
+        .join(keySets(fullOldKeys), Seq("id"), "full_outer")
+        .filter(not(col("ks_prior") <=> col("ks")))
+        .select("id")
+      assert(biEq(changed, expectChanged), "changed-id set is not the exact key-set diff")
+      // non-trivial: the batch must actually push ≥1 raw block across a class
+      assert(changed.count() > 0, "no block crossed a size class — loosen the split or maxBlock")
     }
-    val (pk0, _, pr0, ps0) = Blocking.blockKeysWithCounts(oldRecs, cfg)
-    val pk = mat("keys_prior", pk0)
-    val pr = mat("raw_prior", pr0)
-    val ps = mat("s2_prior", ps0)
-
-    val all = oldRecs.unionByName(batch)
-    val (keysFold, statsFold, changed) =
-      Blocking.mergeBlockKeys(pk, pr, ps, batch, all, cfg, (n, df) => mat(s"st_$n", df))
-    val (keysFull, statsFull, rawFull, s2Full) = Blocking.blockKeysWithCounts(all, cfg)
-
-    def biEq(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
-      a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
-    assert(biEq(keysFold, keysFull), "folded keys differ from full recompute")
-    assert(biEq(spark.read.parquet(s"$dir/st_raw_counts"), rawFull),
-      "folded raw counts differ")
-    assert(biEq(spark.read.parquet(s"$dir/st_sizes2"), s2Full),
-      "folded final block sizes differ")
-    assert(statsFold.collect().toSeq == statsFull.collect().toSeq,
-      "folded stats frame differs")
-
-    // changed-id set == the exact per-id key-set diff over OLD records
-    def keySets(df: org.apache.spark.sql.DataFrame) = df.groupBy("id")
-      .agg(sort_array(collect_list(col("block_key"))).as("ks"))
-    val fullOldKeys = keysFull.join(oldRecs.select("id"), Seq("id"), "left_semi")
-    val expectChanged = keySets(pk).withColumnRenamed("ks", "ks_prior")
-      .join(keySets(fullOldKeys), Seq("id"), "full_outer")
-      .filter(not(col("ks_prior") <=> col("ks")))
-      .select("id")
-    assert(biEq(changed, expectChanged), "changed-id set is not the exact key-set diff")
-    // non-trivial: the batch must actually push ≥1 raw block across a class
-    assert(changed.count() > 0, "no block crossed a size class — loosen the split or maxBlock")
   }
 
   test("sorted-neighborhood emission is unique without a dedup shuffle") {
@@ -162,22 +163,23 @@ class BlockingSpec extends AnyFunSuite {
     // its bucket distribution, so the pair set must be a pure content
     // function. Write the same records in two very different layouts, SN
     // them through the incremental path's semi-join shape, assert equality.
-    val dir = java.nio.file.Files.createTempDirectory("graft-snlayout").toString
-    records.coalesce(1).write.mode("overwrite").parquet(s"$dir/one")
-    records.repartition(13).write.mode("overwrite").parquet(s"$dir/many")
-    val subsetIds = records.select("id").limit(300)
-    def snOf(path: String) = {
-      val recs = spark.read.parquet(path)
-      val bucketOf = substring(col("sort_key"), 1, Blocking.Config().snBucketLen)
-      val touched = recs.join(subsetIds, Seq("id"), "left_semi")
-        .select(bucketOf.as("b")).distinct()
-      Blocking.sortedNeighborhoodPairs(
-        recs.join(touched, bucketOf === col("b"), "left_semi"))
+    withTempDir("graft-snlayout") { dir =>
+      records.coalesce(1).write.mode("overwrite").parquet(s"$dir/one")
+      records.repartition(13).write.mode("overwrite").parquet(s"$dir/many")
+      val subsetIds = records.select("id").limit(300)
+      def snOf(path: String) = {
+        val recs = spark.read.parquet(path)
+        val bucketOf = substring(col("sort_key"), 1, Blocking.Config().snBucketLen)
+        val touched = recs.join(subsetIds, Seq("id"), "left_semi")
+          .select(bucketOf.as("b")).distinct()
+        Blocking.sortedNeighborhoodPairs(
+          recs.join(touched, bucketOf === col("b"), "left_semi"))
+      }
+      val a = snOf(s"$dir/one")
+      val b = snOf(s"$dir/many")
+      assert(a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+        "SN pair set depends on the input parquet layout")
     }
-    val a = snOf(s"$dir/one")
-    val b = snOf(s"$dir/many")
-    assert(a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-      "SN pair set depends on the input parquet layout")
   }
 
   test("writeBlockTables == blockKeysWithCounts lineage (incl. still-hot drop branch)") {
@@ -207,17 +209,18 @@ class BlockingSpec extends AnyFunSuite {
     for ((recs, cfg, wantDrops) <- Seq(
         (records, Blocking.Config(), false),
         (records.unionByName(hotRecs), Blocking.Config(maxBlock = 8), true))) {
-      val dir = java.nio.file.Files.createTempDirectory("graft-blocktables").toString
-      Blocking.writeBlockTables(recs, dir, cfg)
-      val (k, _, r, s2) = Blocking.blockKeysWithCounts(recs, cfg)
-      assert(biEq(spark.read.parquet(s"$dir/keys.parquet"), k), "staged keys differ")
-      assert(biEq(spark.read.parquet(s"$dir/raw_counts.parquet"), r), "staged raw counts differ")
-      assert(biEq(spark.read.parquet(s"$dir/sizes2.parquet"), s2), "staged sizes differ")
-      assert(!new java.io.File(s"$dir/keyed_all.parquet").exists(),
-        "keyed_all scratch not cleaned up")
-      val dropped = Blocking.statsOf(spark.read.parquet(s"$dir/sizes2.parquet"), cfg)
-        .head().getAs[Long]("dropped_rows")
-      if (wantDrops) assert(dropped > 0, "crafted still-hot block did not trigger the drop branch")
+      withTempDir("graft-blocktables") { dir =>
+        Blocking.writeBlockTables(recs, dir, cfg)
+        val (k, _, r, s2) = Blocking.blockKeysWithCounts(recs, cfg)
+        assert(biEq(spark.read.parquet(s"$dir/keys.parquet"), k), "staged keys differ")
+        assert(biEq(spark.read.parquet(s"$dir/raw_counts.parquet"), r), "staged raw counts differ")
+        assert(biEq(spark.read.parquet(s"$dir/sizes2.parquet"), s2), "staged sizes differ")
+        assert(!new java.io.File(s"$dir/keyed_all.parquet").exists(),
+          "keyed_all scratch not cleaned up")
+        val dropped = Blocking.statsOf(spark.read.parquet(s"$dir/sizes2.parquet"), cfg)
+          .head().getAs[Long]("dropped_rows")
+        if (wantDrops) assert(dropped > 0, "crafted still-hot block did not trigger the drop branch")
+      }
     }
   }
 }

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.{Catalog, QueryService}
 
-class CatalogSpec extends AnyFunSuite {
+class CatalogSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -48,16 +48,18 @@ class CatalogSpec extends AnyFunSuite {
 
   test("published snapshot tables are queryable through the SQL surface") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cat-pub").toString + "/seg"
-    graft.publish.Downstream.publishAtomic(
-      Seq(("i1", "u1"), ("i1", "u2")).toDF("item_id", "user_id"), dir)
-    Catalog.registerPublished(spark, "segments_latest", dir)
-    assert(spark.sql("SELECT count(*) n FROM segments_latest").head().getLong(0) == 2)
-    // a publish + re-register moves the view to the new snapshot
-    graft.publish.Downstream.publishAtomic(
-      Seq(("i2", "u9")).toDF("item_id", "user_id"), dir)
-    Catalog.registerPublished(spark, "segments_latest", dir)
-    assert(spark.sql("SELECT item_id FROM segments_latest").head().getString(0) == "i2")
+    withTempDir("graft-cat-pub") { tmp =>
+      val dir = tmp + "/seg"
+      graft.publish.Downstream.publishAtomic(
+        Seq(("i1", "u1"), ("i1", "u2")).toDF("item_id", "user_id"), dir)
+      Catalog.registerPublished(spark, "segments_latest", dir)
+      assert(spark.sql("SELECT count(*) n FROM segments_latest").head().getLong(0) == 2)
+      // a publish + re-register moves the view to the new snapshot
+      graft.publish.Downstream.publishAtomic(
+        Seq(("i2", "u9")).toDF("item_id", "user_id"), dir)
+      Catalog.registerPublished(spark, "segments_latest", dir)
+      assert(spark.sql("SELECT item_id FROM segments_latest").head().getString(0) == "i2")
+    }
   }
 
   test("result shaping: inline under cap; preview + CSV export over cap") {
@@ -65,71 +67,74 @@ class CatalogSpec extends AnyFunSuite {
     val small = QueryService.execute(spark, "SELECT * FROM part LIMIT 5")
     assert(!small.truncated && small.inline.size == 5 && small.csvPath.isEmpty)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-export").toString
-    val big = QueryService.execute(spark,
-      "SELECT o_orderkey FROM orders ORDER BY o_orderkey", Some(dir))
-    assert(big.truncated)
-    assert(big.inline.size == QueryService.PreviewRows)
-    assert(big.totalRows.contains(spark.table("orders").count()))
-    // full result exported as header CSV, preview is its head
-    val back = spark.read.option("header", "true").csv(big.csvPath.get)
-    assert(back.count() == big.totalRows.get)
-    assert(big.inline.head.getLong(0).toString ==
-      back.orderBy(col("o_orderkey").cast("long")).head().getString(0))
+    withTempDir("graft-export") { dir =>
+      val big = QueryService.execute(spark,
+        "SELECT o_orderkey FROM orders ORDER BY o_orderkey", Some(dir))
+      assert(big.truncated)
+      assert(big.inline.size == QueryService.PreviewRows)
+      assert(big.totalRows.contains(spark.table("orders").count()))
+      // full result exported as header CSV, preview is its head
+      val back = spark.read.option("header", "true").csv(big.csvPath.get)
+      assert(back.count() == big.totalRows.get)
+      assert(big.inline.head.getLong(0).toString ==
+        back.orderBy(col("o_orderkey").cast("long")).head().getString(0))
+    }
   }
 
   test("truncated export path executes the plan once: count rides the write job") {
     Catalog.register(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-export-once").toString
-    val text = "SELECT o_orderkey FROM orders"
-    val expected = spark.table("orders").count()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    // the listener bus is async and not publicly drainable — poll the
-    // counter until it stabilizes (unchanged for 300 ms, max 5 s)
-    def settled(): Int = {
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      var last = -1
-      while (System.nanoTime() < deadline && jobs.get() != last) {
-        last = jobs.get(); Thread.sleep(300)
+    withTempDir("graft-export-once") { dir =>
+      val text = "SELECT o_orderkey FROM orders"
+      val expected = spark.table("orders").count()
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
       }
-      jobs.get()
+      // the listener bus is async and not publicly drainable — poll the
+      // counter until it stabilizes (unchanged for 300 ms, max 5 s)
+      def settled(): Int = {
+        val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+        var last = -1
+        while (System.nanoTime() < deadline && jobs.get() != last) {
+          last = jobs.get(); Thread.sleep(300)
+        }
+        jobs.get()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        // baseline: how many jobs does the take(cap+1) probe alone cost on
+        // this plan (LIMIT escalation may use several partial-scan jobs)
+        spark.sql(text).take(QueryService.InlineRowCap + 1)
+        val takeJobs = settled()
+        jobs.set(0)
+        val r = QueryService.execute(spark, text, Some(dir))
+        val execJobs = settled()
+        // probe + ONE export job; a fallback df.count() (a third plan
+        // execution) would exceed the bound — the row count must arrive via
+        // the observation riding the write
+        assert(execJobs <= takeJobs + 1,
+          s"export path ran $execJobs jobs (take-probe baseline $takeJobs + 1 write)")
+        assert(r.truncated && r.csvPath.isDefined && r.totalRows.contains(expected))
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // baseline: how many jobs does the take(cap+1) probe alone cost on
-      // this plan (LIMIT escalation may use several partial-scan jobs)
-      spark.sql(text).take(QueryService.InlineRowCap + 1)
-      val takeJobs = settled()
-      jobs.set(0)
-      val r = QueryService.execute(spark, text, Some(dir))
-      val execJobs = settled()
-      // probe + ONE export job; a fallback df.count() (a third plan
-      // execution) would exceed the bound — the row count must arrive via
-      // the observation riding the write
-      assert(execJobs <= takeJobs + 1,
-        s"export path ran $execJobs jobs (take-probe baseline $takeJobs + 1 write)")
-      assert(r.truncated && r.csvPath.isDefined && r.totalRows.contains(expected))
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("CSV export writes partitioned (one part per partition, no single-task funnel)") {
     Catalog.register(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-export-par").toString
-    // numbered REPARTITION hints are never AQE-coalesced, so the result
-    // frame has exactly 4 partitions — the export must write all 4 in
-    // parallel tasks, not coalesce(1) them through one
-    val r = QueryService.execute(spark,
-      "SELECT /*+ REPARTITION(4) */ o_orderkey FROM orders", Some(dir))
-    assert(r.truncated && r.csvPath.isDefined)
-    val parts = new java.io.File(r.csvPath.get).listFiles()
-      .count(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
-    assert(parts == 4, s"expected 4 part files, saw $parts")
-    val back = spark.read.option("header", "true").csv(r.csvPath.get)
-    assert(back.count() == r.totalRows.get)
+    withTempDir("graft-export-par") { dir =>
+      // numbered REPARTITION hints are never AQE-coalesced, so the result
+      // frame has exactly 4 partitions — the export must write all 4 in
+      // parallel tasks, not coalesce(1) them through one
+      val r = QueryService.execute(spark,
+        "SELECT /*+ REPARTITION(4) */ o_orderkey FROM orders", Some(dir))
+      assert(r.truncated && r.csvPath.isDefined)
+      val parts = new java.io.File(r.csvPath.get).listFiles()
+        .count(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
+      assert(parts == 4, s"expected 4 part files, saw $parts")
+      val back = spark.read.option("header", "true").csv(r.csvPath.get)
+      assert(back.count() == r.totalRows.get)
+    }
   }
 
   test("read-only SQL surface: commands and DML are rejected structurally, SELECT runs") {

@@ -15,14 +15,16 @@ import graft.testgen.WebCorpus
  * the internal shuffle-key bytes: every externally visible output must be
  * bit-identical.
  */
-class IdBitsSpec extends AnyFunSuite {
+class IdBitsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   val N = 800L
 
   lazy val pages = WebCorpus.pages(spark, N).toDF().cache()
-  lazy val r64 = EntityResolution.resolve(pages)
-  lazy val r128 = EntityResolution.resolve(pages, EntityResolution.Config(idBits = 128))
+  lazy val r64 = EntityResolution.resolve(pages,
+    EntityResolution.Config(workDir = Some(s"$suiteDir/r64")))
+  lazy val r128 = EntityResolution.resolve(pages,
+    EntityResolution.Config(idBits = 128, workDir = Some(s"$suiteDir/r128")))
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     val cols = df.columns.sorted
@@ -58,8 +60,10 @@ class IdBitsSpec extends AnyFunSuite {
 
   test("auditIds works on binary ids") {
     // must not throw: countDistinct over BinaryType backs the audit
-    EntityResolution.resolve(pages,
-      EntityResolution.Config(idBits = 128), auditIds = true).integrated.count()
+    withTempDir("idbits-audit") { work =>
+      EntityResolution.resolve(pages, EntityResolution.Config(idBits = 128,
+        workDir = Some(work)), auditIds = true).integrated.count()
+    }
   }
 
   // deterministic content-defined 80/20 split (same pattern as IncrementalSpec)
@@ -68,21 +72,25 @@ class IdBitsSpec extends AnyFunSuite {
   private lazy val batch = pages.filter(slot === 4)
 
   test("incremental fold refuses to mix id widths (config signature)") {
-    val work = java.nio.file.Files.createTempDirectory("idbits-prior").toString
-    EntityResolution.resolve(old,
-      EntityResolution.Config(idBits = 128, workDir = Some(work))).integrated.count()
-    val e = intercept[IllegalArgumentException] {
-      EntityResolution.resolveIncremental(batch, work, EntityResolution.Config())
+    withTempDir("idbits-prior") { work =>
+      EntityResolution.resolve(old,
+        EntityResolution.Config(idBits = 128, workDir = Some(work))).integrated.count()
+      val e = intercept[IllegalArgumentException] {
+        EntityResolution.resolveIncremental(batch, work,
+          EntityResolution.Config(workDir = Some(s"$work/fold")))
+      }
+      assert(e.getMessage.contains("config changed"))
     }
-    assert(e.getMessage.contains("config changed"))
   }
 
   test("incremental fold at 128-bit ids equals a full 128-bit re-resolve") {
-    val work = java.nio.file.Files.createTempDirectory("idbits-inc-prior").toString
-    val cfg = EntityResolution.Config(idBits = 128)
-    EntityResolution.resolve(old, cfg.copy(workDir = Some(work))).integrated.count()
-    val inc = EntityResolution.resolveIncremental(batch, work, cfg)
-    val full = EntityResolution.resolve(pages, cfg)
-    assert(rows(inc.integrated) == rows(full.integrated))
+    withTempDir("idbits-inc") { root =>
+      val cfg = EntityResolution.Config(idBits = 128)
+      EntityResolution.resolve(old, cfg.copy(workDir = Some(s"$root/prior"))).integrated.count()
+      val inc = EntityResolution.resolveIncremental(batch, s"$root/prior",
+        cfg.copy(workDir = Some(s"$root/inc")))
+      val full = EntityResolution.resolve(pages, cfg.copy(workDir = Some(s"$root/full")))
+      assert(rows(inc.integrated) == rows(full.integrated))
+    }
   }
 }

@@ -15,77 +15,78 @@ import graft.pipeline.EntityResolution
  * everything — while scoring only new-involving candidate pairs and
  * re-clustering only components touched by a new edge.
  */
-class IncrementalSpec extends AnyFunSuite {
+class IncrementalSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("chained incremental resolves == full re-resolve (bit-exact)") {
-    val all = graft.testgen.WebCorpus.pages(spark, 800).toDF().cache()
-    // deterministic content-defined splits: 60% old, two 20% batches
-    val slot = pmod(xxhash64(col("url")), lit(5))
-    val oldPages = all.filter(slot < 3)
-    val batch1 = all.filter(slot === 3)
-    val batch2 = all.filter(slot === 4)
-    assert(batch1.count() > 100 && batch2.count() > 100,
-      "split produced a trivial batch")
+    withTempDir("graft-inc") { root =>
+      val all = graft.testgen.WebCorpus.pages(spark, 800).toDF().cache()
+      // deterministic content-defined splits: 60% old, two 20% batches
+      val slot = pmod(xxhash64(col("url")), lit(5))
+      val oldPages = all.filter(slot < 3)
+      val batch1 = all.filter(slot === 3)
+      val batch2 = all.filter(slot === 4)
+      assert(batch1.count() > 100 && batch2.count() > 100,
+        "split produced a trivial batch")
 
-    val Seq(d1, d2, d3, d4) = (1 to 4).map(i =>
-      Files.createTempDirectory(s"graft-inc$i").toString)
+      val Seq(d1, d2, d3, d4, d5) = (1 to 5).map(i => s"$root/d$i")
 
-    val prior = EntityResolution.resolve(oldPages,
-      EntityResolution.Config(workDir = Some(d1)))
-    prior.integrated.count() // force stage tables
+      val prior = EntityResolution.resolve(oldPages,
+        EntityResolution.Config(workDir = Some(d1)))
+      prior.integrated.count() // force stage tables
 
-    val inc1 = EntityResolution.resolveIncremental(batch1, d1,
-      EntityResolution.Config(workDir = Some(d2)))
-    inc1.integrated.count() // force: d2 is the next batch's prior state
-    val inc2 = EntityResolution.resolveIncremental(batch2, d2,
-      EntityResolution.Config(workDir = Some(d3)))
-    val full = EntityResolution.resolve(all,
-      EntityResolution.Config(workDir = Some(d4)))
+      val inc1 = EntityResolution.resolveIncremental(batch1, d1,
+        EntityResolution.Config(workDir = Some(d2)))
+      inc1.integrated.count() // force: d2 is the next batch's prior state
+      val inc2 = EntityResolution.resolveIncremental(batch2, d2,
+        EntityResolution.Config(workDir = Some(d3)))
+      val full = EntityResolution.resolve(all,
+        EntityResolution.Config(workDir = Some(d4)))
 
-    val cols = Seq("RecordId", "InputSourceARN", "MatchID", "ConfidenceLevel")
-    val a = inc2.integrated.select(cols.map(col): _*)
-    val b = full.integrated.select(cols.map(col): _*)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-      "chained incremental integrated table differs from full re-resolve")
+      val cols = Seq("RecordId", "InputSourceARN", "MatchID", "ConfidenceLevel")
+      val a = inc2.integrated.select(cols.map(col): _*)
+      val b = full.integrated.select(cols.map(col): _*)
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
+        "chained incremental integrated table differs from full re-resolve")
 
-    // the work proof: every pair the second increment scored involves a
-    // batch-2 record — no old×old rescoring
-    val b2Urls = batch2.select(col("url").as("u"))
-    val scoredOldOld = inc2.candidatePairs
-      .join(b2Urls.withColumnRenamed("u", "main_url"), Seq("main_url"), "left_anti")
-      .join(b2Urls.withColumnRenamed("u", "sub_url"), Seq("sub_url"), "left_anti")
-    assert(scoredOldOld.count() == 0, "incremental run generated old×old pairs")
+      // the work proof: every pair the second increment scored involves a
+      // batch-2 record — no old×old rescoring
+      val b2Urls = batch2.select(col("url").as("u"))
+      val scoredOldOld = inc2.candidatePairs
+        .join(b2Urls.withColumnRenamed("u", "main_url"), Seq("main_url"), "left_anti")
+        .join(b2Urls.withColumnRenamed("u", "sub_url"), Seq("sub_url"), "left_anti")
+      assert(scoredOldOld.count() == 0, "incremental run generated old×old pairs")
 
-    // an empty follow-up batch is a no-op over valid prior state
-    val d5 = Files.createTempDirectory("graft-inc5").toString
-    val inc3 = EntityResolution.resolveIncremental(batch2.limit(0), d3,
-      EntityResolution.Config(workDir = Some(d5)))
-    assert(inc3.integrated.count() == full.integrated.count())
+      // an empty follow-up batch is a no-op over valid prior state
+      val inc3 = EntityResolution.resolveIncremental(batch2.limit(0), d3,
+        EntityResolution.Config(workDir = Some(d5)))
+      assert(inc3.integrated.count() == full.integrated.count())
+    }
   }
 
   test("beyond-broadcast fallback path (smallBatch=false) == full re-resolve") {
     // the fold's broadcast-stream shapes are gated on batch size; force the
     // gate CLOSED so the plain shuffle-join fallback shapes stay exercised
     // and bit-equal (graft.fold.broadcast.max test override)
-    val all = graft.testgen.WebCorpus.pages(spark, 500).toDF().cache()
-    val slot = pmod(xxhash64(col("url")), lit(5))
-    val Seq(p1, p2, p3) = (1 to 3).map(i =>
-      Files.createTempDirectory(s"graft-incbb$i").toString)
-    EntityResolution.resolve(all.filter(slot < 4),
-      EntityResolution.Config(workDir = Some(p1))).integrated.count()
-    sys.props("graft.fold.broadcast.max") = "0"
-    try {
-      val inc = EntityResolution.resolveIncremental(all.filter(slot === 4), p1,
-        EntityResolution.Config(workDir = Some(p2)))
-      val full = EntityResolution.resolve(all,
-        EntityResolution.Config(workDir = Some(p3)))
-      val cols = Seq("RecordId", "InputSourceARN", "MatchID", "ConfidenceLevel")
-      val a = inc.integrated.select(cols.map(col): _*)
-      val b = full.integrated.select(cols.map(col): _*)
-      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-        "beyond-broadcast fallback fold differs from full re-resolve")
-    } finally sys.props.remove("graft.fold.broadcast.max")
+    withTempDir("graft-incbb") { root =>
+      val all = graft.testgen.WebCorpus.pages(spark, 500).toDF().cache()
+      val slot = pmod(xxhash64(col("url")), lit(5))
+      val Seq(p1, p2, p3) = (1 to 3).map(i => s"$root/p$i")
+      EntityResolution.resolve(all.filter(slot < 4),
+        EntityResolution.Config(workDir = Some(p1))).integrated.count()
+      sys.props("graft.fold.broadcast.max") = "0"
+      try {
+        val inc = EntityResolution.resolveIncremental(all.filter(slot === 4), p1,
+          EntityResolution.Config(workDir = Some(p2)))
+        val full = EntityResolution.resolve(all,
+          EntityResolution.Config(workDir = Some(p3)))
+        val cols = Seq("RecordId", "InputSourceARN", "MatchID", "ConfidenceLevel")
+        val a = inc.integrated.select(cols.map(col): _*)
+        val b = full.integrated.select(cols.map(col): _*)
+        assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
+          "beyond-broadcast fallback fold differs from full re-resolve")
+      } finally sys.props.remove("graft.fold.broadcast.max")
+    }
   }
 
   test("keys-chain compaction: fold at the compaction length == full re-resolve") {
@@ -93,11 +94,10 @@ class IncrementalSpec extends AnyFunSuite {
     // delta = 2 files); the second fold then reads a compacted one-file
     // chain — both chain shapes exercised, both bit-exact vs full
     System.setProperty("graft.keys.compact.len", "2")
-    try {
+    try withTempDir("graft-cmp") { root =>
       val all = graft.testgen.WebCorpus.pages(spark, 500).toDF().cache()
       val slot = pmod(xxhash64(col("url")), lit(5))
-      val Seq(c1, c2, c3, c4) = (1 to 4).map(i =>
-        Files.createTempDirectory(s"graft-cmp$i").toString)
+      val Seq(c1, c2, c3, c4) = (1 to 4).map(i => s"$root/c$i")
       EntityResolution.resolve(all.filter(slot < 3),
         EntityResolution.Config(workDir = Some(c1))).integrated.count()
       EntityResolution.resolveIncremental(all.filter(slot === 3), c1,
@@ -137,55 +137,55 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("batch pushing a block across the re-key threshold: incremental == full") {
-    val all = hotBlockPages(spark, 40) // 80 same-domain rows
-    val batch1 = all.filter(col("url").rlike("item-3[0-4]$")) // entities 30-34
-    val batch2 = all.filter(col("url").rlike("item-3[5-9]$")) // entities 35-39
-    val old = all.exceptAll(batch1.unionAll(batch2))
-    assert(old.count() == 60 && batch1.count() == 10 && batch2.count() == 10)
+    withTempDir("graft-hot") { root =>
+      val all = hotBlockPages(spark, 40) // 80 same-domain rows
+      val batch1 = all.filter(col("url").rlike("item-3[0-4]$")) // entities 30-34
+      val batch2 = all.filter(col("url").rlike("item-3[5-9]$")) // entities 35-39
+      val old = all.exceptAll(batch1.unionAll(batch2))
+      assert(old.count() == 60 && batch1.count() == 10 && batch2.count() == 10)
 
-    val Seq(p1, p2, p3, p4) = (1 to 4).map(i =>
-      Files.createTempDirectory(s"graft-hot$i").toString)
-    EntityResolution.resolve(old,
-      EntityResolution.Config(workDir = Some(p1))).integrated.count()
-    val inc1 = EntityResolution.resolveIncremental(batch1, p1,
-      EntityResolution.Config(workDir = Some(p2)))
-    inc1.integrated.count() // force: p2 is the next fold's prior state
+      val Seq(p1, p2, p3, p4, p5) = (1 to 5).map(i => s"$root/p$i")
+      EntityResolution.resolve(old,
+        EntityResolution.Config(workDir = Some(p1))).integrated.count()
+      val inc1 = EntityResolution.resolveIncremental(batch1, p1,
+        EntityResolution.Config(workDir = Some(p2)))
+      inc1.integrated.count() // force: p2 is the next fold's prior state
 
-    // the detection fired: key-changed old records had old×old pairs rescored
-    val batch1Urls = batch1.select(col("url").as("u"))
-    val oldOld = inc1.candidatePairs
-      .join(batch1Urls.withColumnRenamed("u", "main_url"), Seq("main_url"), "left_anti")
-      .join(batch1Urls.withColumnRenamed("u", "sub_url"), Seq("sub_url"), "left_anti")
-    assert(oldOld.count() > 0,
-      "expected old×old rescoring for the key-changed block members")
-    // ... and the crossing left a NON-EMPTY tombstone table in the chain
-    val tombs = spark.read.parquet(s"$p2/keys_tombstones.parquet")
-    assert(tombs.count() > 0, "re-key crossing wrote no tombstones")
+      // the detection fired: key-changed old records had old×old pairs rescored
+      val batch1Urls = batch1.select(col("url").as("u"))
+      val oldOld = inc1.candidatePairs
+        .join(batch1Urls.withColumnRenamed("u", "main_url"), Seq("main_url"), "left_anti")
+        .join(batch1Urls.withColumnRenamed("u", "sub_url"), Seq("sub_url"), "left_anti")
+      assert(oldOld.count() > 0,
+        "expected old×old rescoring for the key-changed block members")
+      // ... and the crossing left a NON-EMPTY tombstone table in the chain
+      val tombs = spark.read.parquet(s"$p2/keys_tombstones.parquet")
+      assert(tombs.count() > 0, "re-key crossing wrote no tombstones")
 
-    // fold AGAIN over p2: assembleKeys now anti-joins a real (non-empty)
-    // tombstone set read back from the chain — the read-path equivalent of
-    // the in-memory keysAll frame BlockingSpec gates
-    val inc2 = EntityResolution.resolveIncremental(batch2, p2,
-      EntityResolution.Config(workDir = Some(p3)))
-    val full = EntityResolution.resolve(all,
-      EntityResolution.Config(workDir = Some(p4)))
+      // fold AGAIN over p2: assembleKeys now anti-joins a real (non-empty)
+      // tombstone set read back from the chain — the read-path equivalent of
+      // the in-memory keysAll frame BlockingSpec gates
+      val inc2 = EntityResolution.resolveIncremental(batch2, p2,
+        EntityResolution.Config(workDir = Some(p3)))
+      val full = EntityResolution.resolve(all,
+        EntityResolution.Config(workDir = Some(p4)))
 
-    val cols = Seq("RecordId", "InputSourceARN", "MatchID", "ConfidenceLevel")
-    val a = inc2.integrated.select(cols.map(col): _*)
-    val b = full.integrated.select(cols.map(col): _*)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-      "fold over a chain with live tombstones diverged from full re-resolve")
+      val cols = Seq("RecordId", "InputSourceARN", "MatchID", "ConfidenceLevel")
+      val a = inc2.integrated.select(cols.map(col): _*)
+      val b = full.integrated.select(cols.map(col): _*)
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
+        "fold over a chain with live tombstones diverged from full re-resolve")
 
-    // torn-manifest guard: a keys.list without its tombstones.list (crash
-    // between the ordered writes) must fail loudly, never read as "no
-    // tombstones" — that would silently resurrect every tombstoned key row
-    Files.delete(java.nio.file.Paths.get(p3, "tombstones.list"))
-    val p5 = Files.createTempDirectory("graft-hot5").toString
-    val ex = intercept[IllegalStateException] {
-      EntityResolution.resolveIncremental(batch2.limit(0), p3,
-        EntityResolution.Config(workDir = Some(p5))).integrated.count()
+      // torn-manifest guard: a keys.list without its tombstones.list (crash
+      // between the ordered writes) must fail loudly, never read as "no
+      // tombstones" — that would silently resurrect every tombstoned key row
+      Files.delete(java.nio.file.Paths.get(p3, "tombstones.list"))
+      val ex = intercept[IllegalStateException] {
+        EntityResolution.resolveIncremental(batch2.limit(0), p3,
+          EntityResolution.Config(workDir = Some(p5))).integrated.count()
+      }
+      assert(ex.getMessage.contains("torn"))
     }
-    assert(ex.getMessage.contains("torn"))
   }
 
   test("prior state missing a file every current resolve writes is refused") {
@@ -194,86 +194,91 @@ class IncrementalSpec extends AnyFunSuite {
     // the file, instead of being read under some older layout
     val all = graft.testgen.WebCorpus.pages(spark, 200).toDF()
     val isNew = pmod(xxhash64(col("url")), lit(5)) === 4
-    val d1 = Files.createTempDirectory("graft-req").toString
-    EntityResolution.resolve(all.filter(!isNew),
-      EntityResolution.Config(workDir = Some(d1))).integrated.count()
-    for (f <- Seq("raw_counts.parquet", "config.sig", "records.list", "keys.list")) {
-      val prior = Files.createTempDirectory("graft-req-prior").toFile
-      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(d1), prior)
-      org.apache.commons.io.FileUtils.forceDelete(new java.io.File(prior, f))
-      val ex = intercept[IllegalArgumentException] {
-        EntityResolution.resolveIncremental(all.filter(isNew), prior.toString,
-          EntityResolution.Config(workDir = Some(s"$prior-out")))
+    withTempDir("graft-req") { root =>
+      val d1 = s"$root/d1"
+      EntityResolution.resolve(all.filter(!isNew),
+        EntityResolution.Config(workDir = Some(d1))).integrated.count()
+      for (f <- Seq("raw_counts.parquet", "config.sig", "records.list", "keys.list")) {
+        val prior = new java.io.File(s"$root/prior-$f")
+        org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(d1), prior)
+        org.apache.commons.io.FileUtils.forceDelete(new java.io.File(prior, f))
+        val ex = intercept[IllegalArgumentException] {
+          EntityResolution.resolveIncremental(all.filter(isNew), prior.toString,
+            EntityResolution.Config(workDir = Some(s"$prior-out")))
+        }
+        assert(ex.getMessage.contains(s"lacks $f") &&
+          ex.getMessage.contains("run a full re-resolve"), s"$f: ${ex.getMessage}")
       }
-      assert(ex.getMessage.contains(s"lacks $f") &&
-        ex.getMessage.contains("run a full re-resolve"), s"$f: ${ex.getMessage}")
     }
   }
 
   test("a fold that throws leaves no writer thread, prior state as it was, no manifest") {
     val all = graft.testgen.WebCorpus.pages(spark, 300).toDF()
     val isNew = pmod(xxhash64(col("url")), lit(5)) === 4
-    val d1 = Files.createTempDirectory("graft-fail1").toString
-    val d2 = Files.createTempDirectory("graft-fail2").toString
-    EntityResolution.resolve(all.filter(!isNew),
-      EntityResolution.Config(workDir = Some(d1))).integrated.count()
-    // break the first page header of the largest prior sizes2 part: its
-    // footer stays intact, so schema inference and the raw_counts stage
-    // pass and the fold fails in the sizes2 stage, after the raw_counts
-    // write was submitted to the writer pool
-    val part = new java.io.File(d1, "sizes2.parquet").listFiles()
-      .filter(_.getName.endsWith(".parquet")).maxBy(_.length)
-    val raf = new java.io.RandomAccessFile(part, "rw")
-    try { raf.seek(4); raf.write(Array.fill[Byte](16)(-1)) } finally raf.close()
-    def snapshot(dir: String) = org.apache.commons.io.FileUtils
-      .listFiles(new java.io.File(dir), null, true).asScala
-      .map(f => (f.getPath, f.length, f.lastModified)).toSet
-    val before = snapshot(d1)
+    withTempDir("graft-fail") { root =>
+      val (d1, d2) = (s"$root/d1", s"$root/d2")
+      EntityResolution.resolve(all.filter(!isNew),
+        EntityResolution.Config(workDir = Some(d1))).integrated.count()
+      // break the first page header of the largest prior sizes2 part: its
+      // footer stays intact, so schema inference and the raw_counts stage
+      // pass and the fold fails in the sizes2 stage, after the raw_counts
+      // write was submitted to the writer pool
+      val part = new java.io.File(d1, "sizes2.parquet").listFiles()
+        .filter(_.getName.endsWith(".parquet")).maxBy(_.length)
+      val raf = new java.io.RandomAccessFile(part, "rw")
+      try { raf.seek(4); raf.write(Array.fill[Byte](16)(-1)) } finally raf.close()
+      def snapshot(dir: String) = org.apache.commons.io.FileUtils
+        .listFiles(new java.io.File(dir), null, true).asScala
+        .map(f => (f.getPath, f.length, f.lastModified)).toSet
+      val before = snapshot(d1)
 
-    val ex = intercept[Exception] {
-      EntityResolution.resolveIncremental(all.filter(isNew), d1,
-        EntityResolution.Config(workDir = Some(d2))).integrated.count()
+      val ex = intercept[Exception] {
+        EntityResolution.resolveIncremental(all.filter(isNew), d1,
+          EntityResolution.Config(workDir = Some(d2))).integrated.count()
+      }
+      val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(e => String.valueOf(e.getMessage).contains("sizes2")),
+        s"fold failed somewhere other than the sizes2 stage: $ex")
+      assert(!Thread.getAllStackTraces.keySet.asScala
+        .exists(t => t.getName == "graft-stage-write" && t.isAlive),
+        "a stage writer outlived the failed fold")
+      assert(snapshot(d1) == before, "the failed fold changed prior state")
+      val manifests = Seq("records.list", "config.sig", "keys.list", "tombstones.list")
+        .filter(f => new java.io.File(d2, f).exists())
+      assert(manifests.isEmpty, s"the failed fold wrote manifests: $manifests")
     }
-    val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
-    assert(chain.exists(e => String.valueOf(e.getMessage).contains("sizes2")),
-      s"fold failed somewhere other than the sizes2 stage: $ex")
-    assert(!Thread.getAllStackTraces.keySet.asScala
-      .exists(t => t.getName == "graft-stage-write" && t.isAlive),
-      "a stage writer outlived the failed fold")
-    assert(snapshot(d1) == before, "the failed fold changed prior state")
-    val manifests = Seq("records.list", "config.sig", "keys.list", "tombstones.list")
-      .filter(f => new java.io.File(d2, f).exists())
-    assert(manifests.isEmpty, s"the failed fold wrote manifests: $manifests")
   }
 
   test("re-crawl guard: a batch url already in prior state fails fast") {
     val all = graft.testgen.WebCorpus.pages(spark, 200).toDF()
-    val d1 = Files.createTempDirectory("graft-rc1").toString
-    val d2 = Files.createTempDirectory("graft-rc2").toString
-    EntityResolution.resolve(all,
-      EntityResolution.Config(workDir = Some(d1))).integrated.count()
-    val ex = intercept[IllegalArgumentException] {
-      EntityResolution.resolveIncremental(all.limit(3), d1,
-        EntityResolution.Config(workDir = Some(d2))).integrated.count()
+    withTempDir("graft-rc") { root =>
+      val (d1, d2) = (s"$root/d1", s"$root/d2")
+      EntityResolution.resolve(all,
+        EntityResolution.Config(workDir = Some(d1))).integrated.count()
+      val ex = intercept[IllegalArgumentException] {
+        EntityResolution.resolveIncremental(all.limit(3), d1,
+          EntityResolution.Config(workDir = Some(d2))).integrated.count()
+      }
+      assert(ex.getMessage.contains("re-crawl"))
     }
-    assert(ex.getMessage.contains("re-crawl"))
   }
 
   test("config guard: folding with a changed config fails fast (exactness is config-relative)") {
     val all = graft.testgen.WebCorpus.pages(spark, 200).toDF()
     val isNew = pmod(xxhash64(col("url")), lit(5)) === 4
-    val d1 = Files.createTempDirectory("graft-cfg1").toString
-    val d2 = Files.createTempDirectory("graft-cfg2").toString
-    EntityResolution.resolve(all.filter(!isNew),
-      EntityResolution.Config(workDir = Some(d1))).integrated.count()
-    val changed = EntityResolution.Config(
-      blocking = graft.blocking.Blocking.Config(snWindow = 7),
-      workDir = Some(d2))
-    val ex = intercept[IllegalArgumentException] {
-      EntityResolution.resolveIncremental(all.filter(isNew), d1, changed)
-        .integrated.count()
+    withTempDir("graft-cfg") { root =>
+      val (d1, d2) = (s"$root/d1", s"$root/d2")
+      EntityResolution.resolve(all.filter(!isNew),
+        EntityResolution.Config(workDir = Some(d1))).integrated.count()
+      val changed = EntityResolution.Config(
+        blocking = graft.blocking.Blocking.Config(snWindow = 7),
+        workDir = Some(d2))
+      val ex = intercept[IllegalArgumentException] {
+        EntityResolution.resolveIncremental(all.filter(isNew), d1, changed)
+          .integrated.count()
+      }
+      assert(ex.getMessage.contains("config changed"))
     }
-    assert(ex.getMessage.contains("config changed"))
   }
 
   test("config guard: negative scoring weights are rejected") {

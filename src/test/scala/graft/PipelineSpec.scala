@@ -7,7 +7,7 @@ import graft.eval.Eval
 import graft.pipeline.EntityResolution
 import graft.testgen.WebCorpus
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   val N = 1500L
@@ -15,7 +15,8 @@ class PipelineSpec extends AnyFunSuite {
   lazy val pages = WebCorpus.pages(spark, N).toDF().cache()
   lazy val labeled = WebCorpus.labeledPairs(spark, N).toDF()
     .select(col("main_url"), col("sub_url"))
-  lazy val result = EntityResolution.resolve(pages)
+  lazy val result = EntityResolution.resolve(pages,
+    EntityResolution.Config(workDir = Some(s"$suiteDir/resolve")))
 
   test("pairwise F1 >= 0.99 on labeled pairs at shared blocking key (north rule)") {
     val m = Eval.pairwiseF1(
@@ -54,7 +55,8 @@ class PipelineSpec extends AnyFunSuite {
     val a = result.integrated.select("RecordId", "MatchID").orderBy("RecordId").collect()
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "3")
-      val r2 = EntityResolution.resolve(pages.repartition(3))
+      val r2 = EntityResolution.resolve(pages.repartition(3),
+        EntityResolution.Config(workDir = Some(s"$suiteDir/repartitioned")))
       val b = r2.integrated.select("RecordId", "MatchID").orderBy("RecordId").collect()
       assert(a.sameElements(b), "clusters must not depend on partitioning")
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)

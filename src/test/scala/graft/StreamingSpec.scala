@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventStream
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("streaming windowed counts equal the batch equivalent") {
@@ -23,23 +23,25 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     // two files → two micro-batches (maxFilesPerTrigger=1); the later file
     // carries an EARLIER event for key "b": state must replace it
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-dedup").toString
-    Seq((10L, "a", "2021-01-01 10:00:00", 1.0), (11L, "b", "2021-01-01 11:00:00", 1.0))
-      .toDF("event_id", "event_type", "ts", "value")
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .coalesce(1).write.parquet(s"$dir/f1")
-    Seq((12L, "b", "2021-01-01 09:00:00", 1.0), (13L, "a", "2021-01-01 12:00:00", 1.0))
-      .toDF("event_id", "event_type", "ts", "value")
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .coalesce(1).write.parquet(s"$dir/f2")
-    val flat = java.nio.file.Files.createTempDirectory("graft-stream-flat").toString
-    // flatten the two part files into one source dir
-    for (sub <- Seq("f1", "f2");
-         f <- new java.io.File(s"$dir/$sub").listFiles if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(s"$flat/$sub.parquet"))
-    val got = EventStream.firstSeen(spark, flat, queryName = "fs_spec")
-      .orderBy("event_type").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    assert(got.toSeq == Seq(("a", 10L), ("b", 12L)))
+    withTempDir("graft-stream-dedup") { dir =>
+      Seq((10L, "a", "2021-01-01 10:00:00", 1.0), (11L, "b", "2021-01-01 11:00:00", 1.0))
+        .toDF("event_id", "event_type", "ts", "value")
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .coalesce(1).write.parquet(s"$dir/f1")
+      Seq((12L, "b", "2021-01-01 09:00:00", 1.0), (13L, "a", "2021-01-01 12:00:00", 1.0))
+        .toDF("event_id", "event_type", "ts", "value")
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .coalesce(1).write.parquet(s"$dir/f2")
+      withTempDir("graft-stream-flat") { flat =>
+        // flatten the two part files into one source dir
+        for (sub <- Seq("f1", "f2");
+             f <- new java.io.File(s"$dir/$sub").listFiles if f.getName.endsWith(".parquet"))
+          java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(s"$flat/$sub.parquet"))
+        val got = EventStream.firstSeen(spark, flat, queryName = "fs_spec")
+          .orderBy("event_type").collect()
+          .map(r => (r.getString(0), r.getLong(1)))
+        assert(got.toSeq == Seq(("a", 10L), ("b", 12L)))
+      }
+    }
   }
 }
