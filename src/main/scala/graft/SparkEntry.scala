@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.eval.Eval
 import graft.functions.GraftFunctions._
 import graft.ops.{Ann, Dedup, Multimodal, TextAnalysis}
-import graft.pipeline.EntityResolution
+import graft.pipeline.{EntityResolution, Stage}
 import graft.publish.Downstream
 import graft.testgen.WebCorpus
 
@@ -33,21 +33,28 @@ object SparkEntry {
    * overwritten (tiny tables) so a code change never leaves a stale oracle
    * input. Returns the re-read frame.
    */
-  private def sideTable(s: SparkSession, sfDir: String, name: String)
-                       (df: => DataFrame): DataFrame = {
-    val p = s"${WebCorpus.matDir(sfDir)}/$name.parquet"
-    df.coalesce(1).write.mode("overwrite").parquet(p)
-    s.read.parquet(p)
-  }
+  private def sideTable(sfDir: String, name: String)
+                       (df: => DataFrame): DataFrame =
+    Stage.write(df.coalesce(1), s"${WebCorpus.matDir(sfDir)}/$name.parquet")
 
-  // ER pipeline result cached per (session, scale dir) — several queries
-  // expose slices of it; keying on the session id keeps a later session from
-  // receiving DataFrames bound to a stopped one
+  // ER pipeline result, one per materialization dir — several queries expose
+  // slices of it, and every spelling of a scale dir ("sf0.001", a full path)
+  // shares the one resolve and its work dir. Held with the session that made
+  // it: another session re-resolves and replaces the entry, so no DataFrame
+  // bound to a stopped session is handed out, and no cached frame reads
+  // files another resolve has overwritten.
   private val erCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), EntityResolution.Result]
+    scala.collection.mutable.Map.empty[String, (SparkSession, EntityResolution.Result)]
   private def erResult(spark: SparkSession, dir: String): EntityResolution.Result =
-    erCache.getOrElseUpdate((System.identityHashCode(spark).toString, dir),
-      EntityResolution.resolve(WebCorpus.pagesMaterialized(spark, dir)))
+    erCache.synchronized {
+      val mat = WebCorpus.matDir(dir)
+      erCache.get(mat).collect { case (s, r) if s eq spark => r }.getOrElse {
+        val r = EntityResolution.resolve(WebCorpus.pagesMaterialized(spark, dir),
+          EntityResolution.Config(workDir = Some(s"$mat/er_state")))
+        erCache(mat) = (spark, r)
+        r
+      }
+    }
 
   /** Flagship: full record-linkage run on the sf0.001-scale corpus. */
   def entry(spark: SparkSession): DataFrame =
@@ -182,14 +189,14 @@ object SparkEntry {
       val pages = WebCorpus.pagesMaterialized(s, d)
         .select(col("url").as("doc"), col("text"))
       // fingerprints materialized for the oracle's brute-force hamming sweep
-      sideTable(s, d, "simhash_fp") {
+      sideTable(d, "simhash_fp") {
         pages.select(col("doc").as("id"), simhash64(ascii_lower(col("text"))).as("fp"))
       }
       Dedup.simhash(pages, "text", "doc", maxHamming = 6)
         .orderBy("id_a", "id_b")
     }),
     "q21_ngram_dups" -> ((s, d) => {
-      val pages = sideTable(s, d, "pages300") {
+      val pages = sideTable(d, "pages300") {
         WebCorpus.pages(s, 300).toDF().select(col("url").as("doc"), col("text"))
       }
       Dedup.ngramJaccard(pages, "text", "doc", n = 3, tau = 0.4)
@@ -198,7 +205,7 @@ object SparkEntry {
     "q44_window_dups" -> ((s, d) => {
       // substring-level dedup (any shared verbatim 15-token run) on the same
       // corpus slice as q21; oracle recomputes md5 window fingerprints
-      val pages = sideTable(s, d, "pages300") {
+      val pages = sideTable(d, "pages300") {
         WebCorpus.pages(s, 300).toDF().select(col("url").as("doc"), col("text"))
       }
       Dedup.windowFingerprint(pages, "text", "doc", windowTokens = 15)
@@ -212,7 +219,7 @@ object SparkEntry {
       // sign-LSH is designed for — with its tau-derived minimal probe
       // budget (~110 keys/vector vs the old fixed 1128); the oracle
       // brute-forces the exact pair set over the same materialized rows.
-      val emb = sideTable(s, d, "neardup_vectors") {
+      val emb = sideTable(d, "neardup_vectors") {
         val base = t(s, d, "embeddings").select("vec_id", "embedding")
         // per-dim step: 0.3·|v|/sqrt(dim) with content-hashed signs →
         // delta norm ≈ 0.3·|v| → cosine ≈ 1/sqrt(1.09) ≈ 0.958
@@ -250,7 +257,7 @@ object SparkEntry {
       // IVF wants clustered data (the sf embeddings are intentionally
       // unstructured — LSH territory); the clustered set is materialized so
       // the oracle brute-forces the same rows
-      val emb = sideTable(s, d, "ivf_vectors") {
+      val emb = sideTable(d, "ivf_vectors") {
         WebCorpus.clusteredEmbeddings(s, nClusters = 16, perCluster = 40)
       }
       val queries = emb.filter(col("vec_id") < 5)
@@ -268,7 +275,7 @@ object SparkEntry {
       // the real RIFF/AVI chunk walker; the resize math, modality routing
       // and feature shape are recomputed by DuckDB from the materialized
       // decode results
-      sideTable(s, d, "mm_meta") {
+      sideTable(d, "mm_meta") {
         prepared.select(col("doc_id"), col("modality"),
           col("meta").getField("width").as("width"),
           col("meta").getField("height").as("height"),
@@ -463,7 +470,8 @@ object SparkEntry {
       // the pipeline is id-type-agnostic, so the output contract — and
       // therefore the truth-derived oracle — is IDENTICAL to er_integrated
       EntityResolution.resolve(WebCorpus.pagesMaterialized(s, d),
-        EntityResolution.Config(idBits = 128)).integrated
+        EntityResolution.Config(idBits = 128,
+          workDir = Some(s"${WebCorpus.matDir(d)}/er_id128_state"))).integrated
         .select("RecordId", "InputSourceARN", "MatchID")
         .orderBy("RecordId")),
     "er_edges" -> ((s, d) =>
@@ -489,7 +497,7 @@ object SparkEntry {
         .orderBy("RecordId")
     }),
     "er_block_stats" -> ((s, d) => {
-      val keys = sideTable(s, d, "block_keys")(erResult(s, d).blockKeys)
+      val keys = sideTable(d, "block_keys")(erResult(s, d).blockKeys)
       keys.groupBy("block_key").agg(count(lit(1)).as("n"))
         .agg(count(lit(1)).as("n_blocks"), sum("n").as("n_rows"),
           max("n").as("max_block"))

@@ -3,6 +3,8 @@ package graft.blocking
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.Stage
+
 /**
  * Multi-pass blocking: the candidate-generation layer of the record-linkage
  * pipeline. The reference declares this away inside AWS Entity Resolution's
@@ -144,17 +146,16 @@ object Blocking {
     * measured 2.74 → 1.8 task-s and 22.7 → 2.9 MB shuffle at 450 k pages.
     * The still-hot gate (rename keyed_all, or anti-join the still-hot keys)
     * reads an observed count on the sizes2 write itself: one job, on the
-    * calling thread, with no separate gate job or writer thread. */
-  def writeBlockTables(records: DataFrame, dir: String, cfg: Config): Unit = {
-    val spark = records.sparkSession
+    * calling thread, with no separate gate job or writer thread. Every
+    * table is written with [[Stage.write]]; returns the (keys, sizes2)
+    * tables as read back from `dir`. */
+  def writeBlockTables(records: DataFrame, dir: String, cfg: Config): (DataFrame, DataFrame) = {
     val raw = rawKeys(records, cfg)
-    raw.groupBy("block_key").agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$dir/raw_counts.parquet")
-    val oversized = spark.read.parquet(s"$dir/raw_counts.parquet")
-      .filter(col("n") > cfg.maxBlock)
+    val rawCounts = Stage.write(raw.groupBy("block_key").agg(count(lit(1)).as("n")),
+      s"$dir/raw_counts.parquet")
     val keyedPath = s"$dir/keyed_all.parquet"
-    reKeyOversized(raw, oversized, cfg).write.mode("overwrite").parquet(keyedPath)
-    val keyed = spark.read.parquet(keyedPath)
+    val keyed = Stage.write(
+      reKeyOversized(raw, rawCounts.filter(col("n") > cfg.maxBlock), cfg), keyedPath)
     // sizes2 DERIVED, not re-aggregated: a keyed row kept its natural key
     // (≥ 0) iff its raw block was small, so those counts are raw_counts
     // verbatim; only the re-keyed minority (< 0, the Zipf head's rows) needs
@@ -162,8 +163,7 @@ object Blocking {
     // family that inflates under concurrency — with a columnar filter-scan
     // of raw_counts plus a small agg (keyspace disjointness per [[rawKeys]];
     // the staged≡lineage spec asserts equality against the direct groupBy).
-    val sizes2df = spark.read.parquet(s"$dir/raw_counts.parquet")
-      .filter(col("n") <= cfg.maxBlock)
+    val sizes2df = rawCounts.filter(col("n") <= cfg.maxBlock)
       .unionByName(keyed.filter(col("block_key") < 0)
         .groupBy("block_key").agg(count(lit(1)).as("n")))
     // The still-hot gate rides the sizes2 write as an observed count: no
@@ -171,10 +171,10 @@ object Blocking {
     // LocalLimit is named from a JVM-wide counter and so is new generated
     // code on every call, misses the codegen cache.
     val gate = new org.apache.spark.sql.Observation()
-    sizes2df.observe(gate, count(when(col("n") > cfg.maxBlock * 4L, 1)).as("still_hot"))
-      .write.mode("overwrite").parquet(s"$dir/sizes2.parquet")
-    val stillHot = spark.read.parquet(s"$dir/sizes2.parquet")
-      .filter(col("n") > cfg.maxBlock * 4L)
+    val sizes2 = Stage.write(
+      sizes2df.observe(gate, count(when(col("n") > cfg.maxBlock * 4L, 1)).as("still_hot")),
+      s"$dir/sizes2.parquet")
+    val stillHot = sizes2.filter(col("n") > cfg.maxBlock * 4L)
     // the observation arrives via the (async) execution-listener bus;
     // bounded wait, with a read of the written file as a never-wrong fallback
     val stillHotIsEmpty = try {
@@ -182,18 +182,22 @@ object Blocking {
         scala.concurrent.duration.Duration(10, "s"))
       row.getLong(row.fieldIndex("still_hot")) == 0L
     } catch { case _: java.util.concurrent.TimeoutException => stillHot.isEmpty }
-    val keysFile = new java.io.File(s"$dir/keys.parquet")
-    if (stillHotIsEmpty) {
+    val keysPath = s"$dir/keys.parquet"
+    val keys = if (stillHotIsEmpty) {
       // nothing to drop: keys == keyed_all row-for-row — promote the scratch
       // table with a directory rename instead of rewriting the full stream
+      val keysFile = new java.io.File(keysPath)
       org.apache.commons.io.FileUtils.deleteQuietly(keysFile)
       if (!new java.io.File(keyedPath).renameTo(keysFile))
         throw new java.io.IOException(s"rename $keyedPath -> $keysFile failed")
+      records.sparkSession.read.schema(keyed.schema).parquet(keysPath)
     } else {
-      keyed.join(broadcast(stillHot), Seq("block_key"), "left_anti")
-        .write.mode("overwrite").parquet(s"$dir/keys.parquet")
+      val k = Stage.write(keyed.join(broadcast(stillHot), Seq("block_key"), "left_anti"),
+        keysPath)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(keyedPath))
+      k
     }
+    (keys, sizes2)
   }
 
   /**
@@ -222,27 +226,20 @@ object Blocking {
    * OLD records whose key set differs from the prior run — the exact seed
    * set the incremental pipeline must re-score.
    *
-   * `stage(name, df)` is applied to the tables the NEXT fold reads as prior
-   * state (raw_counts, sizes2, and the keys chain's keys_delta/
-   * keys_tombstones — see the chain note below). It must return a
-   * materialized frame equal to `df`, which this merge reads on at once;
-   * the durable write of `name` may be deferred. The pipeline's stager
-   * returns an eager localCheckpoint and submits the parquet write to a
-   * writer thread, so a staged file is durable only once the caller has
-   * joined its pending writes — which it must do before any manifest names
-   * the file and before the fold returns. Per-fold scratch that feeds
-   * several actions but no future fold (crossed blocks, changed ids) is
-   * materialized with an eager localCheckpoint only: a lazy plan would
-   * re-run the whole merge per consuming action (measured 2.3x a full key
-   * recompute), while a durable write would pay a driver write+read
-   * barrier pair per table — at batch-fold scale those barriers, not work,
-   * dominate the wall.
+   * The tables the NEXT fold reads as prior state — raw_counts, sizes2,
+   * and the keys chain's keys_delta / keys_tombstones (chain note below) —
+   * are written under `dir` with [[Stage.write]], as [[writeBlockTables]]
+   * writes a full resolve's, and read on from there; each is durable when
+   * this returns. Per-fold scratch that feeds several actions but no future
+   * fold (crossed blocks, re-keyed rows, changed ids) is materialized with
+   * an eager localCheckpoint only: a lazy plan would re-run the whole merge
+   * per consuming action (measured 2.3x a full key recompute).
    */
   def mergeBlockKeys(priorKeys: DataFrame, priorRawCounts: DataFrame,
                      priorSizes2: DataFrame, newRecords: DataFrame,
-                     records: DataFrame, cfg: Config,
-                     stage: (String, DataFrame) => DataFrame)
+                     records: DataFrame, cfg: Config, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
+    def stage(name: String, df: DataFrame) = Stage.write(df, s"$dir/$name.parquet")
     val rawBatch = rawKeys(newRecords, cfg) // cheap per-row derivation of the batch file
     val batchCounts = rawBatch.groupBy("block_key").agg(count(lit(1)).as("n"))
     val rawCountsAll = stage("raw_counts",
@@ -251,9 +248,7 @@ object Blocking {
     val oversizedAll = rawCountsAll.filter(col("n") > cfg.maxBlock)
     // raw blocks the batch pushed over the size class (counts only grow).
     // Per-fold SCRATCH (multi-consumer but not next-fold state): an eager
-    // localCheckpoint materializes it once without the write+read barrier
-    // pair a durable stage costs — at probe scale those driver barriers,
-    // not work, dominate the fold's wall
+    // localCheckpoint materializes it once, with no durable write
     val crossed = oversizedAll
       .join(priorRawCounts.filter(col("n") <= cfg.maxBlock).select("block_key"),
         Seq("block_key"), "left_semi")

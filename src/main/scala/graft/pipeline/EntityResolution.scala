@@ -258,8 +258,12 @@ object EntityResolution {
     *                 (one extra aggregate over the records). */
   def resolve(pages: DataFrame, cfg: Config = Config(),
               auditIds: Boolean = false): Result = {
-    val spark = pages.sparkSession
     val work = cfg.workDir.getOrElse(freshWorkDir())
+    // a reused work dir may hold a previous run's state: its manifests go
+    // first and come back only once components.parquet is written, so a
+    // resolve that throws leaves a dir every fold refuses as prior state
+    Seq("records.list", "config.sig", "tombstones.list", "keys.list")
+      .foreach(f => java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(work, f)))
 
     // Stage 1 materialization: normalized records with precomputed per-record
     // features — one columnar write, scanned (with column pruning) by every
@@ -268,21 +272,23 @@ object EntityResolution {
     // (one absolute parquet path per line) so incremental batches can APPEND
     // a new path instead of rewriting the table.
     val recPath = s"$work/records.parquet"
-    normalizeWithSig(pages, cfg)
+    val records = Stage.write(normalizeWithSig(pages, cfg)
       .select("id", "url", "source", "warc_ts", "lang", "title_norm",
-        "domain_key", "sort_key", "sig", "tok", "n_tok")
-      .write.mode("overwrite").parquet(recPath)
-    writeManifest(work, "records.list", Seq(recPath))
-    writeConfigSig(work, cfg)
-    val records = spark.read.parquet(recPath)
+        "domain_key", "sort_key", "sig", "tok", "n_tok"), recPath)
 
     if (auditIds) requireIdsUnique(records)
 
-    // keys are consumed by BOTH sides of the pair self-join (and by the
-    // stats/metrics surface); materializing them turns the deep
-    // aggregate+broadcast blocking lineage into one cheap columnar scan per
-    // consumer instead of a recomputation per plan subtree
-    val (keys, blockStats) = materializeKeys(spark, records, work, cfg)
+    // Block keys, computed once and materialized as a stage table: they are
+    // consumed by BOTH sides of the pair self-join (and by the stats/metrics
+    // surface), so every consumer scans columnar keys instead of re-running
+    // the deep aggregate+broadcast blocking lineage per plan subtree. The
+    // two count tables (raw block sizes, final block sizes) persisted beside
+    // them are the additive state that lets [[resolveIncremental]] fold a
+    // batch's keys in O(batch + crossed blocks) via
+    // [[Blocking.mergeBlockKeys]]. Stats aggregate the PERSISTED sizes
+    // table, so a stats consumer never re-derives the key stream.
+    val (keys, sizes2) = Blocking.writeBlockTables(records, work, cfg.blocking)
+    val blockStats = Blocking.statsOf(sizes2, cfg.blocking)
     // raw (non-distinct) branch variants: the single dedup below absorbs
     // every duplicate in one shuffle — per-branch inner distincts would each
     // re-shuffle the same pair stream first (measured as the pair-chain
@@ -295,13 +301,10 @@ object EntityResolution {
     // single write job; clustering and the integrated output re-read the
     // edges without recomputation.
     val scored = scorePairs(pairs, records, cfg)
-    val edgePath = s"$work/edges.parquet"
-    scored.filter(col("score") >= cfg.tau)
-      .write.mode("overwrite").parquet(edgePath)
-    val edges = spark.read.parquet(edgePath)
+    val edges = Stage.write(scored.filter(col("score") >= cfg.tau), s"$work/edges.parquet")
 
     val store = cfg.checkpointDir.map { d =>
-      val s = new CheckpointStore(spark, d)
+      val s = new CheckpointStore(pages.sparkSession, d)
       // iteration-0 snapshot: the scored match edges themselves, so a resume
       // never has to re-run blocking/scoring
       s.writeIteration(0, edges.select(col("main_id").as("src"),
@@ -310,11 +313,15 @@ object EntityResolution {
     }
     // Stage 3 materialization: converged components — the durable cluster
     // state a later incremental batch folds into (see resolveIncremental).
-    val compPath = s"$work/components.parquet"
-    ConnectedComponents.run(
-      edges.select(col("main_id").as("src"), col("sub_id").as("dst")), store)
-      .write.mode("overwrite").parquet(compPath)
-    val components = spark.read.parquet(compPath)
+    val components = Stage.write(ConnectedComponents.run(
+      edges.select(col("main_id").as("src"), col("sub_id").as("dst")), store),
+      s"$work/components.parquet")
+
+    // manifests last, as a fold writes them (keys.list last of all; a full
+    // (re)build is a one-file keys chain with no tombstones)
+    writeManifest(work, "records.list", Seq(recPath))
+    writeConfigSig(work, cfg)
+    writeKeysChain(work, Seq(s"$work/keys.parquet"), Seq.empty)
 
     val integrated = buildIntegrated(records, edges, components)
     val urlDim = records.select(col("id"), col("url"))
@@ -389,10 +396,8 @@ object EntityResolution {
     // records manifest — the old record files are never rewritten (Iceberg
     // append semantics; the state dirs form a chain of immutable files)
     val newRecPath = s"$work/records_new.parquet"
-    normalizeWithSig(newPages, cfg)
-      .select(oldRecords.columns.map(col): _*)
-      .write.mode("overwrite").parquet(newRecPath)
-    val newRecords = spark.read.parquet(newRecPath)
+    val newRecords = Stage.write(normalizeWithSig(newPages, cfg)
+      .select(oldRecords.columns.map(col): _*), newRecPath)
     // Batch-vs-corpus asymmetry is the fold's whole point: every frame
     // derived from the batch (new ids, seed ids, touched buckets, batch
     // keys, batch-involving pairs) is orders of magnitude smaller than the
@@ -421,7 +426,7 @@ object EntityResolution {
       s"$reCrawled record(s) in the batch already exist in prior state " +
         "(re-crawl/update); dedupe the batch or run a compacting re-resolve " +
         "— blind append would duplicate RecordId rows")
-    val records = spark.read.parquet((oldPaths :+ newRecPath): _*)
+    val records = spark.read.schema(newRecords.schema).parquet((oldPaths :+ newRecPath): _*)
     val newIds = newRecords.select(col("id"))
     if (auditIds) requireIdsUnique(records)
 
@@ -452,72 +457,31 @@ object EntityResolution {
     //      edges dropped. Recompute SN over the touched buckets with and
     //      without the batch: the difference (minus pairs still generated
     //      by shared block keys) is the exact stale set.
-    //
-    // Durable keys-fold stage writes OVERLAP downstream compute (guide
-    // §2.6 — independent jobs back-fill idle cores): each stage is
-    // materialized once with an eager localCheckpoint (the same single
-    // computation + lineage cut the old write-then-read-back barrier
-    // bought), downstream consumers proceed immediately from the checkpoint
-    // blocks, and the parquet encode+commit runs on a driver side thread.
-    // All pending writes are JOINED before the fold goes on, and the chain
-    // manifests are written last of all, so the crash contract holds:
-    // a failed or interrupted fold leaves prior state intact, writes no
-    // manifest, and leaves no writer thread behind.
-    val pendingWrites = scala.collection.mutable.ListBuffer.empty[java.util.concurrent.Future[_]]
-    val writePool = java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-      val t = new Thread(r, "graft-stage-write"); t.setDaemon(true); t
-    })
-    val (keys, blockStats, keyChangedIds, keyPaths, tombPaths) = try {
-      val stager = (name: String, df: DataFrame) => {
-        val ckpt = df.localCheckpoint(true)
-        pendingWrites += writePool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit =
-            ckpt.write.mode("overwrite").parquet(s"$work/$name.parquet")
-        })
-        ckpt
-      }
-      // prior keys = the manifest chain's assembly (a base resolve dir is a
-      // one-file chain), validated like the records manifest
-      val (priorKeyPaths, priorTombPaths) = readKeysChain(priorWorkDir)
-      requireChainIntact("keys", priorKeyPaths ++ priorTombPaths)
-      val (keysAll, stats, changedOldIds) = Blocking.mergeBlockKeys(
-        assembleKeys(spark, priorKeyPaths, priorTombPaths),
-        spark.read.parquet(s"$priorWorkDir/raw_counts.parquet"),
-        spark.read.parquet(s"$priorWorkDir/sizes2.parquet"),
-        newRecords, records, cfg.blocking, stager)
-      // chain manifests: this fold appended keys_delta + keys_tombstones;
-      // compact back to one file once the chain is long (amortized
-      // O(batch) — the rewrite runs once per compactLen folds)
-      val keyPaths = priorKeyPaths :+ s"$work/keys_delta.parquet"
-      val tombPaths = priorTombPaths :+ s"$work/keys_tombstones.parquet"
-      // join the overlapped stage writes before the fold goes on: a write
-      // failure must fail the fold, and a manifest must never reference a
-      // file still being written
-      pendingWrites.foreach(_.get()) // propagates any write failure
-      if (keyPaths.length >= keysChainCompactLen) {
-        keysAll.write.mode("overwrite").parquet(s"$work/keys.parquet")
-        (spark.read.parquet(s"$work/keys.parquet"), stats, changedOldIds,
-          Seq(s"$work/keys.parquet"), Seq.empty[String])
-      } else {
-        // The assembled chain view feeds ~5 consumers (keysEff, both
-        // candidate-join sides, both sharedKey sides). Through round 5 it
-        // was eagerly checkpointed because those consumers SHUFFLED it —
-        // materializing once beat re-shuffling per consumer. Since the
-        // round-6 broadcast-stream restructure every consumer STREAMS the
-        // keys side (the batch-bounded side broadcasts), so each lazy
-        // consumption is one column-pruned chain scan + a broadcast
-        // anti-join — cheaper distributed inside the consumers' own jobs
-        // than the serial 90 MB materialization barrier the checkpoint
-        // cost on the fold's critical path.
-        (keysAll, stats, changedOldIds, keyPaths, tombPaths)
-      }
-    } finally {
-      // no-ops after a clean join; after a throw they stop the writes
-      // still in flight, so no writer outlives the failed fold
-      pendingWrites.foreach(_.cancel(true))
-      writePool.shutdownNow()
-      writePool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
-    }
+
+    // prior keys = the manifest chain's assembly (a base resolve dir is a
+    // one-file chain), validated like the records manifest
+    val (priorKeyPaths, priorTombPaths) = readKeysChain(priorWorkDir)
+    requireChainIntact("keys", priorKeyPaths ++ priorTombPaths)
+    val (keysAll, blockStats, keyChangedIds) = Blocking.mergeBlockKeys(
+      assembleKeys(spark, priorKeyPaths, priorTombPaths),
+      spark.read.parquet(s"$priorWorkDir/raw_counts.parquet"),
+      spark.read.parquet(s"$priorWorkDir/sizes2.parquet"),
+      newRecords, records, cfg.blocking, work)
+    // chain manifests: this fold appended keys_delta + keys_tombstones;
+    // compact back to one file once the chain is long (amortized
+    // O(batch) — the rewrite runs once per compactLen folds)
+    val compact = priorKeyPaths.length + 1 >= keysChainCompactLen
+    val (keyPaths, tombPaths) =
+      if (compact) (Seq(s"$work/keys.parquet"), Seq.empty[String])
+      else (priorKeyPaths :+ s"$work/keys_delta.parquet",
+        priorTombPaths :+ s"$work/keys_tombstones.parquet")
+    // Uncompacted, the assembled chain view feeds ~5 consumers (keysEff,
+    // both candidate-join sides, both sharedKey sides) lazily: every
+    // consumer STREAMS the keys side (the batch-bounded side broadcasts),
+    // so each consumption is one column-pruned chain scan + a broadcast
+    // anti-join, cheaper inside the consumers' own jobs than a serial
+    // materialization barrier on the fold's critical path.
+    val keys = if (compact) Stage.write(keysAll, s"$work/keys.parquet") else keysAll
     // seed ids feed 5+ consumers (keysEff, touched buckets, both SN-seed
     // sides) — one materialization instead of a union+distinct shuffle per
     // consumer; every semi-join against a corpus-wide table hints it
@@ -612,10 +576,7 @@ object EntityResolution {
       .join(bcB(keyChangedIds.withColumnRenamed("id", "main_id")), Seq("main_id"), "left_anti")
       .join(bcB(keyChangedIds.withColumnRenamed("id", "sub_id")), Seq("sub_id"), "left_anti")
       .join(bcB(staleSnPairs), Seq("main_id", "sub_id"), "left_anti")
-    val edgePath = s"$work/edges.parquet"
-    newEdges.unionByName(keptEdges)
-      .write.mode("overwrite").parquet(edgePath)
-    val edges = spark.read.parquet(edgePath)
+    val edges = Stage.write(newEdges.unionByName(keptEdges), s"$work/edges.parquet")
 
     // Clustering runs ONLY on the subgraph touched by a new/dropped edge;
     // untouched prior components pass through label-unchanged. Touched
@@ -658,11 +619,8 @@ object EntityResolution {
     val ccInput = newEdges.select(col("main_id").as("src"), col("sub_id").as("dst"))
       .union(cleanStars.select(col("node").as("src"), col("component").as("dst")))
       .union(staleKeptEdges.select(col("main_id").as("src"), col("sub_id").as("dst")))
-    val compPath = s"$work/components.parquet"
-    ConnectedComponents.run(ccInput)
-      .unionByName(untouched.select("node", "component"))
-      .write.mode("overwrite").parquet(compPath)
-    val components = spark.read.parquet(compPath)
+    val components = Stage.write(ConnectedComponents.run(ccInput)
+      .unionByName(untouched.select("node", "component")), s"$work/components.parquet")
 
     // manifests last (keys.list last of all): a fold that throws anywhere
     // above leaves none in `work`, so that dir is refused as prior state
@@ -759,26 +717,6 @@ object EntityResolution {
     else base.join(
       broadcast(spark.read.parquet(tombPaths: _*).select("block_key").distinct()),
       Seq("block_key"), "left_anti")
-  }
-
-  /** Compute block keys once and materialize them as a stage table; the
-    * stats frame aggregates the deep lineage (so dropped-block metrics stay
-    * exact) while every downstream consumer scans the columnar keys. The
-    * two count tables (raw block sizes, final block sizes) are persisted
-    * beside the keys — they are the additive state that lets
-    * [[resolveIncremental]] fold a batch's keys in O(batch + crossed
-    * blocks) via [[Blocking.mergeBlockKeys]] instead of recomputing the key
-    * stream over the whole corpus. */
-  private def materializeKeys(spark: SparkSession, records: DataFrame,
-                              work: String,
-                              cfg: Config): (DataFrame, DataFrame) = {
-    Blocking.writeBlockTables(records, work, cfg.blocking)
-    // a full (re)build is a one-file keys chain with no tombstones
-    writeKeysChain(work, Seq(s"$work/keys.parquet"), Seq.empty)
-    // stats over the PERSISTED sizes table — a stats consumer must not
-    // silently re-derive the whole key stream through the lazy lineage
-    (spark.read.parquet(s"$work/keys.parquet"),
-      Blocking.statsOf(spark.read.parquet(s"$work/sizes2.parquet"), cfg.blocking))
   }
 
   /** Map (main_id, sub_id [, score]) back to url space for output/eval. */

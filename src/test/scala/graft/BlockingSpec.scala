@@ -113,15 +113,15 @@ class BlockingSpec extends AnyFunSuite with TempDirs {
 
       val all = oldRecs.unionByName(batch)
       val (keysFold, statsFold, changed) =
-        Blocking.mergeBlockKeys(pk, pr, ps, batch, all, cfg, (n, df) => mat(s"st_$n", df))
+        Blocking.mergeBlockKeys(pk, pr, ps, batch, all, cfg, dir)
       val (keysFull, statsFull, rawFull, s2Full) = Blocking.blockKeysWithCounts(all, cfg)
 
       def biEq(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
         a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
       assert(biEq(keysFold, keysFull), "folded keys differ from full recompute")
-      assert(biEq(spark.read.parquet(s"$dir/st_raw_counts"), rawFull),
+      assert(biEq(spark.read.parquet(s"$dir/raw_counts.parquet"), rawFull),
         "folded raw counts differ")
-      assert(biEq(spark.read.parquet(s"$dir/st_sizes2"), s2Full),
+      assert(biEq(spark.read.parquet(s"$dir/sizes2.parquet"), s2Full),
         "folded final block sizes differ")
       assert(statsFold.collect().toSeq == statsFull.collect().toSeq,
         "folded stats frame differs")

@@ -222,7 +222,7 @@ class IncrementalSpec extends AnyFunSuite with TempDirs {
       // break the first page header of the largest prior sizes2 part: its
       // footer stays intact, so schema inference and the raw_counts stage
       // pass and the fold fails in the sizes2 stage, after the raw_counts
-      // write was submitted to the writer pool
+      // table was written
       val part = new java.io.File(d1, "sizes2.parquet").listFiles()
         .filter(_.getName.endsWith(".parquet")).maxBy(_.length)
       val raf = new java.io.RandomAccessFile(part, "rw")
@@ -246,6 +246,35 @@ class IncrementalSpec extends AnyFunSuite with TempDirs {
       val manifests = Seq("records.list", "config.sig", "keys.list", "tombstones.list")
         .filter(f => new java.io.File(d2, f).exists())
       assert(manifests.isEmpty, s"the failed fold wrote manifests: $manifests")
+    }
+  }
+
+  test("a resolve that throws into a reused work dir leaves no manifest, and a fold refuses it") {
+    val all = graft.testgen.WebCorpus.pages(spark, 200).toDF()
+    val isNew = pmod(xxhash64(col("url")), lit(5)) === 4
+    withTempDir("graft-reuse") { root =>
+      val (d, d2) = (s"$root/d", s"$root/d2")
+      EntityResolution.resolve(all.filter(!isNew),
+        EntityResolution.Config(workDir = Some(d))).integrated.count()
+      def edgeFiles = new java.io.File(d, "edges.parquet").list().toSet
+      val priorEdges = edgeFiles
+      // a regular file as the checkpoint dir: the iteration-0 snapshot,
+      // written right after edges.parquet, throws
+      val notADir = java.nio.file.Paths.get(root, "ckpt-file")
+      Files.write(notADir, Array[Byte](1))
+      intercept[Exception] {
+        EntityResolution.resolve(all.filter(isNew),
+          EntityResolution.Config(workDir = Some(d), checkpointDir = Some(notADir.toString)))
+      }
+      assert(edgeFiles != priorEdges, "the failed resolve did not get as far as its edges")
+      val manifests = Seq("records.list", "config.sig", "keys.list", "tombstones.list")
+        .filter(f => new java.io.File(d, f).exists())
+      assert(manifests.isEmpty, s"the failed resolve left manifests: $manifests")
+      val ex = intercept[IllegalArgumentException] {
+        EntityResolution.resolveIncremental(all.filter(!isNew), d,
+          EntityResolution.Config(workDir = Some(d2)))
+      }
+      assert(ex.getMessage.contains("lacks"), ex.getMessage)
     }
   }
 

@@ -1,8 +1,5 @@
 package graft
 
-import java.io.File
-
-import org.apache.commons.io.FileUtils
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke: every SparkEntry query runs on sf0.001 and the oracle-declared
@@ -10,15 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class QueriesSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
-
-  // SparkEntry's er_* queries resolve into EntityResolution's default work
-  // dirs under graft-work/; no other spec reads them, so they go with it.
-  // Anything else left behind still fails the spec.
-  override protected def leftBehind(left: Set[File]): Unit = {
-    val (erWork, rest) = left.partition(_.getParentFile.getName == "graft-work")
-    erWork.foreach(FileUtils.deleteQuietly)
-    super.leftBehind(rest)
-  }
 
   test("every query has an oracle and every oracle has a query") {
     val orphanOracles = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
