@@ -2,6 +2,7 @@ package graft.blocking
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.pipeline.Stage
 
@@ -198,6 +199,17 @@ object Blocking {
       k
     }
     (keys, sizes2)
+  }
+
+  /** The schemas [[writeBlockTables]] and [[mergeBlockKeys]] write for
+    * `records`: of the keys table and its chain's deltas, and of the count
+    * tables (raw_counts, sizes2). Taken from the plans that write them, by
+    * analysis alone, so a fold reads its prior tables without a
+    * schema-inference job. */
+  private[graft] def tableSchemas(records: DataFrame, cfg: Config): (StructType, StructType) = {
+    val raw = rawKeys(records, cfg)
+    val counts = raw.groupBy("block_key").agg(count(lit(1)).as("n"))
+    (reKeyOversized(raw, counts, cfg).schema, counts.schema)
   }
 
   /**

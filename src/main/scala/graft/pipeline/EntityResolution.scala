@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.blocking.Blocking
 import graft.cluster.{CheckpointStore, ConnectedComponents}
@@ -158,6 +159,11 @@ object EntityResolution {
       .withColumn("tok", pack_tokens(col("text_norm"), cfg.tokenBits))
       .withColumn("n_tok", packed_count(col("tok")))
 
+  /** The columns of the normalized records table, as [[resolve]] and the
+    * fold write it. */
+  private val RecordColumns = Seq("id", "url", "source", "warc_ts", "lang",
+    "title_norm", "domain_key", "sort_key", "sig", "tok", "n_tok").map(col)
+
   /** Dedup the raw candidate-pair stream so its one shuffle DOUBLES as the
     * funnel's first join distribution: hash-partitioning by `main_id` alone
     * still co-locates every copy of a (main_id, sub_id) pair (duplicates are
@@ -180,9 +186,21 @@ object EntityResolution {
     * DIFFERENT block keys (that is what makes them duplicates), i.e. in
     * different output partitions. Any cross-block dedup therefore needs
     * exactly one all-to-all of the pair stream; this is it, carrying
-    * 16-byte rows and doubling as the funnel's first join distribution. */
+    * 16-byte rows and doubling as the funnel's first join distribution.
+    *
+    * The partition count is the session's task-slot count
+    * (`defaultParallelism`), not a byte-sized AQE choice: the stages on top
+    * of this exchange (dedup, the funnel's broadcast joins, jaro-winkler,
+    * levenshtein, packed jaccard and the edges write) cost tens of µs of CPU
+    * per 16-byte pair, and AQE coalesces a repartition-by-column by bytes —
+    * a few hundred KB of pairs fell under its 1 MB minimum partition size
+    * and ran the whole funnel as ONE task while the other cores idled. AQE
+    * leaves a repartition with an explicit count alone, and one partition
+    * per task slot keeps every core busy without the per-task overhead of
+    * the (larger) shuffle-partition count. */
   private[graft] def dedupPairs(raw: DataFrame): DataFrame =
-    raw.repartition(col("main_id")).dropDuplicates("main_id", "sub_id")
+    raw.repartition(raw.sparkSession.sparkContext.defaultParallelism, col("main_id"))
+      .dropDuplicates("main_id", "sub_id")
 
   /**
    * Score candidate pairs; returns (main_id, sub_id, score). `records` are
@@ -272,9 +290,7 @@ object EntityResolution {
     // (one absolute parquet path per line) so incremental batches can APPEND
     // a new path instead of rewriting the table.
     val recPath = s"$work/records.parquet"
-    val records = Stage.write(normalizeWithSig(pages, cfg)
-      .select("id", "url", "source", "warc_ts", "lang", "title_norm",
-        "domain_key", "sort_key", "sig", "tok", "n_tok"), recPath)
+    val records = Stage.write(normalizeWithSig(pages, cfg).select(RecordColumns: _*), recPath)
 
     if (auditIds) requireIdsUnique(records)
 
@@ -388,16 +404,17 @@ object EntityResolution {
 
     val oldPaths = readManifest(priorWorkDir, "records.list")
     requireChainIntact("records", oldPaths)
-    val oldRecords = spark.read.parquet(oldPaths: _*)
-    val oldEdges = spark.read.parquet(s"$priorWorkDir/edges.parquet")
-    val oldComponents = spark.read.parquet(s"$priorWorkDir/components.parquet")
 
     // normalize ONLY the new batch, then APPEND its parquet path to the
     // records manifest — the old record files are never rewritten (Iceberg
     // append semantics; the state dirs form a chain of immutable files)
     val newRecPath = s"$work/records_new.parquet"
-    val newRecords = Stage.write(normalizeWithSig(newPages, cfg)
-      .select(oldRecords.columns.map(col): _*), newRecPath)
+    val newRecords = Stage.write(normalizeWithSig(newPages, cfg).select(RecordColumns: _*),
+      newRecPath)
+    // Every prior table is read with the schema of the code that wrote it,
+    // taken from a plan by analysis alone: a read that infers its schema
+    // runs a footer-reading Spark job, one per table (see Stage.write)
+    val oldRecords = spark.read.schema(newRecords.schema).parquet(oldPaths: _*)
     // Batch-vs-corpus asymmetry is the fold's whole point: every frame
     // derived from the batch (new ids, seed ids, touched buckets, batch
     // keys, batch-involving pairs) is orders of magnitude smaller than the
@@ -462,10 +479,11 @@ object EntityResolution {
     // one-file chain), validated like the records manifest
     val (priorKeyPaths, priorTombPaths) = readKeysChain(priorWorkDir)
     requireChainIntact("keys", priorKeyPaths ++ priorTombPaths)
+    val (keysSchema, countsSchema) = Blocking.tableSchemas(newRecords, cfg.blocking)
     val (keysAll, blockStats, keyChangedIds) = Blocking.mergeBlockKeys(
-      assembleKeys(spark, priorKeyPaths, priorTombPaths),
-      spark.read.parquet(s"$priorWorkDir/raw_counts.parquet"),
-      spark.read.parquet(s"$priorWorkDir/sizes2.parquet"),
+      assembleKeys(spark, keysSchema, priorKeyPaths, priorTombPaths),
+      spark.read.schema(countsSchema).parquet(s"$priorWorkDir/raw_counts.parquet"),
+      spark.read.schema(countsSchema).parquet(s"$priorWorkDir/sizes2.parquet"),
       newRecords, records, cfg.blocking, work)
     // chain manifests: this fold appended keys_delta + keys_tombstones;
     // compact back to one file once the chain is long (amortized
@@ -570,6 +588,10 @@ object EntityResolution {
     val newEdges = scored.filter(col("score") >= cfg.tau)
       .select("main_id", "sub_id", "score")
       .localCheckpoint(true)
+    val oldEdges = spark.read.schema(newEdges.schema).parquet(s"$priorWorkDir/edges.parquet")
+    val oldComponents = spark.read.schema(ConnectedComponents.labels(
+      newEdges.select(col("main_id").as("src"), col("sub_id").as("dst"))).schema)
+      .parquet(s"$priorWorkDir/components.parquet")
     val droppedStaleEdges = oldEdges.select("main_id", "sub_id", "score")
       .join(bcB(staleSnPairs), Seq("main_id", "sub_id"), "left_semi")
     val keptEdges = oldEdges.select("main_id", "sub_id", "score")
@@ -709,13 +731,16 @@ object EntityResolution {
   private def keysChainCompactLen: Int =
     sys.props.get("graft.keys.compact.len").map(_.toInt).getOrElse(8)
 
-  /** union(chain) minus tombstoned block keys — the current keys table. */
-  private def assembleKeys(spark: SparkSession, keyPaths: Seq[String],
-                           tombPaths: Seq[String]): DataFrame = {
-    val base = spark.read.parquet(keyPaths: _*)
+  /** union(chain) minus tombstoned block keys — the current keys table,
+    * read with the keys table's schema; a tombstone file holds its
+    * `block_key` column alone. */
+  private def assembleKeys(spark: SparkSession, keysSchema: StructType,
+                           keyPaths: Seq[String], tombPaths: Seq[String]): DataFrame = {
+    val base = spark.read.schema(keysSchema).parquet(keyPaths: _*)
     if (tombPaths.isEmpty) base
     else base.join(
-      broadcast(spark.read.parquet(tombPaths: _*).select("block_key").distinct()),
+      broadcast(spark.read.schema(StructType(Seq(keysSchema("block_key"))))
+        .parquet(tombPaths: _*).distinct()),
       Seq("block_key"), "left_anti")
   }
 

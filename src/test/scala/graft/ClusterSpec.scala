@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cluster.ConnectedComponents
+import graft.cluster.{CheckpointStore, ConnectedComponents}
 
-class ClusterSpec extends AnyFunSuite with PropChecks {
+class ClusterSpec extends AnyFunSuite with PropChecks with TempDirs {
   lazy val spark = TestSpark.spark
 
   /** Driver-side union-find oracle. */
@@ -69,5 +69,25 @@ class ClusterSpec extends AnyFunSuite with PropChecks {
     val es = Seq(("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"), ("p", "q"))
     val got = runCC(es)
     assert(got == Map("b" -> "a", "c" -> "a", "y" -> "x", "z" -> "x", "q" -> "p"))
+  }
+
+  test("a run that reaches maxIter unconverged throws instead of returning partial labels") {
+    import spark.implicits._
+    val chain = (0 until 200).map(i => (f"c$i%04d", f"c${i + 1}%04d")).toDF("src", "dst")
+    intercept[IllegalStateException](ConnectedComponents.run(chain, maxIter = 1))
+  }
+
+  test("disjoint pairs are a star forest after one round: converged at iteration 1") {
+    import spark.implicits._
+    withTempDir("graft-cc-ckpt") { dir =>
+      // oriented low→high, so round 1 changes every edge: a test that waits
+      // for the edge set to repeat needs a second round to see it
+      val pairs = (0 until 50).map(i => (2L * i, 2L * i + 1)).toDF("src", "dst")
+      val store = new CheckpointStore(spark, dir)
+      val out = ConnectedComponents.run(pairs, Some(store)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out == (0 until 50).map(i => (2L * i + 1) -> 2L * i).toMap)
+      assert(store.latestIteration() == Some(1))
+    }
   }
 }

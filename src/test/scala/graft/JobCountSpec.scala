@@ -20,9 +20,10 @@ import graft.testgen.WebCorpus
 class JobCountSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
-  // measured on this corpus (400 entities) in the TestSpark session
-  private val ResolveOpJobs = 35
-  private val FoldJobs = 104
+  // measured on this corpus (400 entities) in the TestSpark session; CC
+  // converges in one round on it, in the resolve and in the fold
+  private val ResolveOpJobs = 28
+  private val FoldJobs = 91
 
   private val Mark = "graft.jobcount.mark"
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,6 +50,21 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(shuffles(joined) == 2,
         s"join on main_id must reuse the dedup partitioning:\n${joined.queryExecution}")
     }
+  }
+
+  test("dedupPairs: the exchange has one partition per task slot, which AQE cannot coalesce") {
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val raw = Seq((1L, 10L), (1L, 10L), (2L, 20L)).toDF("main_id", "sub_id")
+      val exchanges = pipeline.EntityResolution.dedupPairs(raw).queryExecution.executedPlan
+        .collect { case e: ShuffleExchangeExec => e }
+      // AQE coalesces a REPARTITION_BY_COL exchange by bytes, which ran the
+      // whole scoring funnel over a few hundred KB of pairs as one task
+      assert(exchanges.map(e => (e.shuffleOrigin, e.outputPartitioning.numPartitions)) ==
+        Seq((REPARTITION_BY_NUM, spark.sparkContext.defaultParallelism)),
+        s"dedupPairs must repartition to defaultParallelism:\n${exchanges.mkString("\n")}")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("consecutive equi-joins on the same key share the stream's exchange") {
