@@ -129,9 +129,10 @@ object ConnectedComponents {
   def run(edges: DataFrame, store: Option[CheckpointStore] = None,
           maxIter: Int = 64, startIter: Int = 0): DataFrame = {
     val spark = edges.sparkSession
+    // no distinct: duplicate edges change no large-star min, and
+    // small-star's output distinct absorbs them in the first round
     var cur = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
       .localCheckpoint(false) // lazy: the signature below materializes it
     var nEdges = signature(cur, shape = false)._1
     var it = startIter

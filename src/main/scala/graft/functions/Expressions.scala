@@ -350,6 +350,59 @@ case class SignCodesExpr(child: Expression, bits: Int, tables: Int)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** Distinct space-split word n-grams of a string, sorted in byte order
+  * ([[Sim.wordNgrams]]) — the compiled form of the `transform`/`slice`/
+  * `array_join` composition, which is CodegenFallback in Spark 4. */
+case class WordNgramsExpr(child: Expression, n: Int)
+    extends UnaryExpression with org.apache.spark.sql.graft.GraftInputTypes {
+  require(n >= 1, s"word_ngrams needs n >= 1, got $n")
+  override def graftInputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "word_ngrams"
+  override protected def nullSafeEval(v: Any): Any =
+    Sim.wordNgrams(v.asInstanceOf[UTF8String], n)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Sim.wordNgrams($c, $n)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Jaccard of two sorted distinct string sets in one merge walk
+  * ([[Sim.sortedJaccard]]): the `size(array_intersect)/size(array_union)`
+  * double, without building either array. */
+case class SortedJaccardExpr(left: Expression, right: Expression)
+    extends BinaryExpression with org.apache.spark.sql.graft.GraftInputTypes {
+  override def graftInputTypes: Seq[DataType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "sorted_jaccard"
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Sim.sortedJaccard(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
+      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Sim.sortedJaccard($a, $b)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** Distinct md5 fingerprints of every `w`-token space-split window of a
+  * string ([[Sim.windowMd5s]]) — the compiled form of the per-window
+  * `md5(array_join(slice(..)))` composition. */
+case class WindowMd5sExpr(child: Expression, w: Int)
+    extends UnaryExpression with org.apache.spark.sql.graft.GraftInputTypes {
+  require(w >= 1, s"window_md5s needs w >= 1, got $w")
+  override def graftInputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "window_md5s"
+  override protected def nullSafeEval(v: Any): Any =
+    Sim.windowMd5s(v.asInstanceOf[UTF8String], w)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Sim.windowMd5s($c, $w)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** Column-API entry points (`import graft.functions.GraftFunctions._`). */
 object GraftFunctions {
   private def col(e: Expression): Column = Shim.column(e)
@@ -377,6 +430,9 @@ object GraftFunctions {
   def cosine_sim(a: Column, b: Column): Column = col(CosineSimExpr(expr(a), expr(b)))
   def sign_codes(v: Column, bits: Int, tables: Int): Column =
     col(SignCodesExpr(expr(v), bits, tables))
+  def word_ngrams(text: Column, n: Int): Column = col(WordNgramsExpr(expr(text), n))
+  def sorted_jaccard(a: Column, b: Column): Column = col(SortedJaccardExpr(expr(a), expr(b)))
+  def window_md5s(text: Column, w: Int): Column = col(WindowMd5sExpr(expr(text), w))
 
   /** Register all as SQL temp functions so `spark.sql` text can use them. */
   def register(spark: SparkSession): Unit = {

@@ -394,6 +394,134 @@ object Sim {
     inter.toDouble / (ha.length + hb.length - inter)
   }
 
+  // ------------------------------------------- space-split word n-grams
+
+  /** `s`'s bytes in an array this call owns, so the byte-range strings cut
+    * from it never alias a row buffer Spark reuses. */
+  private def ownedBytes(s: UTF8String): Array[Byte] = {
+    val out = new Array[Byte](s.numBytes())
+    s.writeToMemory(out, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
+    out
+  }
+
+  /** Start offset of every token of Spark's `split(s, " ")` (byte 0x20
+    * only; empty tokens from leading, trailing and double spaces count),
+    * plus a sentinel `bytes.length + 1`: token k is the byte range
+    * `[starts(k), starts(k + 1) - 1)`. UTF-8 multi-byte sequences never
+    * hold 0x20, so the byte split equals the char split. */
+  private def spaceTokenStarts(bytes: Array[Byte]): Array[Int] = {
+    var spaces = 0
+    var i = 0
+    while (i < bytes.length) { if (bytes(i) == ' ') spaces += 1; i += 1 }
+    val starts = new Array[Int](spaces + 2)
+    var k = 1
+    i = 0
+    while (i < bytes.length) {
+      if (bytes(i) == ' ') { starts(k) = i + 1; k += 1 }
+      i += 1
+    }
+    starts(k) = bytes.length + 1
+    starts
+  }
+
+  private val binaryOrder: java.util.Comparator[UTF8String] =
+    (a: UTF8String, b: UTF8String) => a.binaryCompare(b)
+
+  /**
+   * The distinct word `n`-grams of `s`, sorted in UTF8String byte order —
+   * the compiled form of `array_distinct(transform(sequence(1, cnt), i ->
+   * array_join(slice(split(s, ' '), i, n), ' ')))` with
+   * `cnt = max(ntok − n + 1, 1)`. Tokens hold no space, so each joined
+   * slice is exactly the byte range of `s` from its first token's start to
+   * its last token's end: the grams are cut from `s` with no slice array
+   * and no join. A text of fewer than `n` tokens is one gram, itself.
+   */
+  def wordNgrams(s: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+    val bytes = ownedBytes(s)
+    val starts = spaceTokenStarts(bytes)
+    val ntok = starts.length - 1
+    val cnt = math.max(ntok - n + 1, 1)
+    val grams = new Array[UTF8String](cnt)
+    var i = 0
+    while (i < cnt) {
+      val from = starts(i)
+      grams(i) = UTF8String.fromBytes(bytes, from, starts(math.min(i + n, ntok)) - 1 - from)
+      i += 1
+    }
+    java.util.Arrays.sort(grams, binaryOrder)
+    var w = 1
+    var r = 1
+    while (r < cnt) {
+      if (grams(r).binaryCompare(grams(w - 1)) != 0) { grams(w) = grams(r); w += 1 }
+      r += 1
+    }
+    new GenericArrayData(
+      (if (w == cnt) grams else java.util.Arrays.copyOf(grams, w)).asInstanceOf[Array[Any]])
+  }
+
+  /**
+   * Jaccard of two sets held as sorted distinct string arrays (as
+   * [[wordNgrams]] returns): one merge walk counts the intersection, and
+   * the union is |a| + |b| − |a ∩ b|. The counts are the integers that
+   * `size(array_intersect(a, b))` and `size(array_union(a, b))` give on
+   * such sets, so the quotient is the same double.
+   */
+  def sortedJaccard(a: org.apache.spark.sql.catalyst.util.ArrayData,
+                    b: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0; var j = 0; var inter = 0
+    while (i < na && j < nb) {
+      val c = a.getUTF8String(i).binaryCompare(b.getUTF8String(j))
+      if (c == 0) { inter += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    inter.toDouble / (na + nb - inter).toDouble
+  }
+
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+  private val hexDigits = "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  /**
+   * The distinct md5 fingerprints (lower hex, the format of Spark's `md5`)
+   * of every `w`-token window of `s`, in first-occurrence order — the
+   * compiled form of `array_distinct(transform(sequence(1, ntok − w + 1),
+   * i -> md5(array_join(slice(split(s, ' '), i, w), ' '))))`. Each window
+   * is hashed straight from its byte range of `s` (the same bytes the
+   * joined slice holds, as in [[wordNgrams]]). A text of fewer than `w`
+   * tokens has no window: the array is empty.
+   */
+  def windowMd5s(s: UTF8String, w: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+    val bytes = s.getBytes // read only: the fingerprints are fresh arrays
+    val starts = spaceTokenStarts(bytes)
+    val nWin = starts.length - w
+    if (nWin < 1) return new GenericArrayData(Array.empty[Any])
+    val md = md5.get()
+    val seen = new java.util.HashSet[UTF8String](nWin * 2)
+    val out = new Array[UTF8String](nWin)
+    var k = 0
+    var i = 0
+    while (i < nWin) {
+      val from = starts(i)
+      md.update(bytes, from, starts(i + w) - 1 - from)
+      val d = md.digest()
+      val hex = new Array[Byte](32)
+      var j = 0
+      while (j < 16) {
+        hex(2 * j) = hexDigits((d(j) >> 4) & 0xf)
+        hex(2 * j + 1) = hexDigits(d(j) & 0xf)
+        j += 1
+      }
+      val fp = UTF8String.fromBytes(hex)
+      if (seen.add(fp)) { out(k) = fp; k += 1 }
+      i += 1
+    }
+    new GenericArrayData(
+      (if (k == nWin) out else java.util.Arrays.copyOf(out, k)).asInstanceOf[Array[Any]])
+  }
+
   // ---------------------------------------------------------------- MinHash
 
   /**

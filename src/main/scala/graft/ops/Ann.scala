@@ -51,10 +51,12 @@ object Ann {
     codeBuckets(coded, keep, xxhash64(col("tb"), col("code")))
 
   /** [[exactBuckets]] fanned out to `code ^ m` for every mask `m` — the
-    * probe side of a multi-probe bucket join. */
+    * probe side of a multi-probe bucket join. One compiled hash per mask,
+    * unrolled into the projection: no `transform` lambda, which Spark would
+    * run in its interpreter. */
   private[ops] def probeBuckets(coded: DataFrame, masks: Seq[Long], keep: Column*): DataFrame =
-    codeBuckets(coded, keep, explode(transform(array(masks.map(lit): _*),
-      m => xxhash64(col("tb"), col("code").bitwiseXOR(m)))))
+    codeBuckets(coded, keep, explode(array(masks.map(m =>
+      xxhash64(col("tb"), col("code").bitwiseXOR(lit(m)))): _*)))
 
   private def codeBuckets(coded: DataFrame, keep: Seq[Column], bucket: Column): DataFrame = {
     val perTable = coded.select(keep :+ posexplode(col("codes")).as(Seq("tb", "code")): _*)

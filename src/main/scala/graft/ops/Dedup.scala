@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -168,7 +168,17 @@ object Dedup {
    * ≥ tau on gram SETS implies near-equal gram counts, and near-duplicate
    * documents have near-equal token counts, so pairing only adjacent length
    * buckets keeps candidates linear while preserving recall for same-length
-   * perturbed copies. Jaccard composed from codegen'd built-ins.
+   * perturbed copies.
+   *
+   * Both halves are compiled kernels. `word_ngrams` cuts each gram as a
+   * byte range of the lowered text and returns the distinct grams sorted
+   * in byte order; `sorted_jaccard` counts the intersection in one merge
+   * walk over two such sets. They are exact against the composition they
+   * replace — `transform(sequence(..), i -> array_join(slice(split(t, ' '),
+   * i, n), ' '))` with `size(array_intersect)/size(array_union)`, which
+   * Spark runs in its interpreter (`transform` is CodegenFallback): the
+   * tokens of a space split hold no space, so a joined slice IS a byte
+   * range, and the two counts are the same integers (SimSpec checks both).
    *
    * Length classes CONCENTRATE on real corpora (most crawled pages cluster
    * in a few ~10-token-wide classes), so an uncapped length-bucket self-join
@@ -186,18 +196,12 @@ object Dedup {
   def ngramJaccardWithStats(df: DataFrame, textCol: String, idCol: String,
                    n: Int = 3, tau: Double = 0.5,
                    maxBucket: Int = 5000): (DataFrame, DataFrame) = {
-    def grams(c: Column): Column = {
-      val toks = split(c, " ")
-      val cnt = greatest(size(toks) - (n - 1), lit(1)) // short text → 1 gram
-      array_distinct(transform(sequence(lit(1), cnt),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-    }
     // one text pass: gram sets + length class materialized eagerly (raw
     // text dropped before the checkpoint), so the bucket histogram and both
-    // self-join sides read the compact gram table instead of re-deriving
-    // the split/transform chain per plan branch
+    // self-join sides read the compact gram table instead of re-cutting the
+    // grams per plan branch
     val prep = df.select(col(idCol).as("id"), lower(col(textCol)).as("txt"))
-      .withColumn("grams", grams(col("txt")))
+      .withColumn("grams", word_ngrams(col("txt"), n)) // short text → 1 gram
       .withColumn("lenb", (size(split(col("txt"), " ")) / 10).cast("int"))
       .select("id", "grams", "lenb")
       .localCheckpoint()
@@ -206,8 +210,7 @@ object Dedup {
     val (lenPairs, stats) = bucketPairs(buckets, "bucket", maxBucket, "grams")
     val pairs = lenPairs
       .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("grams_a"), col("grams_b"))).cast("double") /
-          size(array_union(col("grams_a"), col("grams_b"))).cast("double")).as("jaccard"))
+        sorted_jaccard(col("grams_a"), col("grams_b")).as("jaccard"))
       .distinct()
       .filter(col("jaccard") >= tau)
     (pairs, stats)
@@ -221,6 +224,14 @@ object Dedup {
    * fingerprinted — md5 over the space-joined window, so any engine can
    * recompute the exact fingerprint — and documents sharing ≥1 fingerprint
    * pair up with their shared-window count.
+   *
+   * The fingerprints come from one compiled kernel, `window_md5s`: it
+   * hashes each window's byte range of the lowered text with a reused
+   * `MessageDigest` and writes Spark's lower-hex `md5` format. It is exact
+   * against the composition it replaces — `transform(sequence(..), i ->
+   * md5(array_join(slice(split(t, ' '), i, w), ' ')))`, which Spark runs
+   * in its interpreter: the window's tokens hold no space, so the joined
+   * slice is the same bytes (SimSpec checks it, order included).
    *
    * Scale shape: the exploded (id, 16-byte fp) table is ~corpus-tokens×~20
    * bytes — the canonical linear cost of suffix-style dedup — shuffled ONCE
@@ -243,18 +254,12 @@ object Dedup {
   def windowFingerprintWithStats(df: DataFrame, textCol: String, idCol: String,
                         windowTokens: Int = 15,
                         maxDocsPerWindow: Int = 100000): (DataFrame, DataFrame) = {
-    val w = windowTokens
-    val toks = split(lower(col(textCol)), " ")
-    val nWin = size(toks) - (w - 1)
-    val fpsArr = when(nWin >= 1,
-      array_distinct(transform(sequence(lit(1), nWin),
-        i => md5(array_join(slice(toks, i, lit(w)), " ").cast("binary")))))
-      .otherwise(array().cast("array<string>"))
     // one text pass: the exploded (id, 16-byte fp) table — the canonical
     // linear cost of window-fingerprint dedup — is materialized eagerly so
     // the histogram and both self-join sides read it instead of re-running
     // the md5-per-window scan per plan branch (spills via MEMORY_AND_DISK)
-    val fps = df.select(col(idCol).as("id"), explode(fpsArr).as("fp"))
+    val fps = df.select(col(idCol).as("id"),
+        explode(window_md5s(lower(col(textCol)), windowTokens)).as("fp"))
       .localCheckpoint()
     val (windowPairs, stats) = bucketPairs(fps, "fp", maxDocsPerWindow)
     val pairs = windowPairs.groupBy("id_a", "id_b")

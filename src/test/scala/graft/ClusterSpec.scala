@@ -90,4 +90,24 @@ class ClusterSpec extends AnyFunSuite with PropChecks with TempDirs {
       assert(store.latestIteration() == Some(1))
     }
   }
+
+  test("duplicate edges change nothing: every edge tripled gives the same labels and rounds") {
+    import spark.implicits._
+    withTempDir("graft-cc-dups") { dir =>
+      // a chain (several rounds) plus a triangle and a star
+      val es = (0 until 20).map(i => (i.toLong, i + 1L)) ++
+        Seq((100L, 101L), (101L, 102L), (100L, 102L)) ++ (201L to 220L).map(i => (i, 200L))
+      def labelsAndRounds(edges: Seq[(Long, Long)], name: String) = {
+        val store = new CheckpointStore(spark, s"$dir/$name")
+        val out = ConnectedComponents.run(edges.toDF("src", "dst"), Some(store)).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        (out, store.latestIteration())
+      }
+      val (once, rounds) = labelsAndRounds(es, "once")
+      val (thrice, roundsThrice) = labelsAndRounds(es ++ es.reverse ++ es, "thrice")
+      assert(thrice == once)
+      assert(roundsThrice == rounds)
+      assert(rounds.exists(_ > 1), s"the chain should need more than one round, got $rounds")
+    }
+  }
 }

@@ -22,8 +22,8 @@ class JobCountSpec extends AnyFunSuite with TempDirs {
 
   // measured on this corpus (400 entities) in the TestSpark session; CC
   // converges in one round on it, in the resolve and in the fold
-  private val ResolveOpJobs = 28
-  private val FoldJobs = 91
+  private val ResolveOpJobs = 27
+  private val FoldJobs = 90
 
   private val Mark = "graft.jobcount.mark"
 

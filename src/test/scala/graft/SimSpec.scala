@@ -198,4 +198,102 @@ class SimSpec extends AnyFunSuite with PropChecks {
       assert(r.getInt(1) == x.split(' ').distinct.length)
     }
   }
+
+  // -------------------- compiled dedup kernels ≡ the compositions they replace
+
+  /** The compositions q21 and q44 ran before `word_ngrams` / `window_md5s`
+    * (`transform` is CodegenFallback: interpreted, one slice array per gram). */
+  private def hofGrams(t: org.apache.spark.sql.Column, n: Int) = {
+    import org.apache.spark.sql.functions._
+    val toks = split(t, " ")
+    val cnt = greatest(size(toks) - (n - 1), lit(1))
+    array_distinct(transform(sequence(lit(1), cnt),
+      i => array_join(slice(toks, i, lit(n)), " ")))
+  }
+  private def hofWindows(t: org.apache.spark.sql.Column, w: Int) = {
+    import org.apache.spark.sql.functions._
+    val toks = split(t, " ")
+    val nWin = size(toks) - (w - 1)
+    when(nWin >= 1, array_distinct(transform(sequence(lit(1), nWin),
+      i => md5(array_join(slice(toks, i, lit(w)), " ").cast("binary")))))
+      .otherwise(array().cast("array<string>"))
+  }
+
+  /** `nPages` lowered corpus texts plus the split edge cases, one row each. */
+  private def kernelInputs(nPages: Int) = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val edge = Seq("", " ", "  ", " leading", "trailing ", "double  space  here",
+      "  both  ends  ", "Ünïcödé ÄÖÜ Straße 東京 ΣΊΣΥΦΟΣ Ωmega", "tab\tsep and\nnew\r\nline",
+      "one", "two words", null)
+    val corpus = graft.testgen.WebCorpus.pages(spark, nPages).toDF().select("text").limit(nPages)
+    corpus.unionByName(edge.toDF("text"))
+      .repartition(4) // past the limit's single partition
+      .select(monotonically_increasing_id().as("row"), lower(col("text")).as("t"))
+  }
+
+  /** Strictly ascending in UTF8String byte order (so distinct, too). Scala's
+    * `String` order is UTF-16, which differs from byte order off the BMP. */
+  private def ascendingBytes(xs: Seq[String]): Boolean = {
+    val u = xs.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+    u.zip(u.drop(1)).forall { case (a, b) => a.binaryCompare(b) < 0 }
+  }
+
+  test("word_ngrams and window_md5s ≡ the transform/slice/array_join compositions") {
+    import graft.functions.GraftFunctions._
+    import org.apache.spark.sql.functions.col
+    val in = kernelInputs(300).cache()
+    try {
+      for (n <- Seq(1, 2, 3, 5)) {
+        val rows = in.select(col("t"), word_ngrams(col("t"), n), hofGrams(col("t"), n)).collect()
+        assert(rows.length == 300 + 12)
+        rows.foreach { r =>
+          if (r.isNullAt(0)) {
+            // null text: no grams; the composition gave [null], whose row
+            // never reached a bucket (its length class is null too under
+            // ANSI, Spark 4's default)
+            assert(r.isNullAt(1))
+            assert(r.getSeq[String](2) == Seq(null))
+          } else {
+            val got = r.getSeq[String](1)
+            val want = r.getSeq[String](2)
+            assert(got.length == want.length && got.toSet == want.toSet,
+              s"n=$n, text ${r.getString(0)}")
+            assert(ascendingBytes(got), s"n=$n: not in byte order")
+          }
+        }
+      }
+      for (w <- Seq(1, 3, 15)) {
+        val rows = in.select(col("t"), window_md5s(col("t"), w), hofWindows(col("t"), w)).collect()
+        rows.foreach { r =>
+          // null text: null here, an empty array there — both explode to no rows
+          val got = if (r.isNullAt(1)) Seq.empty[String] else r.getSeq[String](1)
+          assert(got == r.getSeq[String](2), s"w=$w, text ${r.getString(0)}")
+          assert(r.isNullAt(0) == r.isNullAt(1))
+        }
+      }
+    } finally in.unpersist()
+  }
+
+  test("sorted_jaccard ≡ size(array_intersect) / size(array_union), bit for bit") {
+    import graft.functions.GraftFunctions._
+    import org.apache.spark.sql.functions._
+    val g = kernelInputs(120).select(col("row"), word_ngrams(col("t"), 3).as("g")).cache()
+    try {
+      val pairs = g.as("a").crossJoin(g.as("b")).filter(col("a.row") < col("b.row"))
+        .select(sorted_jaccard(col("a.g"), col("b.g")),
+          size(array_intersect(col("a.g"), col("b.g"))).cast("double") /
+            size(array_union(col("a.g"), col("b.g"))).cast("double"))
+        .collect()
+      assert(pairs.length == 132 * 131 / 2)
+      assert(pairs.exists(r => !r.isNullAt(0) && r.getDouble(0) > 0.0))
+      pairs.foreach { r =>
+        assert(r.isNullAt(0) == r.isNullAt(1))
+        if (!r.isNullAt(0))
+          assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
+            java.lang.Double.doubleToLongBits(r.getDouble(1)))
+      }
+    } finally g.unpersist()
+  }
 }
