@@ -302,7 +302,8 @@ object Blocking {
     // plus the batch's rows, minus still-hot drops) and a tiny TOMBSTONE
     // table (block keys whose prior rows are all superseded: raw blocks
     // that crossed the re-key class, plus newly-hot keys). The caller
-    // appends both paths to its chain manifests; readers assemble
+    // appends both paths to the keys chain of its state manifest; readers
+    // assemble (Stage.read)
     //   keys = union(chain files) ANTI-JOIN broadcast(union(tombstones)).
     // Equivalence with the full rewrite: prior rows of previously-still-hot
     // keys are already absent from the chain (dropped by the fold that saw

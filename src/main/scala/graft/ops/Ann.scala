@@ -180,13 +180,16 @@ object Ann {
     val centroids = ivfCentroids(items, nlist, iters, idCol, vecCol)
     val posted = items.select(col(idCol).as("item_id"), col(vecCol).as("iv"))
       .withColumn("cid", nearestCentroid(col("iv"), centroids))
-    // per-query nprobe nearest centroid ids (sorted by cosine desc, idx asc)
+    // per-query nprobe nearest centroid ids (sorted by cosine desc, idx asc):
+    // the last nprobe of an ascending (cos, -idx) sort, projected to idx.
+    // sort_array, not array_sort: array_sort plans a comparator lambda,
+    // which Spark evaluates in its interpreter
     val probeList = {
       val scored = centroids.zipWithIndex.map { case (c, i) =>
-        struct(cosine(col("qv"), array(c.map(lit): _*)).as("cos"), lit(-i).as("negidx"))
+        struct(cosine(col("qv"), array(c.map(lit): _*)).as("cos"), lit(-i).as("negidx"),
+          lit(i).as("idx"))
       }
-      slice(transform(array_sort(array(scored: _*)),  // ascending
-        s => (-s.getField("negidx")).cast("int")), -nprobe, nprobe) // top nprobe
+      slice(sort_array(array(scored: _*)), -nprobe, nprobe).getField("idx")
     }
     val q = broadcast(queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("cid", explode(probeList)))

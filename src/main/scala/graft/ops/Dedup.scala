@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -191,6 +191,11 @@ object Dedup {
                    maxBucket: Int = 5000): DataFrame =
     ngramJaccardWithStats(df, textCol, idCol, n, tau, maxBucket)._1
 
+  /** The token count of `split(txt, ' ')` (empty tokens kept) without
+    * building the token array: one more than the number of spaces. */
+  private[graft] def spaceTokens(txt: Column): Column =
+    length(txt) - length(replace(txt, lit(" "), lit(""))) + 1
+
   /** [[ngramJaccard]] plus a one-row stats frame (n_buckets / hot_buckets /
     * dropped_rows) metering the hot-length-class drops. */
   def ngramJaccardWithStats(df: DataFrame, textCol: String, idCol: String,
@@ -202,7 +207,7 @@ object Dedup {
     // grams per plan branch
     val prep = df.select(col(idCol).as("id"), lower(col(textCol)).as("txt"))
       .withColumn("grams", word_ngrams(col("txt"), n)) // short text → 1 gram
-      .withColumn("lenb", (size(split(col("txt"), " ")) / 10).cast("int"))
+      .withColumn("lenb", (spaceTokens(col("txt")) / 10).cast("int"))
       .select("id", "grams", "lenb")
       .localCheckpoint()
     val buckets = prep.select(col("id"), col("grams"),

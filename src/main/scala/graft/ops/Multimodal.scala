@@ -34,9 +34,9 @@ object Multimodal {
    * bit-stable at any parallelism.
    */
   def featureStub(payload: Column, dim: Int): Column =
-    transform(sequence(lit(0), lit(dim - 1)),
-      i => (pmod(xxhash64(payload, i), lit(2000L)).cast("double") / 1000.0 - 1.0)
-        .cast("float"))
+    array((0 until dim).map(i =>
+      (pmod(xxhash64(payload, lit(i)), lit(2000L)).cast("double") / 1000.0 - 1.0)
+        .cast("float")): _*)
 
   /** Resize: metadata-level transform (real impl would re-encode payload). */
   def resizeMeta(meta: Column, maxSide: Int): Column = {

@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.blocking.Blocking
 import graft.cluster.{CheckpointStore, ConnectedComponents}
@@ -81,17 +80,15 @@ object EntityResolution {
 
   /** The semantic parameters whose equality the incremental exactness proof
     * depends on (blocking keys, SN windows, funnel weights/threshold, token
-    * truncation). Persisted per state dir; resolveIncremental requires the
-    * prior run used the SAME signature — a changed snWindow/blocking config
-    * between runs would silently break the "old×old SN pairs only shrink"
-    * subset argument. Dirs are excluded (they don't affect results). */
+    * truncation, id width). Persisted per state dir; resolveIncremental
+    * requires the prior run used the SAME signature — a changed
+    * snWindow/blocking config between runs would silently break the
+    * "old×old SN pairs only shrink" subset argument. Dirs are excluded
+    * (they don't affect results). */
   private def configSig(cfg: Config): String =
     s"blocking=${cfg.blocking};tau=${cfg.tau};wJW=${cfg.wJaroWinkler};" +
-      s"wTJ=${cfg.wTokenJaccard};wLev=${cfg.wLevenshtein};tokenBits=${cfg.tokenBits}" +
-      // idBits entered the signature with its 64 default; older state dirs
-      // (no suffix) therefore mean 64 — only a non-default width is stamped,
-      // so existing incremental chains keep folding without a re-resolve
-      (if (cfg.idBits != 64) s";idBits=${cfg.idBits}" else "")
+      s"wTJ=${cfg.wTokenJaccard};wLev=${cfg.wLevenshtein};tokenBits=${cfg.tokenBits};" +
+      s"idBits=${cfg.idBits}"
 
   /** The `auditIds` check: one distinct-count pass that aborts on an id
     * collision rather than silently merging two records. */
@@ -277,18 +274,17 @@ object EntityResolution {
   def resolve(pages: DataFrame, cfg: Config = Config(),
               auditIds: Boolean = false): Result = {
     val work = cfg.workDir.getOrElse(freshWorkDir())
-    // a reused work dir may hold a previous run's state: its manifests go
-    // first and come back only once components.parquet is written, so a
+    // a reused work dir may hold a previous run's state: its manifest goes
+    // first and comes back only once components.parquet is written, so a
     // resolve that throws leaves a dir every fold refuses as prior state
-    Seq("records.list", "config.sig", "tombstones.list", "keys.list")
-      .foreach(f => java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(work, f)))
+    Stage.uncommit(work)
 
     // Stage 1 materialization: normalized records with precomputed per-record
     // features — one columnar write, scanned (with column pruning) by every
     // downstream consumer. On a real deployment this is the pipeline's
-    // `normalized_records` Iceberg table; `records.list` is its manifest
-    // (one absolute parquet path per line) so incremental batches can APPEND
-    // a new path instead of rewriting the table.
+    // `normalized_records` Iceberg table; its state-manifest chain lists the
+    // file, so incremental batches can APPEND a new file instead of
+    // rewriting the table.
     val recPath = s"$work/records.parquet"
     val records = Stage.write(normalizeWithSig(pages, cfg).select(RecordColumns: _*), recPath)
 
@@ -333,11 +329,9 @@ object EntityResolution {
       edges.select(col("main_id").as("src"), col("sub_id").as("dst")), store),
       s"$work/components.parquet")
 
-    // manifests last, as a fold writes them (keys.list last of all; a full
-    // (re)build is a one-file keys chain with no tombstones)
-    writeManifest(work, "records.list", Seq(recPath))
-    writeConfigSig(work, cfg)
-    writeKeysChain(work, Seq(s"$work/keys.parquet"), Seq.empty)
+    // the manifest last, as a fold writes it (a full (re)build is a
+    // one-file keys chain with no tombstones)
+    commit(work, cfg, Stage.Chain(Seq(recPath)), Stage.Chain(Seq(s"$work/keys.parquet")))
 
     val integrated = buildIntegrated(records, edges, components)
     val urlDim = records.select(col("id"), col("url"))
@@ -354,10 +348,13 @@ object EntityResolution {
    * there).
    *
    * `priorWorkDir` is the `workDir` of the previous resolve /
-   * resolveIncremental run, holding its three stage tables
-   * (records/edges/components — Iceberg tables on a real deployment), its
-   * block count tables (raw_counts, sizes2) and its manifests (records.list,
-   * keys.list + tombstones.list, config.sig). A dir missing any of them is
+   * resolveIncremental run. The fold reads it through its `state.manifest`
+   * ([[Stage.readState]]): the config signature, and one file chain per
+   * stage table — records (an append chain over every earlier batch's
+   * file), keys (a delta + tombstone chain, compacted every
+   * `keysChainCompactLen` folds), and the one-file raw_counts, sizes2,
+   * edges and components tables (Iceberg tables on a real deployment). A
+   * dir without the manifest, or with a listed table missing on disk, is
    * refused: run a full re-resolve.
    *
    * What is recomputed vs reused, and why the result is EXACTLY equal to a
@@ -383,38 +380,27 @@ object EntityResolution {
     val spark = newPages.sparkSession
     val work = cfg.workDir.getOrElse(freshWorkDir())
     require(work != priorWorkDir, "incremental output workDir must differ from prior state dir")
-    // every resolve and fold writes these; a dir lacking one was written by
-    // an older build or by a fold that failed before its manifests landed
-    val priorMissing = Seq("config.sig", "records.list", "keys.list",
-      "raw_counts.parquet/_SUCCESS", "sizes2.parquet/_SUCCESS")
-      .filterNot(f => new java.io.File(priorWorkDir, f).exists())
-    require(priorMissing.isEmpty,
-      s"prior state dir $priorWorkDir lacks ${priorMissing.mkString(", ")} " +
-        "(not written by a current resolve or fold); run a full re-resolve instead")
-
+    val prior = Stage.readState(priorWorkDir)
     // the incremental ≡ full-re-resolve proof assumes the prior run's
     // semantic config equals this one's (SN drift / key-diff arguments are
     // config-relative) — refuse a mismatched fold instead of silently
     // diverging from a full re-resolve
-    val priorSig = readConfigSig(priorWorkDir)
-    require(priorSig == configSig(cfg),
-      s"config changed since prior state was written:\n  prior: $priorSig" +
+    require(prior.configSig == configSig(cfg),
+      s"config changed since prior state was written:\n  prior: ${prior.configSig}" +
         s"\n  now:   ${configSig(cfg)}\nincremental ≡ full only holds under an " +
         "identical config; run a full re-resolve instead")
+    Stage.uncommit(work) // a reused work dir's state goes first, as in resolve
 
-    val oldPaths = readManifest(priorWorkDir, "records.list")
-    requireChainIntact("records", oldPaths)
-
-    // normalize ONLY the new batch, then APPEND its parquet path to the
-    // records manifest — the old record files are never rewritten (Iceberg
-    // append semantics; the state dirs form a chain of immutable files)
+    // normalize ONLY the new batch, then APPEND its file to the records
+    // chain — the old record files are never rewritten (Iceberg append
+    // semantics; the state dirs form a chain of immutable files)
     val newRecPath = s"$work/records_new.parquet"
     val newRecords = Stage.write(normalizeWithSig(newPages, cfg).select(RecordColumns: _*),
       newRecPath)
     // Every prior table is read with the schema of the code that wrote it,
     // taken from a plan by analysis alone: a read that infers its schema
     // runs a footer-reading Spark job, one per table (see Stage.write)
-    val oldRecords = spark.read.schema(newRecords.schema).parquet(oldPaths: _*)
+    val oldRecords = Stage.read(spark, newRecords.schema, prior.chains("records"))
     // Batch-vs-corpus asymmetry is the fold's whole point: every frame
     // derived from the batch (new ids, seed ids, touched buckets, batch
     // keys, batch-involving pairs) is orders of magnitude smaller than the
@@ -443,7 +429,8 @@ object EntityResolution {
       s"$reCrawled record(s) in the batch already exist in prior state " +
         "(re-crawl/update); dedupe the batch or run a compacting re-resolve " +
         "— blind append would duplicate RecordId rows")
-    val records = spark.read.schema(newRecords.schema).parquet((oldPaths :+ newRecPath): _*)
+    val recordsChain = Stage.Chain(prior.chains("records").files :+ newRecPath)
+    val records = Stage.read(spark, newRecords.schema, recordsChain)
     val newIds = newRecords.select(col("id"))
     if (auditIds) requireIdsUnique(records)
 
@@ -475,24 +462,24 @@ object EntityResolution {
     //      without the batch: the difference (minus pairs still generated
     //      by shared block keys) is the exact stale set.
 
-    // prior keys = the manifest chain's assembly (a base resolve dir is a
-    // one-file chain), validated like the records manifest
-    val (priorKeyPaths, priorTombPaths) = readKeysChain(priorWorkDir)
-    requireChainIntact("keys", priorKeyPaths ++ priorTombPaths)
+    // prior keys = the keys chain's assembly (a base resolve dir is a
+    // one-file chain); a tombstone file holds the `block_key` column alone
+    val priorKeys = prior.chains("keys")
     val (keysSchema, countsSchema) = Blocking.tableSchemas(newRecords, cfg.blocking)
     val (keysAll, blockStats, keyChangedIds) = Blocking.mergeBlockKeys(
-      assembleKeys(spark, keysSchema, priorKeyPaths, priorTombPaths),
-      spark.read.schema(countsSchema).parquet(s"$priorWorkDir/raw_counts.parquet"),
-      spark.read.schema(countsSchema).parquet(s"$priorWorkDir/sizes2.parquet"),
+      Stage.read(spark, keysSchema, priorKeys),
+      Stage.read(spark, countsSchema, prior.chains("raw_counts")),
+      Stage.read(spark, countsSchema, prior.chains("sizes2")),
       newRecords, records, cfg.blocking, work)
-    // chain manifests: this fold appended keys_delta + keys_tombstones;
-    // compact back to one file once the chain is long (amortized
-    // O(batch) — the rewrite runs once per compactLen folds)
-    val compact = priorKeyPaths.length + 1 >= keysChainCompactLen
-    val (keyPaths, tombPaths) =
-      if (compact) (Seq(s"$work/keys.parquet"), Seq.empty[String])
-      else (priorKeyPaths :+ s"$work/keys_delta.parquet",
-        priorTombPaths :+ s"$work/keys_tombstones.parquet")
+    // this fold appended keys_delta + keys_tombstones to the chain; compact
+    // back to one file once the chain is long (amortized O(batch) — the
+    // rewrite runs once per compactLen folds, and the read-side broadcast
+    // anti-join stays bounded)
+    val compact = priorKeys.files.length + 1 >= keysChainCompactLen
+    val keysChain =
+      if (compact) Stage.Chain(Seq(s"$work/keys.parquet"))
+      else Stage.Chain(priorKeys.files :+ s"$work/keys_delta.parquet",
+        priorKeys.tombstones :+ s"$work/keys_tombstones.parquet", Seq("block_key"))
     // Uncompacted, the assembled chain view feeds ~5 consumers (keysEff,
     // both candidate-join sides, both sharedKey sides) lazily: every
     // consumer STREAMS the keys side (the batch-bounded side broadcasts),
@@ -588,10 +575,10 @@ object EntityResolution {
     val newEdges = scored.filter(col("score") >= cfg.tau)
       .select("main_id", "sub_id", "score")
       .localCheckpoint(true)
-    val oldEdges = spark.read.schema(newEdges.schema).parquet(s"$priorWorkDir/edges.parquet")
-    val oldComponents = spark.read.schema(ConnectedComponents.labels(
-      newEdges.select(col("main_id").as("src"), col("sub_id").as("dst"))).schema)
-      .parquet(s"$priorWorkDir/components.parquet")
+    val oldEdges = Stage.read(spark, newEdges.schema, prior.chains("edges"))
+    val oldComponents = Stage.read(spark, ConnectedComponents.labels(
+      newEdges.select(col("main_id").as("src"), col("sub_id").as("dst"))).schema,
+      prior.chains("components"))
     val droppedStaleEdges = oldEdges.select("main_id", "sub_id", "score")
       .join(bcB(staleSnPairs), Seq("main_id", "sub_id"), "left_semi")
     val keptEdges = oldEdges.select("main_id", "sub_id", "score")
@@ -644,12 +631,9 @@ object EntityResolution {
     val components = Stage.write(ConnectedComponents.run(ccInput)
       .unionByName(untouched.select("node", "component")), s"$work/components.parquet")
 
-    // manifests last (keys.list last of all): a fold that throws anywhere
-    // above leaves none in `work`, so that dir is refused as prior state
-    // instead of misread
-    writeManifest(work, "records.list", oldPaths :+ newRecPath)
-    writeConfigSig(work, cfg)
-    writeKeysChain(work, keyPaths, tombPaths)
+    // the manifest last: a fold that throws anywhere above leaves none in
+    // `work`, so that dir is refused as prior state instead of misread
+    commit(work, cfg, recordsChain, keysChain)
 
     val integrated = buildIntegrated(records, edges, components)
     val urlDim = records.select(col("id"), col("url"))
@@ -657,92 +641,20 @@ object EntityResolution {
       attachUrls(pairs, urlDim), keys, blockStats)
   }
 
-  /** Chain manifests must survive a CWD change: a relative workDir written
-    * verbatim would make every later fold CWD-dependent (the earlier dirs
-    * are live state until compaction), so paths are absolutized on write. */
-  private def absolutize(p: String): String =
-    java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-
-  private def writeConfigSig(work: String, cfg: Config): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(work, "config.sig"), configSig(cfg))
-
-  private def readConfigSig(work: String): String =
-    java.nio.file.Files.readString(java.nio.file.Paths.get(work, "config.sig"))
-
-  /** A path manifest: one absolute parquet path per line. `records.list`:
-    * resolve() writes a single entry; each incremental batch appends its
-    * new-records path, so prior record files are immutable (Iceberg append
-    * semantics — the chain of state dirs must outlive the table).
-    * `keys.list` / `tombstones.list`: see [[writeKeysChain]]. */
-  private def writeManifest(work: String, name: String, paths: Seq[String]): Unit =
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(work, name),
-      paths.map(absolutize).mkString("\n"))
-
-  private def readManifest(work: String, name: String): Seq[String] =
-    java.nio.file.Files.readString(java.nio.file.Paths.get(work, name))
-      .split("\n").toSeq.filter(_.nonEmpty)
-
-  /** A manifest chains across all prior state dirs (immutable files are
-    * never copied forward): fail with a clear chain-broken error instead of
-    * a deep parquet path-not-found if an earlier dir was deleted or
-    * partially vacuumed (dir kept, part files gone — hence BOTH checks). */
-  private def requireChainIntact(manifest: String, paths: Seq[String]): Unit = {
-    val missing = paths.filterNot(p =>
-      new java.io.File(p).isDirectory && new java.io.File(p, "_SUCCESS").exists())
-    require(missing.isEmpty,
-      s"$manifest manifest chain broken — prior state files missing: " +
-        s"${missing.mkString(", ")} (earlier incremental state dirs must " +
-        "outlive the table; copy them forward before vacuuming)")
-  }
-
-  /** Keys-table manifest chain: `keys.list` holds the delta file paths
-    * whose union, minus the block keys in the `tombstones.list` files,
-    * equals the current keys table ([[Blocking.mergeBlockKeys]] chain
-    * note). A base resolve dir holds a one-file chain with no tombstones.
-    * Chains are compacted back to a single file once they grow past
-    * [[keysChainCompactLen]] files — amortized O(batch), and the read-side
-    * broadcast anti-join stays bounded. */
-  private def writeKeysChain(work: String, keyPaths: Seq[String],
-                             tombPaths: Seq[String]): Unit = {
-    // tombstones FIRST: keys.list is the manifest's existence marker on the
-    // read side, so a crash between the two writes must leave the chain
-    // UNREADABLE (loud chain-broken error next fold), never readable with
-    // the tombstones silently missing — that would resurrect every
-    // tombstoned (crossed/newly-hot) key row and diverge from a full
-    // re-resolve without any error.
-    writeManifest(work, "tombstones.list", tombPaths)
-    writeManifest(work, "keys.list", keyPaths)
-  }
-
-  private def readKeysChain(work: String): (Seq[String], Seq[String]) = {
-    // see writeKeysChain: a keys.list without its tombstones.list is a
-    // torn manifest, not an empty tombstone set
-    if (!new java.io.File(work, "tombstones.list").exists())
-      throw new IllegalStateException(
-        s"keys manifest torn in $work: keys.list exists without " +
-          "tombstones.list (interrupted write?) — restore the state dir " +
-          "or run a full re-resolve")
-    (readManifest(work, "keys.list"), readManifest(work, "tombstones.list"))
-  }
+  /** Commits `work` as the state the next fold reads: the records and
+    * keys chains given, and the one-file count, edges and components
+    * tables this run wrote under `work`. */
+  private def commit(work: String, cfg: Config, records: Stage.Chain,
+                     keys: Stage.Chain): Unit =
+    Stage.commit(work, Stage.State(configSig(cfg),
+      Map("records" -> records, "keys" -> keys) ++
+        Seq("raw_counts", "sizes2", "edges", "components")
+          .map(t => t -> Stage.Chain(Seq(s"$work/$t.parquet")))))
 
   /** Chain files before a compacting rewrite (test override via the
     * `graft.keys.compact.len` system property). */
   private def keysChainCompactLen: Int =
     sys.props.get("graft.keys.compact.len").map(_.toInt).getOrElse(8)
-
-  /** union(chain) minus tombstoned block keys — the current keys table,
-    * read with the keys table's schema; a tombstone file holds its
-    * `block_key` column alone. */
-  private def assembleKeys(spark: SparkSession, keysSchema: StructType,
-                           keyPaths: Seq[String], tombPaths: Seq[String]): DataFrame = {
-    val base = spark.read.schema(keysSchema).parquet(keyPaths: _*)
-    if (tombPaths.isEmpty) base
-    else base.join(
-      broadcast(spark.read.schema(StructType(Seq(keysSchema("block_key"))))
-        .parquet(tombPaths: _*).distinct()),
-      Seq("block_key"), "left_anti")
-  }
 
   /** Map (main_id, sub_id [, score]) back to url space for output/eval. */
   private def attachUrls(pairsById: DataFrame, urlDim: DataFrame): DataFrame = {

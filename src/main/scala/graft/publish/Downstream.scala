@@ -166,11 +166,7 @@ object Downstream {
     val next = 1 + currentVersion(tableDir).getOrElse(0)
     val snap = s"snapshots/v$next"
     write(s"$tableDir/$snap")
-    val tmp = base.resolve(s".manifest-tmp-$next")
-    Files.writeString(tmp, snap)
-    Files.move(tmp, base.resolve("latest.manifest"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    graft.pipeline.Stage.replaceFile(base.resolve("latest.manifest"), snap)
     // prune, keeping the newest `retain` snapshots (in-flight readers may
     // hold recent ones; older history is vacuumed like Iceberg's
     // expire_snapshots)

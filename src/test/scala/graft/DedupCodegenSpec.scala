@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Ann, Dedup}
+import graft.ops.{Ann, Dedup, Multimodal}
 import graft.testgen.WebCorpus
 
 /**
@@ -97,6 +97,8 @@ class DedupCodegenSpec extends AnyFunSuite {
       ("ngramJaccard", () => Dedup.ngramJaccard(docs, "text", "doc")),
       ("windowFingerprint", () => Dedup.windowFingerprint(docs, "text", "doc")),
       ("lshTopK", () => Ann.lshTopK(vecs, queries, k = 5)),
+      ("ivfTopK", () => Ann.ivfTopK(vecs, queries, k = 5, nlist = 4, nprobe = 2, iters = 1)),
+      ("featureStub", () => docs.select(Multimodal.featureStub(col("text").cast("binary"), 8))),
       ("embeddingCosine", () => Dedup.embeddingCosine(vecs, "embedding", "vec_id")))
     val wrong = ops.flatMap { case (name, op) =>
       val (n, found) = fallbacksOf(op().collect())

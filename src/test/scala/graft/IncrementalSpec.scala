@@ -144,7 +144,7 @@ class IncrementalSpec extends AnyFunSuite with TempDirs {
       val old = all.exceptAll(batch1.unionAll(batch2))
       assert(old.count() == 60 && batch1.count() == 10 && batch2.count() == 10)
 
-      val Seq(p1, p2, p3, p4, p5) = (1 to 5).map(i => s"$root/p$i")
+      val Seq(p1, p2, p3, p4) = (1 to 4).map(i => s"$root/p$i")
       EntityResolution.resolve(old,
         EntityResolution.Config(workDir = Some(p1))).integrated.count()
       val inc1 = EntityResolution.resolveIncremental(batch1, p1,
@@ -162,9 +162,9 @@ class IncrementalSpec extends AnyFunSuite with TempDirs {
       val tombs = spark.read.parquet(s"$p2/keys_tombstones.parquet")
       assert(tombs.count() > 0, "re-key crossing wrote no tombstones")
 
-      // fold AGAIN over p2: assembleKeys now anti-joins a real (non-empty)
-      // tombstone set read back from the chain — the read-path equivalent of
-      // the in-memory keysAll frame BlockingSpec gates
+      // fold AGAIN over p2: the keys chain's read now anti-joins a real
+      // (non-empty) tombstone set read back from the chain — the read-path
+      // equivalent of the in-memory keysAll frame BlockingSpec gates
       val inc2 = EntityResolution.resolveIncremental(batch2, p2,
         EntityResolution.Config(workDir = Some(p3)))
       val full = EntityResolution.resolve(all,
@@ -175,44 +175,36 @@ class IncrementalSpec extends AnyFunSuite with TempDirs {
       val b = full.integrated.select(cols.map(col): _*)
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         "fold over a chain with live tombstones diverged from full re-resolve")
-
-      // torn-manifest guard: a keys.list without its tombstones.list (crash
-      // between the ordered writes) must fail loudly, never read as "no
-      // tombstones" — that would silently resurrect every tombstoned key row
-      Files.delete(java.nio.file.Paths.get(p3, "tombstones.list"))
-      val ex = intercept[IllegalStateException] {
-        EntityResolution.resolveIncremental(batch2.limit(0), p3,
-          EntityResolution.Config(workDir = Some(p5))).integrated.count()
-      }
-      assert(ex.getMessage.contains("torn"))
     }
   }
 
   test("prior state missing a file every current resolve writes is refused") {
-    // raw_counts, config.sig, records.list and keys.list are written by
-    // every resolve and fold; a dir without one is refused up front, naming
-    // the file, instead of being read under some older layout
+    // every resolve and fold writes state.manifest and the tables it lists;
+    // a dir without one is refused up front, naming the file, before any
+    // Spark read of the prior tables
     val all = graft.testgen.WebCorpus.pages(spark, 200).toDF()
     val isNew = pmod(xxhash64(col("url")), lit(5)) === 4
     withTempDir("graft-req") { root =>
       val d1 = s"$root/d1"
       EntityResolution.resolve(all.filter(!isNew),
         EntityResolution.Config(workDir = Some(d1))).integrated.count()
-      for (f <- Seq("raw_counts.parquet", "config.sig", "records.list", "keys.list")) {
-        val prior = new java.io.File(s"$root/prior-$f")
-        org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(d1), prior)
-        org.apache.commons.io.FileUtils.forceDelete(new java.io.File(prior, f))
-        val ex = intercept[IllegalArgumentException] {
-          EntityResolution.resolveIncremental(all.filter(isNew), prior.toString,
-            EntityResolution.Config(workDir = Some(s"$prior-out")))
-        }
-        assert(ex.getMessage.contains(s"lacks $f") &&
+      // the manifest lists absolute paths into d1, so each file is moved
+      // aside and back rather than deleted in a copy
+      for (f <- Seq("state.manifest", "records.parquet", "keys.parquet", "raw_counts.parquet",
+          "sizes2.parquet", "edges.parquet", "components.parquet")) {
+        val (at, aside) = (java.nio.file.Paths.get(d1, f), java.nio.file.Paths.get(root, f))
+        Files.move(at, aside)
+        val ex = try intercept[IllegalArgumentException] {
+          EntityResolution.resolveIncremental(all.filter(isNew), d1,
+            EntityResolution.Config(workDir = Some(s"$root/out")))
+        } finally Files.move(aside, at)
+        assert(ex.getMessage.contains("lacks ") && ex.getMessage.contains(f) &&
           ex.getMessage.contains("run a full re-resolve"), s"$f: ${ex.getMessage}")
       }
     }
   }
 
-  test("a fold that throws leaves no writer thread, prior state as it was, no manifest") {
+  test("a fold that throws leaves prior state as it was and no manifest") {
     val all = graft.testgen.WebCorpus.pages(spark, 300).toDF()
     val isNew = pmod(xxhash64(col("url")), lit(5)) === 4
     withTempDir("graft-fail") { root =>
@@ -231,6 +223,10 @@ class IncrementalSpec extends AnyFunSuite with TempDirs {
         .listFiles(new java.io.File(dir), null, true).asScala
         .map(f => (f.getPath, f.length, f.lastModified)).toSet
       val before = snapshot(d1)
+      // d2 as a reused work dir: the manifest of the state it held goes
+      // before the fold writes any table there
+      Files.createDirectories(java.nio.file.Paths.get(d2))
+      Files.writeString(java.nio.file.Paths.get(d2, "state.manifest"), "config\tstale")
 
       val ex = intercept[Exception] {
         EntityResolution.resolveIncremental(all.filter(isNew), d1,
@@ -239,13 +235,9 @@ class IncrementalSpec extends AnyFunSuite with TempDirs {
       val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
       assert(chain.exists(e => String.valueOf(e.getMessage).contains("sizes2")),
         s"fold failed somewhere other than the sizes2 stage: $ex")
-      assert(!Thread.getAllStackTraces.keySet.asScala
-        .exists(t => t.getName == "graft-stage-write" && t.isAlive),
-        "a stage writer outlived the failed fold")
       assert(snapshot(d1) == before, "the failed fold changed prior state")
-      val manifests = Seq("records.list", "config.sig", "keys.list", "tombstones.list")
-        .filter(f => new java.io.File(d2, f).exists())
-      assert(manifests.isEmpty, s"the failed fold wrote manifests: $manifests")
+      assert(!new java.io.File(d2, "state.manifest").exists(),
+        "the failed fold left a manifest in its work dir")
     }
   }
 
@@ -267,9 +259,7 @@ class IncrementalSpec extends AnyFunSuite with TempDirs {
           EntityResolution.Config(workDir = Some(d), checkpointDir = Some(notADir.toString)))
       }
       assert(edgeFiles != priorEdges, "the failed resolve did not get as far as its edges")
-      val manifests = Seq("records.list", "config.sig", "keys.list", "tombstones.list")
-        .filter(f => new java.io.File(d, f).exists())
-      assert(manifests.isEmpty, s"the failed resolve left manifests: $manifests")
+      assert(!new java.io.File(d, "state.manifest").exists(), "the failed resolve left its manifest")
       val ex = intercept[IllegalArgumentException] {
         EntityResolution.resolveIncremental(all.filter(!isNew), d,
           EntityResolution.Config(workDir = Some(d2)))

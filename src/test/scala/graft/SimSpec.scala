@@ -242,9 +242,17 @@ class SimSpec extends AnyFunSuite with PropChecks {
 
   test("word_ngrams and window_md5s ≡ the transform/slice/array_join compositions") {
     import graft.functions.GraftFunctions._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, size, split}
     val in = kernelInputs(300).cache()
     try {
+      // q21's length class counts tokens by their spaces, not by a split
+      val counts = in.select(col("t"), graft.ops.Dedup.spaceTokens(col("t")),
+        size(split(col("t"), " "))).collect()
+      assert(counts.length == 300 + 12)
+      counts.foreach { r =>
+        assert(r.isNullAt(1) == r.isNullAt(2) && (r.isNullAt(1) || r.getInt(1) == r.getInt(2)),
+          s"token count of ${r.getString(0)}: ${r.get(1)} vs ${r.get(2)}")
+      }
       for (n <- Seq(1, 2, 3, 5)) {
         val rows = in.select(col("t"), word_ngrams(col("t"), n), hofGrams(col("t"), n)).collect()
         assert(rows.length == 300 + 12)
